@@ -1,6 +1,6 @@
 package graft.crawl
 
-import graft.frontier.{Scheduler, SeenSet}
+import graft.frontier.{Scheduler, SeenSet, ShardFiles}
 import graft.functions.GraftFunctions
 import graft.table.SnapshotTable
 
@@ -326,7 +326,7 @@ object CrawlEpoch {
     // false positives die in the exact joins; false negatives do not exist.
     lazy val scheduleBloom: Option[(String, Long)] = schedSnap.map { sid =>
       val schedRoot = s"$stateRoot/scheduled"
-      if (!SeenSet.shardFilesPresent(schedRoot, sid))
+      if (!ShardFiles.allPresent(ShardFiles.Bloom, schedRoot, sid))
         SeenSet.buildWriteShards(schedRoot, sid,
           scheduled.select(col("url_hash")),
           math.max(1000L, schedRows / SeenSet.ShardCount),
@@ -473,7 +473,7 @@ object CrawlEpoch {
           else {
             val imgRoot = s"$stateRoot/imgbloom"
             val sid = schedSnap.get
-            if (!SeenSet.shardFilesPresent(imgRoot, sid))
+            if (!ShardFiles.allPresent(ShardFiles.Bloom, imgRoot, sid))
               SeenSet.buildWriteShards(imgRoot, sid,
                 fetchedIds.select(xxhash64(col("image_id")).as("url_hash")),
                 math.max(1000L, schedRows / SeenSet.ShardCount))
@@ -666,10 +666,9 @@ object CrawlEpoch {
       val stream = java.nio.file.Files.list(imgSnap)
       val stale =
         try stream.iterator().asScala.toSeq finally stream.close()
-      stale.filter { p =>
-        "bloom-v([0-9]+)-".r.findFirstMatchIn(p.getFileName.toString)
-          .exists(m => schedT.manifest(m.group(1).toLong).isEmpty)
-      }.foreach(p => java.nio.file.Files.deleteIfExists(p))
+      stale.filter(p => ShardFiles.snapshotOf(p.getFileName.toString)
+        .exists(id => schedT.manifest(id).isEmpty))
+        .foreach(p => java.nio.file.Files.deleteIfExists(p))
     }
     n
   }

@@ -1,7 +1,6 @@
 package graft.frontier
 
 import java.io.ByteArrayInputStream
-import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -127,27 +126,19 @@ object BloomProbe {
 
   private val cache = new TwoGenCache[BloomFilter](bf => bf.bitSize() / 8)
 
-  /** Opt-in instrumentation for the shard-routing A/B ([[graft.ProbeShardRoute]]
-    * and ShardRouteSpec): when on, every probe records (taskPartitionId,
-    * shard) — the per-TASK shard working set, the quantity shard-routed
-    * probing bounds at 1. Off (the default) costs one static volatile read
-    * per row. Loads/loadedBytes count actual shard-file deserializations —
-    * with a byte-capped cache they are the re-read cost routing eliminates. */
+  /** Opt-in instrumentation for ShardRouteSpec: when on, every probe
+    * records (taskPartitionId, shard) — the per-TASK shard working set, the
+    * quantity shard-routed probing bounds at 1. Off (the default) costs one
+    * static volatile read per row. */
   @volatile private[graft] var trackTouches: Boolean = false
   private[graft] val touches =
     java.util.concurrent.ConcurrentHashMap.newKeySet[(Int, Int)]()
-  private[graft] val loads = new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] val loadedBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] def resetTracking(): Unit = {
-    touches.clear(); loads.set(0L); loadedBytes.set(0L)
-  }
+  private[graft] def resetTracking(): Unit = touches.clear()
 
   private[graft] def filterFor(root: String, id: Long, shard: Int): BloomFilter =
     cache.get(s"$root#$shard", id) {
-      val bytes = Files.readAllBytes(
-        Paths.get(root, "snapshots", s"bloom-v$id-s$shard.bin"))
-      if (trackTouches) { loads.incrementAndGet(); loadedBytes.addAndGet(bytes.length) }
-      BloomFilter.readFrom(new ByteArrayInputStream(bytes))
+      BloomFilter.readFrom(new ByteArrayInputStream(
+        ShardFiles.read(ShardFiles.Bloom, root, id, shard)))
     }
 
   // test seams for the byte-cap behavior (production budget comes from the
@@ -283,8 +274,7 @@ object CuckooProbe {
 
   private[graft] def filterFor(root: String, id: Long, shard: Int): CuckooFilter =
     cache.get(s"$root#$shard", id) {
-      CuckooFilter.deserialize(Files.readAllBytes(
-        SeenSet.cuckooShardPath(root, id, shard)))
+      CuckooFilter.deserialize(ShardFiles.read(ShardFiles.Cuckoo, root, id, shard))
     }
 
   /** Static probe entry point for generated code (`shardCount` resolved at

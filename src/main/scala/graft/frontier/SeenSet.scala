@@ -62,8 +62,8 @@ import org.apache.spark.util.sketch.BloomFilter
   *        OR-merge): recorded in `bloom-meta.json`, recorded value wins on
   *        an existing root. The residency/confirm-work dial at scale —
   *        3% cuts resident filter bytes ~1.6× vs 1% at the cost of ~3× the
-  *        exact-join confirms on unseen probes (measured: ProbeFppSweep,
-  *        BASELINE.md round 5).
+  *        exact-join confirms on unseen probes (measured: BASELINE.md
+  *        round 5, Bloom fpp sweep).
   */
 final class SeenSet(root: String, spark: SparkSession,
     expectedKeys: Long = SeenSet.DefaultExpectedKeys,
@@ -90,14 +90,13 @@ final class SeenSet(root: String, spark: SparkSession,
     * instead of rebuilding (a Bloom filter cannot delete). Tombstone sets
     * are usually epoch-delta sized, but `requeueFailures` retracts an
     * epoch's whole FAILED set and at 10^10-URL scale transient failures are
-    * the norm — so the filters are BUILT ON EXECUTORS (one task per shard,
-    * only serialized filter bytes ever reach the driver) and the exact
+    * the norm — so past the driver-build cap the filters are BUILT ON
+    * EXECUTORS (one task per shard, nothing filter-sized reaches the
+    * driver) and the exact
     * anti-join in [[liveKeys]] broadcasts only below a row-count threshold. */
   private val tombTable = new SnapshotTable(s"$root/tombstones", spark)
   private def tombRoot = s"$root/tombstones"
 
-  private def bloomPath(id: Long, shard: Int) =
-    Paths.get(root, "snapshots", s"bloom-v$id-s$shard.bin")
   private def metaPath = Paths.get(root, "snapshots", "bloom-meta.json")
 
   def isEmpty: Boolean = !table.exists
@@ -128,7 +127,7 @@ final class SeenSet(root: String, spark: SparkSession,
       val raw = tombTable.read().withColumnRenamed("url_hash", "__tomb_hash")
       val tombs =
         if (tombstoneCount <= SeenSet.tombBroadcastMax(spark)) broadcast(raw) else raw
-      if (SeenSet.cuckooShardsPresent(tombRoot, tid.get)) {
+      if (ShardFiles.allPresent(ShardFiles.Cuckoo, tombRoot, tid.get)) {
         GraftFunctions.register(spark)
         val probe = call_function("cuckoo_might_contain",
           col("url_hash"), lit(tombRoot), lit(tid.get))
@@ -160,29 +159,22 @@ final class SeenSet(root: String, spark: SparkSession,
     tid
   }
 
-  /** Build + write the sharded cuckoo sidecar for tombstone snapshot `tid`.
-    * Large sets (beyond [[SeenSet.cuckooDriverBuildMax]]) build AND WRITE
-    * fully on executors — one task per shard, nothing filter-sized reaches
-    * the driver; small sets (the episodic-retraction common case) skip the
-    * job overhead and build on the driver from a BOUNDED collect. Both
-    * paths sort keys within each shard first, so the sidecar bytes are
-    * identical whichever path ran (spec-asserted at file level). */
+  /** Build + write the sharded cuckoo sidecar for tombstone snapshot `tid`
+    * ([[ShardFiles.build]]: small sets — the episodic-retraction common
+    * case — on the driver, a mostly-failed epoch's one task per shard). */
   private def writeCuckoo(tid: Long): Unit = {
     val total = tombTable.manifest(tid).map(_.get("row_count").asLong).getOrElse(0L)
-    val keysDf = tombTable.readAt(tid).select(col("url_hash"))
-    if (total <= SeenSet.cuckooDriverBuildMax(spark)) {
-      import spark.implicits._
-      SeenSet.writeCuckooShardFiles(tombRoot, tid,
-        SeenSet.buildCuckooShardsLocal(keysDf.as[Long].collect(), total, S))
-    } else SeenSet.buildWriteCuckooShards(tombRoot, tid, keysDf, total, S)
+    ShardFiles.build(ShardFiles.Cuckoo, tombRoot, tid, tombTable.readAt(tid), S,
+      rowBound = total)(SeenSet.cuckooShard(SeenSet.cuckooPerShard(total, S)))
   }
 
   /** Re-adding a retracted key clears its tombstone: the exact set shrinks
     * by an anti-join and the cuckoo sidecar DELETES the fingerprints in
     * place — the capability a Bloom filter lacks and the reason the
     * tombstone probe is a cuckoo filter, not a 17th Bloom shard. Each shard
-    * with deletions is edited by its own executor task; untouched shards
-    * are carried over byte-for-byte. Re-added keys never reach the driver. */
+    * with deletions is edited in place; untouched shards are carried over
+    * byte-for-byte. Beyond the driver-build cap neither the re-added keys
+    * nor the filters reach the driver. */
   private def clearTombstones(newKeys: DataFrame): Unit = {
     val oldTid = tombTable.currentSnapshotId
     if (tombstoneCount == 0L || oldTid.isEmpty) return
@@ -202,19 +194,12 @@ final class SeenSet(root: String, spark: SparkSession,
       val oldCount = tombstoneCount
       val newTid = tombTable.commit(remaining,
         Map("cleared" -> nReAdded.toString))
-      if (SeenSet.cuckooShardsPresent(tombRoot, oldTid.get)) {
-        // small old filter + small deletion set: edit on the driver (bounded
-        // reads); otherwise one executor task per shard, edits and carry-
-        // overs written by the tasks themselves — end-to-end off-driver
-        if (oldCount <= SeenSet.cuckooDriverBuildMax(spark)) {
-          import spark.implicits._
-          SeenSet.writeCuckooShardFiles(tombRoot, newTid,
-            SeenSet.deleteFromCuckooShardsLocal(tombRoot, oldTid.get,
-              reAdded.as[Long].collect(), S),
-            carryOverFrom = Some(oldTid.get))
-        } else SeenSet.deleteWriteCuckooShards(tombRoot, oldTid.get, newTid,
-          reAdded, S)
-      } else writeCuckoo(newTid)
+      if (ShardFiles.allPresent(ShardFiles.Cuckoo, tombRoot, oldTid.get))
+        // the old tombstone count bounds both the re-added keys (a subset)
+        // and the filters the edit reads
+        ShardFiles.build(ShardFiles.Cuckoo, tombRoot, newTid, reAdded, S,
+          rowBound = oldCount)(SeenSet.cuckooDelete(tombRoot, oldTid.get))
+      else writeCuckoo(newTid)
     } finally reAdded.unpersist(blocking = false)
   }
 
@@ -277,7 +262,8 @@ final class SeenSet(root: String, spark: SparkSession,
       val perShard = shardCapacity.getOrElse(
         math.max(1000L, math.max(expectedKeys, 4 * total) / S))
       val outgrown = total > perShard * S
-      if (outgrown || chainLen > MaxChainLength || !shardsPresent(parent)) {
+      if (outgrown || chainLen > MaxChainLength ||
+          !ShardFiles.allPresent(ShardFiles.Bloom, root, parent)) {
         // compaction (amortized O(1)/key): rewrite the chain into one dir and
         // rebuild shards at 4x the current size. Also the crash-recovery path
         // when the parent generation's sidecars are missing.
@@ -325,9 +311,6 @@ final class SeenSet(root: String, spark: SparkSession,
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def shardsPresent(id: Long): Boolean =
-    (0 until S).forall(s => Files.exists(bloomPath(id, s)))
-
   /** [[filterUnseen]] for a frontier the CALLER HAS PERSISTED (or that is
     * trivially cheap to recompute): additionally prunes the KEYS side of
     * the exact-confirm anti-join. One aggregate job over `frontier` counts
@@ -353,7 +336,7 @@ final class SeenSet(root: String, spark: SparkSession,
     if (isEmpty) return frontier
     GraftFunctions.register(spark)
     table.currentSnapshotId match {
-      case Some(id) if shardsPresent(id) =>
+      case Some(id) if ShardFiles.allPresent(ShardFiles.Bloom, root, id) =>
         // constraint_barrier: stops the optimizer transposing the probe onto
         // the key-table side through the joins' equalities (see the
         // [[ConstraintBarrier]] scaladoc — spec-pinned in FrontierSpec)
@@ -391,7 +374,7 @@ final class SeenSet(root: String, spark: SparkSession,
     if (isEmpty) return frontier
     GraftFunctions.register(spark)
     table.currentSnapshotId match {
-      case Some(id) if shardsPresent(id) =>
+      case Some(id) if ShardFiles.allPresent(ShardFiles.Bloom, root, id) =>
         // constraint_barrier: see filterUnseenPersisted — without it the
         // probe is inferred onto the key table's scan via the anti-join
         // equality (O(all keys ever) probes per epoch at scale)
@@ -422,7 +405,7 @@ final class SeenSet(root: String, spark: SparkSession,
   def filterUnseenRouted(frontier: DataFrame, slotsPerShard: Int = 1): DataFrame = {
     if (isEmpty) return frontier
     table.currentSnapshotId match {
-      case Some(id) if shardsPresent(id) =>
+      case Some(id) if ShardFiles.allPresent(ShardFiles.Bloom, root, id) =>
         filterUnseen(ShardRoute.routeByShard(frontier, "url_hash", S, slotsPerShard))
       case _ => filterUnseen(frontier)
     }
@@ -453,118 +436,43 @@ object SeenSet {
   def shardOf(h: Long, shardCount: Int): Int =
     (((h % shardCount) + shardCount) % shardCount).toInt
 
-  /** Write Bloom shards as per-snapshot sidecars under `root/snapshots/`
-    * (the layout [[BloomProbe]] reads and [[SnapshotTable.expireSnapshots]]
-    * garbage-collects). */
-  private[graft] def writeShardFiles(root: String, id: Long,
-      blooms: Array[BloomFilter]): Unit =
-    blooms.zipWithIndex.foreach { case (bf, shard) =>
-      writeOneShard(root, id, shard, bf, tmpTag = "")
-    }
-
-  private def bloomShardPath(root: String, id: Long, shard: Int) =
-    Paths.get(root, "snapshots", s"bloom-v$id-s$shard.bin")
-
-  /** Atomic single-shard write. `tmpTag` uniquifies the tmp file so a
-    * speculative duplicate task cannot race another attempt's tmp. */
-  private def writeOneShard(root: String, id: Long, shard: Int,
-      bf: BloomFilter, tmpTag: String): Unit = {
-    val out = new java.io.ByteArrayOutputStream()
-    bf.writeTo(out)
-    val dest = bloomShardPath(root, id, shard)
-    val tmp = Paths.get(root, "snapshots", s"bloom-v$id-s$shard.bin$tmpTag.tmp")
-    Files.createDirectories(dest.getParent)
-    Files.write(tmp, out.toByteArray)
-    Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Driver-build cap for Bloom sidecars, in KEYS of the build input (the
-    * delta for incremental adds). Tiny builds skip distributed job overhead
-    * entirely — collect the keys, edit on the driver. */
-  private[graft] def bloomDriverBuildMax(spark: SparkSession): Long =
-    graft.core.GraftConf.longKnob(spark,
-      "graft.bloomDriverMax", "SPARK_GRAFT_BLOOM_DRIVER_MAX", 100000L)
-
-  /** The driver fast path also READS filter-sized data (the parent shards it
-    * merges into, or the fresh filters it allocates), so it is additionally
-    * gated on shard capacity: past this the shards are executor-sized
-    * objects and the build must stay distributed no matter how small the
-    * delta. ~4M keys/shard ≈ 5 MB/shard at 1% fpp. */
+  /** The Bloom driver arm also READS filter-sized data (the parent shards
+    * it merges into, or the fresh filters it allocates), so past this
+    * per-shard capacity the build stays on executors however small the
+    * input. ~4M keys/shard ≈ 5 MB/shard at 1% fpp. */
   private val DriverShardCapacityMax = 4L * 1000 * 1000
 
-  /** Build AND write the [[ShardCount]] Bloom shard sidecars for snapshot
-    * `id` — the scale-correct replacement for `buildShards` + driver write:
-    * keys shuffle to ONE TASK PER SHARD (8-byte longs are the only shuffle
-    * payload), each task builds its shard at `perShard` capacity —
-    * OR-merging `mergeParentId`'s same-capacity shard file when given, read
-    * from the shared snapshot store exactly like the probe side
-    * ([[BloomProbe]]) reads it — and writes its own sidecar file atomically.
-    * Nothing filter-sized ever reaches the driver: the previous
-    * treeReduce-of-filter-arrays build moved 16 × full-capacity partials
-    * per map partition (~12 GB per partial at a 10^10-key set) through a
-    * driver-side merge.
+  /** Build AND write the Bloom shard sidecars of snapshot `id` through
+    * [[ShardFiles.build]]: each shard starts from `mergeParentId`'s
+    * same-capacity shard file (OR-merge of an incremental add) or a fresh
+    * filter at `perShard` capacity, and takes its keys. Bit-identical on
+    * either arm and at any parallelism — a Bloom filter's bits are the
+    * OR-set of its keys' hash bits.
     *
-    * Bit-identical on every path and at any parallelism: a Bloom filter's
-    * bits are the OR-set of its keys' hash bits, so insertion order and
-    * build placement cannot change the file bytes (asserted by spec).
-    *
-    * `knownRows` (an UPPER BOUND on `keysDf`'s rows, from a snapshot
-    * manifest — never a count job) routes bounded builds to a driver fast
-    * path: collect the keys, edit the 16 filters locally, skip the shuffle
-    * — the per-epoch floor case (a tiny delta against a big set). */
+    * `knownRows` is an upper bound on `keysDf`'s rows from a manifest
+    * (never a count job); it routes bounded builds with driver-sized shards
+    * to the driver arm. */
   private[graft] def buildWriteShards(root: String, id: Long, keysDf: DataFrame,
       perShard: Long, mergeParentId: Option[Long] = None,
       knownRows: Long = Long.MaxValue,
       shardCount: Int = ShardCount,
-      fpp: Double = DefaultFpp): Unit = {
-    val spark = keysDf.sparkSession
-    import spark.implicits._
-    // the fan-out record must exist BEFORE any shard file: probes resolve
-    // routing from it, and presence-of-all-shards implies presence-of-record
-    ShardMeta.record(root, shardCount)
-    if (knownRows <= bloomDriverBuildMax(spark) &&
-        perShard <= DriverShardCapacityMax) {
-      val keys = keysDf.select(col("url_hash")).as[Long].collect()
-      val shards = Array.tabulate(shardCount)(s =>
-        freshOrParentShard(root, mergeParentId, perShard, s, fpp))
-      keys.foreach(h => shards(shardOf(h, shardCount)).putLong(h))
-      writeShardFiles(root, id, shards)
-    } else {
-      // closure captures only plain values + object methods (a nested def
-      // here would drag the whole method frame — SparkSession included —
-      // into the task and fail serialization)
-      val (rootC, idC, parentC, capC, sC, fppC) =
-        (root, id, mergeParentId, perShard, shardCount, fpp)
-      keysDf.select(col("url_hash")).as[Long].rdd
-        .map(h => (shardOf(h, sC), h))
-        .partitionBy(new ShardPartitioner(sC))
-        .mapPartitionsWithIndex { (shard, it) =>
-          val bf = freshOrParentShard(rootC, parentC, capC, shard, fppC)
-          it.foreach { case (_, h) => bf.putLong(h) }
-          val attempt = Option(org.apache.spark.TaskContext.get())
-            .map(tc => s".a${tc.taskAttemptId()}").getOrElse("")
-          writeOneShard(rootC, idC, shard, bf, tmpTag = attempt)
-          Iterator.single(shard)
-        }
-        .collect()
-    }
-  }
+      fpp: Double = DefaultFpp): Unit =
+    ShardFiles.build(ShardFiles.Bloom, root, id, keysDf, shardCount,
+      rowBound = if (perShard <= DriverShardCapacityMax) knownRows else Long.MaxValue)(
+      bloomShard(root, mergeParentId, perShard, fpp))
 
-  /** One shard's starting filter: the parent generation's same-capacity
-    * shard read from the shared snapshot store, or a fresh filter. Called
-    * from executor tasks (distributed build) and the driver fast path. */
-  private def freshOrParentShard(root: String, parentId: Option[Long],
-      perShard: Long, shard: Int, fpp: Double = DefaultFpp): BloomFilter =
-    parentId match {
+  private def bloomShard(root: String, parentId: Option[Long], perShard: Long,
+      fpp: Double): (Int, Array[Long]) => Array[Byte] = { (shard, keys) =>
+    val bf = parentId match {
       case Some(pid) => BloomFilter.readFrom(new java.io.ByteArrayInputStream(
-        Files.readAllBytes(bloomShardPath(root, pid, shard))))
+        ShardFiles.read(ShardFiles.Bloom, root, pid, shard)))
       case None => BloomFilter.create(perShard, fpp)
     }
-
-  private[graft] def shardFilesPresent(root: String, id: Long): Boolean =
-    (0 until ShardMeta.countFor(root)).forall(s =>
-      Files.exists(Paths.get(root, "snapshots", s"bloom-v$id-s$s.bin")))
+    keys.foreach(bf.putLong)
+    val out = new java.io.ByteArrayOutputStream()
+    bf.writeTo(out)
+    out.toByteArray
+  }
 
   // --- sharded cuckoo sidecars (tombstone probe) ---------------------------
 
@@ -580,33 +488,11 @@ object SeenSet {
     graft.core.GraftConf.longKnob(spark,
       "graft.bcastMaybesMax", "SPARK_GRAFT_BCAST_MAYBES_MAX", 4000000L)
 
-  private[graft] def cuckooShardPath(root: String, id: Long, shard: Int) =
-    Paths.get(root, "snapshots", s"cuckoo-v$id-s$shard.bin")
-
-  private[graft] def cuckooShardsPresent(root: String, id: Long): Boolean =
-    (0 until ShardMeta.countFor(root)).forall(s =>
-      Files.exists(cuckooShardPath(root, id, s)))
-
-  /** Routes pre-computed shard ids to their own partition (identity map). */
-  private final class ShardPartitioner(n: Int) extends org.apache.spark.Partitioner {
-    def numPartitions: Int = n
-    def getPartition(key: Any): Int = key.asInstanceOf[Int]
-  }
-
-  /** Driver-build cap: tombstone sets at or under this row count build (and
-    * edit) their cuckoo shards on the driver from a bounded collect —
-    * episodic retraction is usually tiny and 3 extra Spark jobs dominate
-    * the work; larger sets (a mostly-failed epoch) run distributed. */
-  private[graft] def cuckooDriverBuildMax(spark: SparkSession): Long =
-    graft.core.GraftConf.longKnob(spark,
-      "graft.cuckooDriverMax", "SPARK_GRAFT_CUCKOO_DRIVER_MAX", 100000L)
-
-  /** One shard's filter from ITS keys. Keys are sorted first so the filter
-    * bits are identical at any parallelism and on either build path
-    * (eviction order is insertion-order dependent). Saturation (dup-heavy
-    * fingerprints) grows the shard and restarts its inserts. */
-  private def buildShardFilter(keys: Array[Long], perShard: Long): Array[Byte] = {
-    java.util.Arrays.sort(keys)
+  /** One cuckoo shard from ITS (sorted) keys — insertion order fixes the
+    * eviction walks, so sorted input makes the bytes path-independent.
+    * Saturation (dup-heavy fingerprints) grows the shard and restarts its
+    * inserts. */
+  private def cuckooShard(perShard: Long): (Int, Array[Long]) => Array[Byte] = { (_, keys) =>
     var cf = CuckooFilter.forCapacity(math.max(perShard, keys.length.toLong))
     var i = 0
     while (i < keys.length) {
@@ -616,121 +502,20 @@ object SeenSet {
     cf.serialize()
   }
 
-  private def perShardCapacity(total: Long, shardCount: Int): Long =
+  private def cuckooPerShard(total: Long, shardCount: Int): Long =
     math.max(64L, 2L * total / shardCount)
 
-  /** Build AND WRITE all [[ShardCount]] cuckoo shard sidecars for tombstone
-    * snapshot `tid` on EXECUTORS: one task per shard builds its filter
-    * (sorted inserts — parallelism-independent bytes) and writes its own
-    * sidecar file atomically, the same write pattern as the Bloom
-    * [[buildWriteShards]]. Nothing filter-sized reaches the driver — a
-    * mostly-failed epoch at 10^10-URL scale retracts ~10^8 keys, whose 16
-    * serialized filters would otherwise all pass through the driver. */
-  private[graft] def buildWriteCuckooShards(root: String, tid: Long,
-      keysDf: DataFrame, total: Long, shardCount: Int = ShardCount): Unit = {
-    import keysDf.sparkSession.implicits._
-    ShardMeta.record(root, shardCount)
-    val perShard = perShardCapacity(total, shardCount)
-    val sC = shardCount
-    keysDf.select(col("url_hash")).as[Long].rdd
-      .map(h => (shardOf(h, sC), h))
-      .partitionBy(new ShardPartitioner(sC))
-      .mapPartitionsWithIndex { (shard, it) =>
-        writeOneCuckooShard(root, tid, shard,
-          buildShardFilter(it.map(_._2).toArray, perShard))
-        Iterator.single(shard)
-      }.collect()
-  }
-
-  /** Driver-side twin of [[buildWriteCuckooShards]] for bounded key sets —
-    * byte-identical output (same per-shard sorted insert order). */
-  private[graft] def buildCuckooShardsLocal(keys: Array[Long], total: Long,
-      shardCount: Int = ShardCount): Array[Array[Byte]] = {
-    val perShard = perShardCapacity(total, shardCount)
-    val byShard = Array.fill(shardCount)(new scala.collection.mutable.ArrayBuilder.ofLong)
-    keys.foreach(h => byShard(shardOf(h, shardCount)) += h)
-    byShard.map(b => buildShardFilter(b.result(), perShard))
-  }
-
-  /** Per-shard in-place DELETION of `delKeys` from snapshot `oldId`'s
-    * sidecars: each shard with deletions is read, edited, and re-serialized
-    * by its own executor task (shared-store sidecar files, same access
-    * pattern as the probe side); shards without deletions return null and
-    * are carried over by the writer. */
-  private def deleteFromShardFile(root: String, oldId: Long, shard: Int,
-      keys: Array[Long]): Array[Byte] = {
-    java.util.Arrays.sort(keys)
-    val cf = CuckooFilter.deserialize(
-      Files.readAllBytes(cuckooShardPath(root, oldId, shard)))
-    keys.foreach(cf.delete)
-    cf.serialize()
-  }
-
-  /** Per-shard in-place deletion, executor-side end to end: shards with
-    * deletions are read/edited/re-written by their own task; untouched
-    * shards carry the old generation's bytes over verbatim. */
-  private[graft] def deleteWriteCuckooShards(root: String, oldId: Long,
-      newId: Long, delKeys: DataFrame, shardCount: Int = ShardCount): Unit = {
-    import delKeys.sparkSession.implicits._
-    val sC = shardCount
-    delKeys.select(col("url_hash")).as[Long].rdd
-      .map(h => (shardOf(h, sC), h))
-      .partitionBy(new ShardPartitioner(sC))
-      .mapPartitionsWithIndex { (shard, it) =>
-        val keys = it.map(_._2).toArray
-        val payload =
-          if (keys.isEmpty) Files.readAllBytes(cuckooShardPath(root, oldId, shard))
-          else deleteFromShardFile(root, oldId, shard, keys)
-        writeOneCuckooShard(root, newId, shard, payload)
-        Iterator.single(shard)
-      }.collect()
-  }
-
-  /** Atomic single-shard cuckoo write; tmp uniquified per task attempt so a
-    * speculative duplicate cannot race another attempt's tmp. */
-  private def writeOneCuckooShard(root: String, id: Long, shard: Int,
-      payload: Array[Byte]): Unit = {
-    val attempt = Option(org.apache.spark.TaskContext.get())
-      .map(tc => s".a${tc.taskAttemptId()}").getOrElse("")
-    val dest = cuckooShardPath(root, id, shard)
-    val tmp = Paths.get(root, "snapshots", s"cuckoo-v$id-s$shard.bin$attempt.tmp")
-    Files.createDirectories(dest.getParent)
-    Files.write(tmp, payload)
-    Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Driver-side twin of [[deleteWriteCuckooShards]] for bounded deletion
-    * sets against a bounded old filter — byte-identical output. */
-  private[graft] def deleteFromCuckooShardsLocal(root: String, oldId: Long,
-      delKeys: Array[Long], shardCount: Int = ShardCount): Array[Array[Byte]] = {
-    val byShard = Array.fill(shardCount)(new scala.collection.mutable.ArrayBuilder.ofLong)
-    delKeys.foreach(h => byShard(shardOf(h, shardCount)) += h)
-    byShard.zipWithIndex.map { case (b, shard) =>
-      val keys = b.result()
-      if (keys.isEmpty) null
-      else deleteFromShardFile(root, oldId, shard, keys)
-    }
-  }
-
-  /** Atomically write cuckoo shard sidecars for snapshot `id`. A null entry
-    * carries the shard over from `carryOverFrom` byte-for-byte (the
-    * untouched-shard fast path of the deletion edit). */
-  private[graft] def writeCuckooShardFiles(root: String, id: Long,
-      shards: Array[Array[Byte]], carryOverFrom: Option[Long] = None): Unit = {
-    ShardMeta.record(root, shards.length)
-    shards.zipWithIndex.foreach { case (bytes, shard) =>
-      val dest = cuckooShardPath(root, id, shard)
-      val tmp = Paths.get(root, "snapshots", s"cuckoo-v$id-s$shard.bin.tmp")
-      Files.createDirectories(dest.getParent)
-      val payload = bytes match {
-        case null =>
-          Files.readAllBytes(cuckooShardPath(root, carryOverFrom.get, shard))
-        case b => b
+  /** One cuckoo shard of the next tombstone generation: snapshot `oldId`'s
+    * shard with its re-added keys DELETED in place; a shard without
+    * deletions is carried over byte-for-byte. */
+  private def cuckooDelete(root: String, oldId: Long): (Int, Array[Long]) => Array[Byte] = {
+    (shard, keys) =>
+      val old = ShardFiles.read(ShardFiles.Cuckoo, root, oldId, shard)
+      if (keys.isEmpty) old
+      else {
+        val cf = CuckooFilter.deserialize(old)
+        keys.foreach(cf.delete)
+        cf.serialize()
       }
-      Files.write(tmp, payload)
-      Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
   }
 }

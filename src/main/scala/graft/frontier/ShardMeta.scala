@@ -6,10 +6,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * partitioned Bloom/cuckoo filters under `root/snapshots/`.
   *
   * Why a first-build PARAMETER and not a constant: the shard count fixes the
-  * file layout (`bloom-v<id>-s<shard>.bin`) and the probe's routing
+  * sidecar file layout ([[ShardFiles]]) and the probe's routing
   * (`shard = url_hash mod S`), so build and probe sides must agree for the
   * life of a root; but the RIGHT value is deployment-sized — shard-routed
-  * probing ([[SeenSet.routeByShard]]) caps a task's resident filter bytes at
+  * probing ([[ShardRoute.routeByShard]]) caps a task's resident filter bytes at
   * `totalBits/S`, and purity-with-parallelism needs `S ≥` the cluster's
   * concurrent task slots at 10^10-key scale (a baked-in 16 would cap routed
   * parallelism at 16 tasks). Every sidecar build records S here atomically;

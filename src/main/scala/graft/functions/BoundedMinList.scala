@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
@@ -74,6 +75,9 @@ case class BoundedMinList(
   override def dataType: DataType = ArrayType(child.dataType, containsNull = child.nullable)
   override def nullable: Boolean = false
   override def prettyName: String = s"bounded_min_list($k)"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    TypeUtils.checkForOrderingExpr(child.dataType, "bounded_min_list")
 
   // ascending comparator with nulls (as sentinel) first — the exact
   // sort_array(asc) order of the formulation this replaces

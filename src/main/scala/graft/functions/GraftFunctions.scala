@@ -1,8 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, Decimal, IntegerType, LongType, NumericType, ShortType}
 
 /** Registration + Column facade for the graft expression library.
   *
@@ -37,23 +39,57 @@ object GraftFunctions {
     "shingle_set" -> (es => ShingleSet(es(0), es(1))),
     "sorted_pairs" -> (es => SortedPairs(es.head)),
     "bounded_min_list" -> (es => BoundedMinList(es(0),
-      es(1).eval().asInstanceOf[Int])),
-    "lang_decision" -> (es => LangDecision(es.head,
-      es.tail.map(_.eval().asInstanceOf[Double]))),
+      positiveIntLiteral("bounded_min_list", "k", es(1)))),
+    "lang_decision" -> (es => LangDecision(es.head, langThresholds(es.tail))),
     "bloom_might_contain" -> (es => graft.frontier.BloomMightContain(es(0), es(1), es(2))),
     "cuckoo_might_contain" -> (es => graft.frontier.CuckooMightContain(es(0), es(1), es(2))),
     "constraint_barrier" -> (es => graft.frontier.ConstraintBarrier(es.head))
   )
 
-  @volatile private var registered: Set[SparkSession] = Set.empty
+  /** Literal arguments are read once, when the builder runs during
+    * analysis, so anything but a foldable numeric literal is an analysis
+    * error naming the argument — not a ClassCastException, and never an
+    * eval of an unresolved expression. */
+  private def literalArgError(fn: String, arg: String, kind: String, e: Expression) =
+    new AnalysisException(s"INVALID_PARAMETER_VALUE.$kind",
+      Map("parameter" -> s"`$arg`", "functionName" -> s"`$fn`",
+        "invalidValue" -> e.sql))
 
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!registered.contains(spark)) {
-      builders.foreach { case (name, b) =>
-        spark.sessionState.functionRegistry
-          .createOrReplaceTempFunction(name, b, "built-in")
-      }
-      registered += spark
+  private def numericLiteral(fn: String, arg: String, e: Expression): Double =
+    (if (e.foldable && e.dataType.isInstanceOf[NumericType]) e.eval() else null) match {
+      case d: Decimal => d.toDouble
+      case n: java.lang.Number => n.doubleValue
+      case _ => throw literalArgError(fn, arg, "DOUBLE", e)
+    }
+
+  private val IntegralTypes = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+
+  private def positiveIntLiteral(fn: String, arg: String, e: Expression): Int =
+    (if (e.foldable && IntegralTypes(e.dataType)) e.eval() else null) match {
+      case n: java.lang.Number if n.longValue > 0 && n.longValue <= Int.MaxValue => n.intValue
+      case _ => throw literalArgError(fn, arg, "INTEGER", e)
+    }
+
+  /** One threshold per language of [[LangHeuristic.langStops]], in order. */
+  private def langThresholds(es: Seq[Expression]): Seq[Double] = {
+    val ths = es.zipWithIndex.map { case (e, i) =>
+      numericLiteral("lang_decision", s"threshold ${i + 1}", e) }
+    val n = LangHeuristic.langStops.size
+    if (ths.size != n) throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+      Map("functionName" -> "`lang_decision`", "expectedNum" -> (n + 1).toString,
+        "actualNum" -> (ths.size + 1).toString,
+        "docroot" -> "https://spark.apache.org/docs/latest"))
+    ths
+  }
+
+  /** Registers the library in `spark`'s own function registry. Idempotent:
+    * names the session already resolves are left untouched, so no
+    * process-wide record of sessions is kept. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    builders.foreach { case (name, b) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, b, "built-in")
     }
   }
 

@@ -3,6 +3,8 @@ package graft.table
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import graft.frontier.ShardFiles
+
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
@@ -330,7 +332,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
 
   /** Expire all but the newest `keepLast` snapshots (Iceberg
     * `expire_snapshots` maintenance): deletes their manifests, their
-    * per-snapshot sidecar files (`bloom-v<id>-*`, `cuckoo-v<id>-*`), and
+    * per-snapshot sidecar files ([[ShardFiles.snapshotOf]]), and
     * any data directory no RETAINED snapshot references — delta chains list
     * ancestor dirs in their own manifest (`data_dirs`), so a retained delta
     * snapshot keeps its whole chain readable. Without expiry a per-epoch
@@ -362,9 +364,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
         }
         snapFiles.filter { p =>
           val n = p.getFileName.toString
-          n == s"v$id.json" || n.startsWith(s"cuckoo-v$id-") ||
-            n == s"cuckoo-v$id.bin" || // legacy pre-sharding sidecar
-            n.startsWith(s"bloom-v$id-")
+          n == s"v$id.json" || ShardFiles.snapshotOf(n).contains(id)
         }.foreach(Files.deleteIfExists)
       }
       expired.size

@@ -1,7 +1,7 @@
 package graft
 
 import graft.crawl.CrawlEpoch
-import graft.frontier.Scheduler
+import graft.frontier.{Scheduler, ShardFiles}
 import graft.gen.SyntheticCorpus
 import graft.table.SnapshotTable
 
@@ -409,6 +409,42 @@ class CrawlEpochSpec extends SparkSpecBase {
     val fB = CrawlEpoch.frontierTable(rootB, spark)
     val cur = fB.currentSnapshotId.get
     assert(fB.manifest(cur - 1).isEmpty, "old frontier manifest should be expired")
+  }
+
+  test("expireState: expired snapshots' sidecars are deleted under all four sidecar roots") {
+    val (pages, images, _, robots) = corpus()
+    // seeds past the corpus: their 404s are retracted into seen/tombstones
+    val seeds = SyntheticCorpus.seedUrls(spark, 300, pageCount = 600)
+    val root = Files.createTempDirectory("crawlExpSidecars").toString
+    CrawlEpoch.seed(root, spark, seeds)
+    // (sidecar root, kind, table whose snapshot ids key the files): the
+    // image-id filters are keyed by the schedule snapshot id
+    val roots = Seq(
+      ("seen", ShardFiles.Bloom, "seen"),
+      ("seen/tombstones", ShardFiles.Cuckoo, "seen/tombstones"),
+      ("scheduled", ShardFiles.Bloom, "scheduled"),
+      ("imgbloom", ShardFiles.Bloom, "scheduled"))
+    def sidecarIds(r: String): Set[Long] =
+      Option(new java.io.File(s"$root/$r/snapshots").listFiles).toSeq.flatten
+        .flatMap(f => ShardFiles.snapshotOf(f.getName)).toSet
+    val written = scala.collection.mutable.Map[String, Set[Long]]()
+    spark.conf.set("graft.bcastSchedMax", "1") // builds the schedule + image-id sidecars
+    try (1 to 3).foreach { e =>
+      CrawlEpoch.run(root, spark, pages, images, Some(robots), budgetPerHost = 5, epoch = e)
+      CrawlEpoch.requeueFailures(root, spark, epoch = e)
+      roots.foreach { case (r, _, _) =>
+        written(r) = written.getOrElse(r, Set.empty[Long]) ++ sidecarIds(r) }
+      CrawlEpoch.expireState(root, spark, keepLast = 1)
+    } finally spark.conf.unset("graft.bcastSchedMax")
+    roots.foreach { case (r, kind, owner) =>
+      val t = new SnapshotTable(s"$root/$owner", spark)
+      val expired = written(r).filter(id => t.manifest(id).isEmpty)
+      assert(expired.nonEmpty, s"$r: no sidecar generation was expired")
+      assert(sidecarIds(r).intersect(expired).isEmpty,
+        s"$r: sidecars of expired snapshots ${sidecarIds(r).intersect(expired)} remain")
+      assert(ShardFiles.allPresent(kind, s"$root/$r", t.currentSnapshotId.get),
+        s"$r: the current generation's sidecars are gone")
+    }
   }
 
   test("snapshot pointer never regresses to an older epoch; rollback never clobbers snapshots") {

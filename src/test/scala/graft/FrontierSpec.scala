@@ -1,6 +1,6 @@
 package graft
 
-import graft.frontier.{CuckooFilter, Scheduler, SeenSet}
+import graft.frontier.{CuckooFilter, Scheduler, SeenSet, ShardFiles}
 import graft.gen.SyntheticCorpus
 import graft.table.SnapshotTable
 
@@ -354,7 +354,7 @@ class FrontierSpec extends SparkSpecBase {
     val tid = seen.retract(spark.range(1000000L).select(col("id").as("url_hash")))
     // all 16 shard sidecars written for the tombstone snapshot
     assert((0 until SeenSet.ShardCount).forall(s => java.nio.file.Files.exists(
-      SeenSet.cuckooShardPath(s"$root/tombstones", tid, s))))
+      ShardFiles.path(ShardFiles.Cuckoo, s"$root/tombstones", tid, s))))
     // retracted keys are unseen again; non-retracted stay seen
     val probeIn = spark.range(1200000L).select(col("id").as("url_hash"))
     assert(seen.filterUnseen(probeIn).count() === 1000000L)
@@ -373,17 +373,21 @@ class FrontierSpec extends SparkSpecBase {
     // both paths, so the written files must match byte-for-byte
     def buildWith(driverMax: String): String = {
       val root = tmpDir("seencuckoo")
-      spark.conf.set("graft.cuckooDriverMax", driverMax)
+      spark.conf.set("graft.shardDriverMax", driverMax)
       try {
         val seen = new SeenSet(root, spark)
         seen.add((0L until 60000L).toDF("url_hash"))
         seen.retract((0L until 50000L).toDF("url_hash"))
         seen.add((10000L until 20000L).toDF("url_hash")) // clears a subset
+        // a re-add whose keys all land in shard 0: one shard is edited, the
+        // other 15 are carried over
+        seen.add((20000L until 50000L by 16L).toDF("url_hash"))
+        seen.add(Seq.empty[Long].toDF("url_hash")) // zero-row re-add
         root
-      } finally spark.conf.unset("graft.cuckooDriverMax")
+      } finally spark.conf.unset("graft.shardDriverMax")
     }
     val rootDriver = buildWith("1000000")
-    val rootDist = buildWith("0")
+    val rootDist = buildWith("-1") // below every row bound, even a zero one
     def sidecars(root: String): Seq[String] =
       new java.io.File(s"$root/tombstones/snapshots").listFiles
         .filter(_.getName.startsWith("cuckoo-v")).map(_.getName).sorted.toSeq
@@ -398,9 +402,10 @@ class FrontierSpec extends SparkSpecBase {
     }
     // distributed-path membership stays exact after the lifecycle
     val seen = new SeenSet(rootDist, spark)
-    // unseen = retracted-and-not-readded = [0,10000) ∪ [20000,50000)
+    // unseen = retracted-and-not-readded = [0,10000) ∪ [20000,50000),
+    // less the 1875 shard-0 keys of [20000,50000)
     assert(seen.filterUnseen(
-      (0L until 60000L).toDF("url_hash")).count() === 40000L)
+      (0L until 60000L).toDF("url_hash")).count() === 38125L)
   }
 
   test("bloom shard builds: driver and executor paths write identical sidecar bytes") {
@@ -409,16 +414,20 @@ class FrontierSpec extends SparkSpecBase {
     // Bloom bits are an OR-set, so placement/order must not change the files
     def buildWith(driverMax: String): String = {
       val root = tmpDir("seenbloom")
-      spark.conf.set("graft.bloomDriverMax", driverMax)
+      spark.conf.set("graft.shardDriverMax", driverMax)
       try {
         val seen = new SeenSet(root, spark)
         seen.add((0L until 60000L).toDF("url_hash"))
         seen.add((50000L until 70000L).toDF("url_hash"))
+        // a delta whose keys all land in shard 0: 15 shards merge no keys
+        seen.add((70000L until 80000L by 16L).toDF("url_hash"))
+        seen.add((0L until 100L).toDF("url_hash")) // zero-row re-add
         root
-      } finally spark.conf.unset("graft.bloomDriverMax")
+      } finally spark.conf.unset("graft.shardDriverMax")
     }
     val rootDriver = buildWith("1000000") // everything on the driver
-    val rootDist = buildWith("0") // everything distributed, per-shard tasks
+    // everything distributed, per-shard tasks — even the zero-row delta
+    val rootDist = buildWith("-1")
     def sidecars(root: String): Seq[String] =
       new java.io.File(s"$root/snapshots").listFiles
         .filter(_.getName.startsWith("bloom-v")).map(_.getName).sorted.toSeq
@@ -433,8 +442,9 @@ class FrontierSpec extends SparkSpecBase {
     }
     // and the distributed-build set answers membership exactly
     val seen = new SeenSet(rootDist, spark)
+    // unseen = [70000,80000) less its 625 shard-0 keys
     assert(seen.filterUnseen(
-      (0L until 80000L).toDF("url_hash")).count() === 10000L)
+      (0L until 80000L).toDF("url_hash")).count() === 9375L)
   }
 
   test("probe cache byte cap: membership stays exact under eviction, residency bounded") {
