@@ -14,9 +14,9 @@ object GraftConf {
       .getOrElse(default)
 
   /** Fail fast WITH the offending key/value named: a typo'd knob (e.g.
-    * `SPARK_GRAFT_BCAST_TOMB_MAX=4m`) must not surface as a bare
-    * NumberFormatException mid-epoch with no hint which of the five gate
-    * knobs it came from. */
+    * `SPARK_GRAFT_BCAST_SEEN_MAX=4m`) must not surface as a bare
+    * NumberFormatException mid-epoch with no hint which gate knob it came
+    * from. */
   private def parse(key: String, value: String): Long =
     try value.trim.toLong
     catch {

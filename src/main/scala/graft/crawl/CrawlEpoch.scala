@@ -205,8 +205,7 @@ object CrawlEpoch {
       val known = if (cacheT.exists) Some(cacheT.read()) else None
       val forSchedule = known.fold(src)(k =>
         k.unionByName(src.join(k.select(col("host")), Seq("host"), "left_anti")))
-      val cacheRows = cacheT.currentSnapshotId.flatMap(cacheT.manifest)
-        .map(_.get("row_count").asLong)
+      val cacheRows = cacheT.currentRowCount
       val srcRows = exactRowCount(src.queryExecution.optimizedPlan)
       val hostBound = (known, cacheRows, srcRows) match {
         case (None, _, Some(s))          => s
@@ -246,22 +245,15 @@ object CrawlEpoch {
     // per-epoch-floor case. No counting job is ever run for this. Also
     // drives the empty-epoch short-circuits below: 0 frontier rows means
     // the schedule/robots/frontier stages provably have nothing to compute.
-    val frontierRowsExact = frontier.currentSnapshotId.flatMap(frontier.manifest)
-      .map(_.get("row_count").asLong).getOrElse(Long.MaxValue)
+    val frontierRowsExact = frontier.currentRowCount.getOrElse(Long.MaxValue)
     if (!schedTable.stageDone(epoch, "scheduled")) timed("schedule") {
       // empty frontier ⇒ empty schedule: typed manifest-only commit from
       // the parent schedule's recorded schema (first epoch has no parent —
       // the general path writes the schema then)
-      val emptyScheduleSchema =
-        if (frontierRowsExact == 0L)
-          schedTable.currentSnapshotId.flatMap(schedTable.manifest)
-            .filter(_.has("schema_json")).map(_.get("schema_json").asText)
-        else None
-      if (emptyScheduleSchema.isDefined) {
-        schedTable.commitEmpty(emptyScheduleSchema.get,
-          Map("epoch" -> epoch.toString, "stage" -> "scheduled"))
+      if (frontierRowsExact == 0L && schedTable.commitEmpty(
+          Map("epoch" -> epoch.toString, "stage" -> "scheduled")).isDefined)
         schedTable.markStage(epoch, "scheduled")
-      } else {
+      else {
         val normalized = Scheduler.normalize(frontier.read())
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
@@ -281,8 +273,7 @@ object CrawlEpoch {
     // the epoch's wall clock is schedule + max(2,3,4), not the sum, and tasks
     // from one stage fill cores the others leave idle.
     val schedSnap = schedTable.snapshotForLineage("epoch", epoch.toString)
-    val schedRows = schedSnap.flatMap(schedTable.manifest)
-      .map(_.get("row_count").asLong).getOrElse(Long.MaxValue)
+    val schedRows = schedSnap.flatMap(schedTable.rowCount).getOrElse(Long.MaxValue)
     // EMPTY-EPOCH SHORT-CIRCUITS (manifest-exact counts, never a job): a
     // drained epoch must still advance lineage — resume markers, metrics
     // and the next epoch all look state up by epoch — but owes no Spark
@@ -347,13 +338,8 @@ object CrawlEpoch {
       // typed empty snapshot from the parent's recorded schema, no job.
       // (First-ever epoch with an empty schedule has no parent schema to
       // copy — fall through to the general path, which writes one.)
-      val emptySinkSchema =
-        if (emptySchedule) outTable.currentSnapshotId.flatMap(outTable.manifest)
-          .filter(_.has("schema_json")).map(_.get("schema_json").asText)
-        else None
-      if (emptySinkSchema.isDefined) {
-        outTable.commitEmpty(emptySinkSchema.get,
-          Map("epoch" -> epoch.toString, "stage" -> "out"))
+      if (emptySchedule &&
+          outTable.commitEmpty(Map("epoch" -> epoch.toString, "stage" -> "out")).isDefined) {
         outTable.markStage(epoch, "out")
         outMetricsHolder.set(Some((0L, 0L, 0L)))
         return
@@ -528,7 +514,7 @@ object CrawlEpoch {
     // --- stage 3: seen-set update (incremental: delta snapshot + merged
     // Bloom shards; per-epoch cost is O(scheduled), not O(all keys ever)) ----
     def runSeenStage(): Unit =
-      if (!new java.io.File(s"$stateRoot/seen/stages/e$epoch-seen").exists()) {
+      if (!seen.table.stageDone(epoch, "seen")) {
         // 0 scheduled rows ⇒ no new keys: the set is unchanged, marker only
         if (!emptySchedule)
           seen.add(scheduled.select(col("url_hash")), Map("epoch" -> epoch.toString))
@@ -632,9 +618,9 @@ object CrawlEpoch {
     RunningEpoch(
       epoch = epoch,
       scheduled = schedTable.snapshotForLineage("epoch", epoch.toString)
-        .flatMap(schedTable.manifest).map(_.get("row_count").asLong).getOrElse(0L),
+        .flatMap(schedTable.rowCount).getOrElse(0L),
       newFrontier = frontier.snapshotForLineage("epoch", epoch.toString)
-        .flatMap(frontier.manifest).map(_.get("row_count").asLong).getOrElse(0L),
+        .flatMap(frontier.rowCount).getOrElse(0L),
       outDone = outF,
       outTable = outTable,
       outMetrics = outMetricsHolder)
@@ -730,7 +716,7 @@ object CrawlEpoch {
         Map("epoch" -> epoch.toString, "stage" -> "requeue",
           "requeue_dropped" -> dropped.toString))
       frontier.markStage(epoch, "requeue")
-      frontier.manifest(fid).map(_.get("delta_rows").asLong).getOrElse(0L)
+      frontier.deltaRows(fid).getOrElse(0L)
     } finally failed.unpersist(blocking = false)
   }
 

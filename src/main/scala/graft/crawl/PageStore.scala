@@ -5,7 +5,7 @@ import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** File-backed page store partitioned by url-hash bucket — the fetch-side
   * analog of the bucketed IVF layout (`Ann.ivfWriteBucketed`): the corpus is
@@ -87,10 +87,7 @@ object PageStore {
     // listings + schema inference — the dominant cost of small pruned reads
     // at local scale, and millions of object-store LIST calls at 100 TB
     graft.sources.ManifestParquet.writeManifest(path, "bucket", shaped.schema)
-    val tmp = Paths.get(path, "_graft_buckets.tmp")
-    Files.write(tmp, s"$nBuckets\n$fingerprint".getBytes)
-    Files.move(tmp, metaPath(path), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    graft.table.AtomicFile.replace(metaPath(path), s"$nBuckets\n$fingerprint".getBytes)
   }
 
   /** The store as an epoch's corpus frame (shape of CrawlEpoch's

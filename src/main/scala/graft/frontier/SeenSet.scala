@@ -1,9 +1,9 @@
 package graft.frontier
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import graft.functions.GraftFunctions
-import graft.table.SnapshotTable
+import graft.table.{AtomicFile, SnapshotTable}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -108,9 +108,7 @@ final class SeenSet(root: String, spark: SparkSession,
     if (table.exists) table.read().select(col("url_hash"))
     else spark.range(0).select(col("id").as("url_hash"))
 
-  private def tombstoneCount: Long =
-    tombTable.currentSnapshotId.flatMap(tombTable.manifest)
-      .map(_.get("row_count").asLong).getOrElse(0L)
+  private def tombstoneCount: Long = tombTable.currentRowCount.getOrElse(0L)
 
   /** Effective membership: committed keys minus tombstones. The cuckoo probe
     * gates the exact tombstone anti-join — a key the filter rejects is
@@ -126,7 +124,7 @@ final class SeenSet(root: String, spark: SparkSession,
       // which must shuffle, not broadcast (the guard ADVICE asked for).
       val raw = tombTable.read().withColumnRenamed("url_hash", "__tomb_hash")
       val tombs =
-        if (tombstoneCount <= SeenSet.tombBroadcastMax(spark)) broadcast(raw) else raw
+        if (tombstoneCount <= SeenSet.broadcastMax(spark)) broadcast(raw) else raw
       if (ShardFiles.allPresent(ShardFiles.Cuckoo, tombRoot, tid.get)) {
         GraftFunctions.register(spark)
         val probe = call_function("cuckoo_might_contain",
@@ -163,7 +161,7 @@ final class SeenSet(root: String, spark: SparkSession,
     * ([[ShardFiles.build]]: small sets — the episodic-retraction common
     * case — on the driver, a mostly-failed epoch's one task per shard). */
   private def writeCuckoo(tid: Long): Unit = {
-    val total = tombTable.manifest(tid).map(_.get("row_count").asLong).getOrElse(0L)
+    val total = tombTable.rowCount(tid).getOrElse(0L)
     ShardFiles.build(ShardFiles.Cuckoo, tombRoot, tid, tombTable.readAt(tid), S,
       rowBound = total)(SeenSet.cuckooShard(SeenSet.cuckooPerShard(total, S)))
   }
@@ -224,13 +222,9 @@ final class SeenSet(root: String, spark: SparkSession,
   private def recordedFpp: Option[Double] =
     bloomMeta.filter(_.has("fpp")).map(_.get("fpp").asDouble)
 
-  private def writeShardCapacity(perShard: Long): Unit = {
-    val tmp = Paths.get(root, "snapshots", "bloom-meta.json.tmp")
-    Files.createDirectories(metaPath.getParent)
-    Files.write(tmp, s"""{"per_shard":$perShard,"shard_count":$S,"fpp":$F}""".getBytes)
-    Files.move(tmp, metaPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeShardCapacity(perShard: Long): Unit =
+    AtomicFile.replace(metaPath,
+      s"""{"per_shard":$perShard,"shard_count":$S,"fpp":$F}""".getBytes)
 
   /** Add `urlHashes` (column `url_hash`) as a DELTA: keys already present are
     * filtered out (Bloom fast path + exact anti-join on the maybes), only new
@@ -242,7 +236,7 @@ final class SeenSet(root: String, spark: SparkSession,
     if (!table.exists) {
       // first add: full commit + fresh shards; fix capacity for the chain
       val id = table.commit(newKeys, lineage)
-      val n = table.manifest(id).map(_.get("row_count").asLong).getOrElse(0L)
+      val n = table.rowCount(id).getOrElse(0L)
       val perShard = math.max(1000L, math.max(expectedKeys, 4 * n) / S)
       writeShardCapacity(perShard)
       SeenSet.buildWriteShards(root, id, table.readAt(id), perShard,
@@ -253,12 +247,11 @@ final class SeenSet(root: String, spark: SparkSession,
       // the key table); afterwards filterUnseen sees it as seen again, so the
       // delta below holds only genuinely-new keys
       clearTombstones(newKeys)
-      val delta = filterUnseen(newKeys)
-      val id = table.commitDelta(delta, lineage)
-      val m = table.manifest(id).get
-      val total = m.get("row_count").asLong
+      // the delta's parent: this set's only writer is this call
+      val parent = table.currentSnapshotId.get
+      val id = table.commitDelta(filterUnseen(newKeys), lineage)
+      val total = table.rowCount(id).get
       val chainLen = table.dataDirs(id).size
-      val parent = m.get("parent_id").asLong
       val perShard = shardCapacity.getOrElse(
         math.max(1000L, math.max(expectedKeys, 4 * total) / S))
       val outgrown = total > perShard * S
@@ -282,10 +275,9 @@ final class SeenSet(root: String, spark: SparkSession,
         // each shard task merges the parent generation's shard in place.
         // delta_rows (exact, from the manifest) routes tiny deltas — the
         // steady-state late-epoch case — to the bounded driver fast path.
-        val deltaDir = m.get("data_dir").asText
-        SeenSet.buildWriteShards(root, id, spark.read.parquet(deltaDir),
+        SeenSet.buildWriteShards(root, id, spark.read.parquet(table.deltaDir(id).get),
           perShard, mergeParentId = Some(parent),
-          knownRows = m.get("delta_rows").asLong, shardCount = S, fpp = F)
+          knownRows = table.deltaRows(id).get, shardCount = S, fpp = F)
         id
       }
     }
@@ -303,19 +295,13 @@ final class SeenSet(root: String, spark: SparkSession,
   /** Roll the seen set back to an earlier snapshot (epoch rollback). The
     * Bloom sidecars are per-snapshot, so the pointer flip restores the exact
     * earlier filters too — deletion without tombstones. */
-  def rollbackTo(snapshotId: Long): Unit = {
-    require(table.manifest(snapshotId).isDefined, s"no snapshot $snapshotId")
-    val curTmp = Paths.get(root, "snapshots", "current.tmp")
-    Files.write(curTmp, snapshotId.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(curTmp, Paths.get(root, "snapshots", "current"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  def rollbackTo(snapshotId: Long): Unit = table.rollbackTo(snapshotId)
 
   /** [[filterUnseen]] for a frontier the CALLER HAS PERSISTED (or that is
     * trivially cheap to recompute): additionally prunes the KEYS side of
     * the exact-confirm anti-join. One aggregate job over `frontier` counts
     * the Bloom maybes; when they fit the broadcast cap
-    * (`graft.bcastMaybesMax`), the key table is semi-joined against the
+    * (`graft.bcastSeenMax`), the key table is semi-joined against the
     * BROADCAST maybes — at 10^10 keys the keys are then filtered in their
     * scan instead of exchanging every accumulated key each epoch (~80 GB).
     * The maybes branch re-reads `frontier`, which is why persistence is the
@@ -345,9 +331,9 @@ final class SeenSet(root: String, spark: SparkSession,
             col("url_hash"), lit(root), lit(id)))
         val maybes = frontier.select(col("url_hash")).where(probe)
         val nMaybes =
-          if (rowBound <= SeenSet.maybesBroadcastMax(spark)) rowBound
+          if (rowBound <= SeenSet.broadcastMax(spark)) rowBound
           else maybes.count()
-        if (nMaybes <= SeenSet.maybesBroadcastMax(spark)) {
+        if (nMaybes <= SeenSet.broadcastMax(spark)) {
           val keysPruned = liveKeys().withColumnRenamed("url_hash", "__seen_hash")
             .join(broadcast(maybes), col("__seen_hash") === col("url_hash"),
               "left_semi")
@@ -474,19 +460,15 @@ object SeenSet {
     out.toByteArray
   }
 
+  /** Row-count cap for broadcasting a set of seen-set `url_hash` longs:
+    * the exact tombstone table in [[SeenSet.liveKeys]], and the frontier's
+    * Bloom maybes for the keys-side prune in
+    * [[SeenSet.filterUnseenPersisted]]. Beyond it the join shuffles. */
+  private def broadcastMax(spark: SparkSession): Long =
+    graft.core.GraftConf.longKnob(spark,
+      "graft.bcastSeenMax", "SPARK_GRAFT_BCAST_SEEN_MAX", 4000000L)
+
   // --- sharded cuckoo sidecars (tombstone probe) ---------------------------
-
-  /** Row-count cap for broadcasting the exact tombstone table in
-    * [[SeenSet.liveKeys]]; beyond it the anti-join shuffles. */
-  private[graft] def tombBroadcastMax(spark: SparkSession): Long =
-    graft.core.GraftConf.longKnob(spark,
-      "graft.bcastTombMax", "SPARK_GRAFT_BCAST_TOMB_MAX", 4000000L)
-
-  /** Cap on broadcasting the frontier's Bloom-maybe hash set for the
-    * keys-side prune in [[SeenSet.filterUnseenPersisted]]. */
-  private[graft] def maybesBroadcastMax(spark: SparkSession): Long =
-    graft.core.GraftConf.longKnob(spark,
-      "graft.bcastMaybesMax", "SPARK_GRAFT_BCAST_MAYBES_MAX", 4000000L)
 
   /** One cuckoo shard from ITS (sorted) keys — insertion order fixes the
     * eviction walks, so sorted input makes the bytes path-independent.

@@ -1,8 +1,9 @@
 package graft.frontier
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.TaskContext
+import graft.table.AtomicFile
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -22,10 +23,10 @@ import org.apache.spark.sql.functions.col
   * on the driver from a bounded collect when the caller's exact row bound is
   * small, else by shuffling them to ONE TASK PER SHARD — sorts each shard's
   * keys, hands them to a per-shard function, and writes every one of the S
-  * shards (empty ones too) through [[write]]. Sorting makes order-sensitive
-  * filters (cuckoo eviction walks) byte-identical on either arm and at any
-  * parallelism; the executor arm never moves anything filter-sized through
-  * the driver.
+  * shards (empty ones too) through [[AtomicFile.replace]]. Sorting makes
+  * order-sensitive filters (cuckoo eviction walks) byte-identical on either
+  * arm and at any parallelism; the executor arm never moves anything
+  * filter-sized through the driver.
   */
 private[graft] object ShardFiles {
 
@@ -39,24 +40,12 @@ private[graft] object ShardFiles {
   private val SidecarName = "(?:bloom|cuckoo)-v([0-9]+)[-.].*".r
 
   /** The snapshot id a file under `root/snapshots/` belongs to if it is a
-    * sidecar — a shard file, a leftover tmp of one, or the legacy unsharded
+    * sidecar — a shard file, a leftover [[AtomicFile]] tmp of one
+    * (`<name>.<uuid>.tmp`), or the legacy unsharded
     * `cuckoo-v<id>.bin` — else None. */
   def snapshotOf(fileName: String): Option[Long] = fileName match {
     case SidecarName(id) => Some(id.toLong)
     case _ => None
-  }
-
-  /** Atomic single-shard write: tmp file, then ATOMIC_MOVE. Inside a task
-    * the tmp name carries the task attempt id, so a speculative duplicate
-    * cannot race another attempt's tmp. */
-  private def write(kind: Kind, root: String, id: Long, shard: Int, bytes: Array[Byte]): Unit = {
-    val attempt = Option(TaskContext.get()).map(tc => s".a${tc.taskAttemptId()}").getOrElse("")
-    val dest = path(kind, root, id, shard)
-    val tmp = dest.resolveSibling(s"${dest.getFileName}$attempt.tmp")
-    Files.createDirectories(dest.getParent)
-    Files.write(tmp, bytes)
-    Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
   }
 
   def read(kind: Kind, root: String, id: Long, shard: Int): Array[Byte] =
@@ -111,7 +100,8 @@ private[graft] object ShardFiles {
   private def writeShard(kind: Kind, root: String, id: Long, shard: Int,
       keys: Array[Long], shardBytes: (Int, Array[Long]) => Array[Byte]): Unit = {
     java.util.Arrays.sort(keys)
-    write(kind, root, id, shard, shardBytes(shard, keys))
+    // replace mode: a speculative duplicate attempt writes the same bytes
+    AtomicFile.replace(path(kind, root, id, shard), shardBytes(shard, keys))
   }
 
   /** Routes pre-computed shard ids to their own partition (identity map);

@@ -1,6 +1,8 @@
 package graft.frontier
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Paths}
+
+import graft.table.AtomicFile
 
 /** Per-root record of the sidecar SHARD COUNT — the fan-out of the
   * partitioned Bloom/cuckoo filters under `root/snapshots/`.
@@ -36,30 +38,17 @@ private[graft] object ShardMeta {
   def record(root: String, s: Int): Unit = {
     require(s > 0, s"shard count must be positive: $s")
     val p = path(root)
-    if (Files.exists(p)) {
-      val cur = new String(Files.readAllBytes(p)).trim.toInt
-      if (cur != s) throw new IllegalStateException(
-        s"shard-count mismatch for $root: recorded $cur, build asked $s — " +
-          "sidecar geometry is fixed at first build")
-      return
-    }
-    Files.createDirectories(p.getParent)
-    val tmp = Paths.get(root, "snapshots", s"shard-count.${java.util.UUID.randomUUID}.tmp")
-    Files.write(tmp, s.toString.getBytes)
-    // create-EXCLUSIVE move (no REPLACE_EXISTING): two processes first-
-    // building the same shared root can both pass the not-exists check
-    // above; last-writer-wins would silently record mixed geometry — the
-    // exact corruption the fail-fast exists to prevent. The loser re-reads
-    // and compares instead (ADVICE r5).
-    try Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        val cur = new String(Files.readAllBytes(p)).trim.toInt
-        if (cur != s) throw new IllegalStateException(
-          s"shard-count mismatch for $root: concurrently recorded $cur, " +
-            s"build asked $s — sidecar geometry is fixed at first build")
-    }
+    // create-EXCLUSIVE write: two processes first-building the same shared
+    // root can both pass the not-exists check; last-writer-wins would
+    // silently record mixed geometry — the exact corruption the fail-fast
+    // exists to prevent. The loser keeps the winner's bytes and compares.
+    if (!Files.exists(p))
+      try AtomicFile.createExclusive(p, s.toString.getBytes)
+      catch { case _: FileAlreadyExistsException => () }
+    val cur = new String(Files.readAllBytes(p)).trim.toInt
+    if (cur != s) throw new IllegalStateException(
+      s"shard-count mismatch for $root: recorded $cur, build asked $s — " +
+        "sidecar geometry is fixed at first build")
     cache.put(root, s)
   }
 

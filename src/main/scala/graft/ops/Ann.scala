@@ -37,6 +37,26 @@ object Ann {
   /** `sqrt(dot(v, v))` — the hoisted norm factor of [[cosineNormed]]. */
   def norm(v: Column): Column = sqrt(dot(v, v))
 
+  /** The query side of every search: `(q_id, q_vec, <key columns>, q_norm)`
+    * — ids renamed, vectors cast to double, `withKey` adding the join key
+    * (a probed cell, an LSH bucket; identity for brute force) before the
+    * hoisted norm. */
+  private def queryVectors(queries: DataFrame, qidCol: String, vecCol: String)(
+      withKey: DataFrame => DataFrame = identity): DataFrame =
+    withKey(queries.select(col(qidCol).as("q_id"),
+      col(vecCol).cast("array<double>").as("q_vec")))
+      .withColumn("q_norm", norm(col("q_vec")))
+
+  /** Score the candidate pairs of `pairs` (a join of a `(nn_id, c_vec,
+    * c_norm)` corpus side with [[queryVectors]]) and keep each query's top
+    * `k` by `(cos desc, nn_id)`. */
+  private def rankTopK(pairs: DataFrame, k: Int): DataFrame = {
+    val scored = pairs.select(col("q_id"), col("nn_id"),
+      cosineNormed(col("q_vec"), col("c_vec"), col("q_norm"), col("c_norm")).as("cos"))
+    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("nn_id"))
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
   /** Exact top-k cosine neighbors for each query row.
     *
     * @param corpus  (idCol, vecCol) table — scanned once, never shuffled
@@ -55,13 +75,7 @@ object Ann {
     val c = graft.core.SmallScan.spread(
       corpus.select(col(idCol).as("nn_id"), col(vecCol).cast("array<double>").as("c_vec")))
       .withColumn("c_norm", norm(col("c_vec")))
-    val q = queries.select(col(qidCol).as("q_id"), col(vecCol).cast("array<double>").as("q_vec"))
-      .withColumn("q_norm", norm(col("q_vec")))
-    val scored = c.crossJoin(broadcast(q))
-      .select(col("q_id"), col("nn_id"),
-        cosineNormed(col("q_vec"), col("c_vec"), col("q_norm"), col("c_norm")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("nn_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    rankTopK(c.crossJoin(broadcast(queryVectors(queries, qidCol, vecCol)())), k)
   }
 
   /** Deterministic trainless IVF: `nCells` seeded pseudo-random unit-ish
@@ -119,15 +133,9 @@ object Ann {
       col(vecCol).cast("array<double>").as("c_vec"))
       .withColumn("cell", ivfCell(col("c_vec"), dim, nCells))
       .withColumn("c_norm", norm(col("c_vec")))
-    val q = queries.select(col(qidCol).as("q_id"),
-      col(vecCol).cast("array<double>").as("q_vec"))
-      .withColumn("cell", explode(ivfProbeCells(col("q_vec"), dim, nCells, nProbe)))
-      .withColumn("q_norm", norm(col("q_vec")))
-    val scored = c.join(broadcast(q), "cell")
-      .select(col("q_id"), col("nn_id"),
-        cosineNormed(col("q_vec"), col("c_vec"), col("q_norm"), col("c_norm")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("nn_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    val q = queryVectors(queries, qidCol, vecCol)(
+      _.withColumn("cell", explode(ivfProbeCells(col("q_vec"), dim, nCells, nProbe))))
+    rankTopK(c.join(broadcast(q), "cell"), k)
   }
 
   /** The IVF 100-TB path, part 1: write the corpus PARTITIONED BY its IVF
@@ -165,20 +173,14 @@ object Ann {
       k: Int): DataFrame = {
     val spark = queries.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    val q = queries.select(col(qidCol).as("q_id"),
-      col(vecCol).cast("array<double>").as("q_vec"))
-      .withColumn("cell", explode(ivfProbeCells(col("q_vec"), dim, nCells, nProbe)))
-      .withColumn("q_norm", norm(col("q_vec")))
+    val q = queryVectors(queries, qidCol, vecCol)(
+      _.withColumn("cell", explode(ivfProbeCells(col("q_vec"), dim, nCells, nProbe))))
     val probedCells = q.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
     val c = spark.read.parquet(path)
       .filter(col("cell").isin(probedCells: _*))
       .withColumn("c_norm", norm(col("c_vec")))
-    val scored = c.join(broadcast(q), "cell")
-      .select(col("q_id"), col("nn_id"),
-        cosineNormed(col("q_vec"), col("c_vec"), col("q_norm"), col("c_norm")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("nn_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    rankTopK(c.join(broadcast(q), "cell"), k)
   }
 
   /** Random-hyperplane LSH signature: `nBits` sign bits packed into a long.
@@ -217,14 +219,8 @@ object Ann {
       col(vecCol).cast("array<double>").as("c_vec"))
       .withColumn("bucket", rhpSignature(col("c_vec"), dim, nBits))
       .withColumn("c_norm", norm(col("c_vec")))
-    val q = queries.select(col(qidCol).as("q_id"),
-      col(vecCol).cast("array<double>").as("q_vec"))
-      .withColumn("bucket", rhpSignature(col("q_vec"), dim, nBits))
-      .withColumn("q_norm", norm(col("q_vec")))
-    val scored = c.join(broadcast(q), "bucket")
-      .select(col("q_id"), col("nn_id"),
-        cosineNormed(col("q_vec"), col("c_vec"), col("q_norm"), col("c_norm")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("nn_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    val q = queryVectors(queries, qidCol, vecCol)(
+      _.withColumn("bucket", rhpSignature(col("q_vec"), dim, nBits)))
+    rankTopK(c.join(broadcast(q), "bucket"), k)
   }
 }

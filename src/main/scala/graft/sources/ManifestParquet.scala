@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, 
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** MANIFEST-BACKED parquet catalog for int-partitioned layouts — the
   * Iceberg/SnapshotTable pattern applied to a `col=<k>/` directory tree:
@@ -77,10 +77,7 @@ object ManifestParquet {
           finally leaves.close()
         }
     } finally dirs.close()
-    val tmp = Paths.get(root, s"$ManifestName.tmp")
-    Files.write(tmp, mapper.writeValueAsBytes(doc))
-    Files.move(tmp, manifestPath(root), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    graft.table.AtomicFile.replace(manifestPath(root), mapper.writeValueAsBytes(doc))
   }
 
   /** The layout as a DataFrame planned ENTIRELY from the manifest: data

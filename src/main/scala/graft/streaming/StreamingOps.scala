@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -30,32 +30,44 @@ object StreamingOps {
     * micro-batch costs O(budget) memory, never O(group). */
   def politenessStream(frontier: Dataset[FrontierRow], budgetPerHost: Long): Dataset[ScheduledRow] = {
     import frontier.sparkSession.implicits._
-    frontier
-      .groupByKey(_.host)
-      .flatMapGroupsWithState[HostBudgetState, ScheduledRow](
+    budgeted(frontier, budgetPerHost)(_.host, byUrlRank) { (host, r, slot) =>
+      ScheduledRow(r.url, host, r.priority, slot)
+    }
+  }
+
+  /** The scheduler's rank over frontier rows: smaller = better (priority
+    * desc, url asc). */
+  private val byUrlRank = Ordering.by[FrontierRow, (Double, String)](r => (-r.priority, r.url))
+
+  /** Per-group lifetime budget: across the stream's whole lifetime each
+    * group emits at most `budget` rows, best `rank` first within a batch,
+    * numbered 1, 2, … per group (`emit(group, row, slot)`). State is one
+    * counter per group; per-batch memory is a bounded heap of the remaining
+    * budget, never the group. */
+  private def budgeted[R, K: Encoder, O: Encoder](rows: Dataset[R], budget: Long)(
+      groupOf: R => K, rank: Ordering[R])(emit: (K, R, Long) => O): Dataset[O] = {
+    import rows.sparkSession.implicits._
+    rows
+      .groupByKey(groupOf)
+      .flatMapGroupsWithState[HostBudgetState, O](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (host, rows, state: GroupState[HostBudgetState]) =>
+        case (group, batch, state: GroupState[HostBudgetState]) =>
           val emitted = state.getOption.map(_.emitted).getOrElse(0L)
-          // clamp BEFORE narrowing: budgetPerHost = Long.MaxValue
-          // ("unlimited") would wrap negative in toInt and silently emit
-          // zero rows for every host (ADVICE r5)
-          val take = math.min(Int.MaxValue.toLong,
-            math.max(0L, budgetPerHost - emitted)).toInt
-          // rank key: smaller = better (priority desc, url asc). The max-heap
-          // root is then the worst kept row — the eviction victim.
-          val byRank = Ordering.by[FrontierRow, (Double, String)](
-            r => (-r.priority, r.url))
-          val heap = new scala.collection.mutable.PriorityQueue[FrontierRow]()(byRank)
-          rows.foreach { r =>
+          // clamp BEFORE narrowing: budget = Long.MaxValue ("unlimited")
+          // would wrap negative in toInt and silently emit zero rows for
+          // every group (ADVICE r5)
+          val take = math.min(Int.MaxValue.toLong, math.max(0L, budget - emitted)).toInt
+          // the max-heap root is the worst kept row — the eviction victim
+          val heap = new scala.collection.mutable.PriorityQueue[R]()(rank)
+          batch.foreach { r =>
             if (take > 0) {
               if (heap.size < take) heap.enqueue(r)
-              else if (byRank.lt(r, heap.head)) { heap.dequeue(); heap.enqueue(r) }
+              else if (rank.lt(r, heap.head)) { heap.dequeue(); heap.enqueue(r) }
             }
           }
-          val kept: Seq[FrontierRow] = heap.dequeueAll
+          val kept: Seq[R] = heap.dequeueAll
           val chosen = kept.reverse // best-first emission order
-            .zipWithIndex
-            .map { case (r, i) => ScheduledRow(r.url, host, r.priority, emitted + i + 1) }
+            .zipWithIndex.map { case (r, i) => emit(group, r, emitted + i + 1) }
           state.update(HostBudgetState(emitted + chosen.size))
           chosen.iterator
       }
@@ -79,17 +91,21 @@ object StreamingOps {
   def seenDedupStream(frontier: Dataset[FrontierRow])
       (hashOf: FrontierRow => Long): Dataset[FrontierRow] = {
     import frontier.sparkSession.implicits._
-    val byRank = Ordering.by[FrontierRow, (Double, String)](r => (-r.priority, r.url))
-    frontier
-      .groupByKey(hashOf)
-      .flatMapGroupsWithState[SeenState, FrontierRow](
+    firstPerKey(frontier)(hashOf, byUrlRank)
+  }
+
+  /** First arrival per key across the stream's lifetime wins; within its
+    * batch the best-`rank` row is the witness. One boolean of state per key. */
+  private def firstPerKey[R: Encoder, K: Encoder](rows: Dataset[R])(
+      keyOf: R => K, rank: Ordering[R]): Dataset[R] = {
+    import rows.sparkSession.implicits._
+    rows
+      .groupByKey(keyOf)
+      .flatMapGroupsWithState[SeenState, R](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, rows, state: GroupState[SeenState]) =>
+        case (_, batch, state: GroupState[SeenState]) =>
           if (state.exists) Iterator.empty
-          else {
-            state.update(SeenState(seen = true))
-            Iterator.single(rows.min(byRank))
-          }
+          else { state.update(SeenState(seen = true)); Iterator.single(batch.min(rank)) }
       }
   }
 
@@ -139,40 +155,10 @@ object StreamingOps {
       }
     val rank = Ordering.by[NormalizedRow, (Double, Long)](
       r => (-r.priority, r.url_hash))
-    // stage 1: first arrival per url_hash wins, best-rank witness in-batch
-    val deduped = norm
-      .groupByKey(_.url_hash)
-      .flatMapGroupsWithState[SeenState, NormalizedRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, rows, state: GroupState[SeenState]) =>
-          if (state.exists) Iterator.empty
-          else { state.update(SeenState(seen = true)); Iterator.single(rows.min(rank)) }
-      }
+    // stage 1: first arrival per url_hash wins, best-rank witness in-batch;
     // stage 2: per-host lifetime budget, bounded heap, batch-identical rank
-    deduped
-      .groupByKey(_.host)
-      .flatMapGroupsWithState[HostBudgetState, ScheduledRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (host, rows, state: GroupState[HostBudgetState]) =>
-          val emitted = state.getOption.map(_.emitted).getOrElse(0L)
-          // clamp BEFORE narrowing: budgetPerHost = Long.MaxValue
-          // ("unlimited") would wrap negative in toInt and silently emit
-          // zero rows for every host (ADVICE r5)
-          val take = math.min(Int.MaxValue.toLong,
-            math.max(0L, budgetPerHost - emitted)).toInt
-          val heap = new scala.collection.mutable.PriorityQueue[NormalizedRow]()(rank)
-          rows.foreach { r =>
-            if (take > 0) {
-              if (heap.size < take) heap.enqueue(r)
-              else if (rank.lt(r, heap.head)) { heap.dequeue(); heap.enqueue(r) }
-            }
-          }
-          val kept: Seq[NormalizedRow] = heap.dequeueAll
-          val chosen = kept.reverse.zipWithIndex.map { case (r, i) =>
-            ScheduledRow(r.canon_url, host, r.priority, emitted + i + 1)
-          }
-          state.update(HostBudgetState(emitted + chosen.size))
-          chosen.iterator
-      }
+    budgeted(firstPerKey(norm)(_.url_hash, rank), budgetPerHost)(_.host, rank) {
+      (host, r, slot) => ScheduledRow(r.canon_url, host, r.priority, slot)
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.table
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import graft.frontier.ShardFiles
 
@@ -21,12 +21,14 @@ import scala.jdk.CollectionConverters._
   *   <root>/data/s<snapshotId>/...parquet      (immutable per-snapshot data dirs)
   *   <root>/snapshots/v<id>.json               (manifest: files, counts, lineage)
   *   <root>/snapshots/current                  (atomic pointer, rename-committed)
+  *   <root>/stages/e<epoch>-<stage>            (resume markers)
   * }}}
   *
   * No Iceberg jars exist in this zero-egress image (SURVEY §7 environment
   * facts), so this layer substitutes for them behind one class; the commit
-  * protocol is the same idea (manifest written to a temp name, then an
-  * atomic rename flips `current`). The reference's completion markers
+  * protocol is the same idea (manifest created exclusively, then an atomic
+  * rename flips `current` — one locked path, [[publish]], with every file
+  * written through [[AtomicFile]]). The reference's completion markers
   * (`slurm_check_completed.py:8-41`) map to snapshot ids; its resume-at-
   * record-index (`retry_warc.py:80-101`) maps to idempotent re-runs of an
   * uncommitted snapshot — a crashed job leaves `current` untouched.
@@ -51,15 +53,37 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     else None
   }
 
+  private def manifestPath(id: Long): Path = snapDir.resolve(s"v$id.json")
+
   def manifest(id: Long): Option[JsonNode] = {
-    val p = snapDir.resolve(s"v$id.json")
+    val p = manifestPath(id)
     if (Files.exists(p)) Some(mapper.readTree(p.toFile)) else None
   }
+
+  // --- typed manifest reads (callers never parse manifest JSON) -------------
+
+  /** Exact row count of snapshot `id` — its whole delta chain — known
+    * without a Spark job. */
+  def rowCount(id: Long): Option[Long] = manifest(id).map(_.get("row_count").asLong)
+
+  /** [[rowCount]] of the current snapshot. */
+  def currentRowCount: Option[Long] = currentSnapshotId.flatMap(rowCount)
+
+  /** Rows snapshot `id` itself added (all of them for a full commit). */
+  def deltaRows(id: Long): Option[Long] = manifest(id).map(_.get("delta_rows").asLong)
+
+  /** The data directory holding only snapshot `id`'s own rows (for a delta
+    * commit: the delta, without its parent chain). */
+  def deltaDir(id: Long): Option[String] = manifest(id).map(_.get("data_dir").asText)
+
+  /** The Spark schema (JSON) recorded for snapshot `id`. */
+  private def schemaJson(id: Long): Option[String] =
+    manifest(id).filter(_.has("schema_json")).map(_.get("schema_json").asText)
 
   /** Highest manifest id on disk. May exceed [[currentSnapshotId]]: after a
     * rollback, or when a pipelined EARLIER epoch's commit lands after a later
     * one (the pointer never regresses to an older epoch — see
-    * [[commitInternal]]). New ids are allocated past this, so rolled-back or
+    * [[publish]]). New ids are allocated past this, so rolled-back or
     * out-of-order snapshots are never overwritten. */
   private def maxManifestId: Option[Long] =
     if (!Files.exists(snapDir)) None
@@ -140,7 +164,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
       // lazily shed expired entries (existence check, no JSON read); the
       // `<= cur` guard keeps rollback semantics identical to the old scan,
       // which never looked above the current ceiling
-      val live = hits.filter(h => Files.exists(snapDir.resolve(s"v$h.json")))
+      val live = hits.filter(h => Files.exists(manifestPath(h)))
       if (live.size != hits.size) idx.byKV((key, value)) = live
       // verify the hit's manifest still carries the requested key/value
       // (one JSON read per RETURNED hit only): if another process wiped and
@@ -155,113 +179,58 @@ final class SnapshotTable(val root: String, spark: SparkSession,
 
   private def commitInternal(df: DataFrame, lineage: Map[String, String],
       partitionBy: Seq[String], delta: Boolean): Long =
-    // serialize commits per table ROOT (not per instance): pipelined epochs
-    // commit to the same table from different SnapshotTable instances, and
-    // the id = current+1 / pointer flip sequence must not interleave
-    SnapshotTable.rootLock(root).synchronized {
-    Files.createDirectories(snapDir)
-    val parent = currentSnapshotId
-    // allocate past the highest manifest ever written, not past `current`:
-    // after a rollback (current < max) a naive current+1 would collide with
-    // and clobber an existing snapshot's manifest
-    val id = math.max(parent.getOrElse(0L), maxManifestId.getOrElse(0L)) + 1L
-    // a newly-allocated id at or below the lineage index's watermark means
-    // the root was WIPED and rebuilt in place (ids restarting from 1): the
-    // index describes a dead world — reset it before this commit lands
-    locally {
-      val idx = SnapshotTable.lineageIndex(root)
-      idx.synchronized {
-        if (id <= idx.scanned) { idx.scanned = 0L; idx.byKV.clear() }
+    publish(lineage) { (m, id, parent) =>
+      val dir = dataDir(id)
+      val writer = df.write.mode(SaveMode.Overwrite)
+      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+        .parquet(dir.toString)
+      // per-partition (per-file) lineage & metrics straight from the parquet
+      // footers — a driver-side metadata read, not a Spark job (the commit
+      // path is on the serial critical path of every epoch)
+      val files = Files.walk(dir).iterator().asScala
+        .filter(p => p.toString.endsWith(".parquet"))
+        .map(_.toString).toSeq.sorted
+      val fileCounts = files.map(f => f -> footerRowCount(f))
+      val deltaRows = fileCounts.map(_._2).sum
+      val parentRows = if (delta) parent.flatMap(rowCount).getOrElse(0L) else 0L
+      m.put("row_count", parentRows + deltaRows)
+      m.put("delta_rows", deltaRows)
+      m.put("data_dir", dir.toString)
+      // schema recorded so an all-empty snapshot stays readable: a
+      // partitioned write of zero rows produces NO part files, which would
+      // otherwise make the read un-inferable (a drained crawl epoch is
+      // legitimate state)
+      m.put("schema_json", df.schema.json)
+      if (delta) {
+        val dd: ArrayNode = m.putArray("data_dirs")
+        (parent.map(dataDirs).getOrElse(Nil) :+ dir.toString).foreach(dd.add)
+      }
+      // per-partition (per-file) lineage + metrics (north rule)
+      val fa: ArrayNode = m.putArray("files")
+      fileCounts.foreach { case (f, n) =>
+        val o = fa.addObject()
+        o.put("path", f)
+        o.put("rows", n)
       }
     }
-    val dir = dataDir(id)
-    val writer = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(dir.toString)
 
-    // per-partition (per-file) lineage & metrics straight from the parquet
-    // footers — a driver-side metadata read, not a Spark job (the commit path
-    // is on the serial critical path of every epoch)
-    val files = Files.walk(dir).iterator().asScala
-      .filter(p => p.toString.endsWith(".parquet"))
-      .map(_.toString).toSeq.sorted
-    val fileCounts = files.map(f => f -> footerRowCount(f))
-    val deltaRows = fileCounts.map(_._2).sum
-    val parentDirs = if (delta) parent.map(dataDirs).getOrElse(Nil) else Nil
-    val parentRows =
-      if (delta)
-        parent.flatMap(manifest).map(_.get("row_count").asLong).getOrElse(0L)
-      else 0L
-    val rowCount = parentRows + deltaRows
-
-    val m: ObjectNode = mapper.createObjectNode()
-    m.put("snapshot_id", id)
-    m.put("parent_id", parent.getOrElse(0L))
-    m.put("row_count", rowCount)
-    m.put("delta_rows", deltaRows)
-    m.put("data_dir", dir.toString)
-    // schema recorded so an all-empty snapshot stays readable: a partitioned
-    // write of zero rows produces NO part files, which would otherwise make
-    // the read un-inferable (a drained crawl epoch is legitimate state)
-    m.put("schema_json", df.schema.json)
-    if (delta) {
-      val dd: ArrayNode = m.putArray("data_dirs")
-      (parentDirs :+ dir.toString).foreach(dd.add)
-    }
-    // per-partition (per-file) lineage + metrics (north rule)
-    val fa: ArrayNode = m.putArray("files")
-    fileCounts.foreach { case (f, n) =>
-      val o = fa.addObject()
-      o.put("path", f)
-      o.put("rows", n)
-    }
-    val lin = m.putObject("lineage")
-    lineage.foreach { case (k, v) => lin.put(k, v) }
-
-    val tmp = snapDir.resolve(s"v$id.json.tmp")
-    Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(m))
-    Files.move(tmp, snapDir.resolve(s"v$id.json"), StandardCopyOption.ATOMIC_MOVE)
-
-    // For epochOrdered (sink) tables only: `current` never regresses to an
-    // OLDER epoch — pipelined epochs commit out of completion order, and a
-    // reader of `current` must see the newest epoch's snapshot, not the
-    // last-landed one. A commit whose epoch lineage is older than the
-    // current snapshot's is fully recorded (manifest + data; readable via
-    // readAt/snapshotForLineage) but leaves the pointer.
-    def epochOf(sid: Long): Option[Long] =
-      manifest(sid).flatMap { mm =>
-        if (mm.has("lineage") && mm.get("lineage").has("epoch"))
-          scala.util.Try(mm.get("lineage").get("epoch").asText.toLong).toOption
-        else None
+  /** Manifest-only commit of an EMPTY snapshot typed like the current one
+    * (its recorded schema): no Spark job, no data files — [[readAt]] serves
+    * `row_count == 0` manifests straight from `schema_json`. For sink tables
+    * in an epoch that provably produced nothing (a drained crawl), where
+    * even a zero-row distributed write costs a job on the serial epoch
+    * floor. None, and nothing written, when there is no current snapshot
+    * with a recorded schema to copy (the caller takes its general path,
+    * which records one). */
+  def commitEmpty(lineage: Map[String, String] = Map.empty): Option[Long] =
+    currentSnapshotId.flatMap(schemaJson).map { schema =>
+      publish(lineage) { (m, id, _) =>
+        m.put("row_count", 0L)
+        m.put("delta_rows", 0L)
+        m.put("data_dir", dataDir(id).toString)
+        m.put("schema_json", schema)
+        m.putArray("files")
       }
-    val regresses = epochOrdered && (for {
-      cur <- parent
-      curEpoch <- epochOf(cur)
-      newEpoch <- lineage.get("epoch").flatMap(s => scala.util.Try(s.toLong).toOption)
-    } yield newEpoch < curEpoch).getOrElse(false)
-    if (!regresses) {
-      val curTmp = snapDir.resolve("current.tmp")
-      Files.write(curTmp, id.toString.getBytes(StandardCharsets.UTF_8))
-      Files.move(curTmp, snapDir.resolve("current"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
-    id
-  }
-
-  /** Manifest-only commit of an EMPTY snapshot with a known schema: no
-    * Spark job, no data files — [[readAt]] serves `row_count == 0`
-    * manifests straight from `schema_json`. For sink tables in an epoch
-    * that produced nothing (a drained crawl), where even a zero-row
-    * distributed write costs a job on the serial epoch floor. */
-  def commitEmpty(schemaJson: String,
-      lineage: Map[String, String] = Map.empty): Long =
-    commitManifestOnly(lineage) { (m, id, _) =>
-      m.put("row_count", 0L)
-      m.put("delta_rows", 0L)
-      m.put("data_dir", dataDir(id).toString)
-      m.put("schema_json", schemaJson)
-      m.putArray("files")
-      ()
     }
 
   /** Manifest-only commit that CARRIES the parent snapshot's content
@@ -271,63 +240,76 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * look its snapshot up by lineage). [[expireSnapshots]] keeps the
     * carried dirs alive while any referencing manifest is retained. */
   def commitCarry(lineage: Map[String, String] = Map.empty): Long =
-    commitManifestOnly(lineage) { (m, _, parent) =>
+    publish(lineage) { (m, _, parent) =>
       val pm = parent.flatMap(manifest).getOrElse(
         sys.error(s"carry commit requires a parent snapshot in $root"))
       m.put("row_count", pm.get("row_count").asLong)
       m.put("delta_rows", 0L)
       m.put("data_dir", pm.get("data_dir").asText)
-      if (pm.has("data_dirs"))
-        m.set[JsonNode]("data_dirs", pm.get("data_dirs").deepCopy[JsonNode]())
-      if (pm.has("schema_json"))
-        m.put("schema_json", pm.get("schema_json").asText)
-      if (pm.has("files"))
-        m.set[JsonNode]("files", pm.get("files").deepCopy[JsonNode]())
-      ()
+      Seq("data_dirs", "schema_json", "files").filter(pm.has).foreach(f =>
+        m.set[JsonNode](f, pm.get(f).deepCopy[JsonNode]()))
     }
 
-  /** Shared manifest-write + pointer-flip protocol of the job-free commits
-    * (same locking, id allocation, wipe-guard and epoch-ordering rules as
-    * [[commitInternal]]). */
-  private def commitManifestOnly(lineage: Map[String, String])(
-      populate: (ObjectNode, Long, Option[Long]) => Unit): Long =
+  /** THE publish path — every commit goes through it, under the per-root
+    * lock (pipelined epochs commit to one table from different instances,
+    * so the sequence below must not interleave):
+    *   1. allocate the id past the highest manifest ever written, not past
+    *      `current` — after a rollback (current < max) current+1 would
+    *      collide with an existing snapshot;
+    *   2. wipe guard: an id at or below the lineage index's watermark means
+    *      the root was WIPED and rebuilt in place (ids restarting from 1),
+    *      so the index describes a dead world — reset it;
+    *   3. `content(manifest, id, parent)` adds the content fields (a data
+    *      commit writes its parquet here first);
+    *   4. the manifest is created EXCLUSIVELY — a snapshot id is never
+    *      overwritten, by this process or another one sharing the root;
+    *   5. the `current` pointer flips, unless this is an epoch-ordered
+    *      table and the commit's epoch is older than the current one's —
+    *      pipelined epochs land out of completion order, and a reader of
+    *      `current` must see the newest epoch. Such a commit is still fully
+    *      recorded (readable via [[readAt]] / [[snapshotForLineage]]).
+    * A crash before 4 leaves only an orphan data dir (a re-run overwrites
+    * it); a crash between 4 and 5 leaves a manifest the pointer skips. */
+  private def publish(lineage: Map[String, String])(
+      content: (ObjectNode, Long, Option[Long]) => Unit): Long =
     SnapshotTable.rootLock(root).synchronized {
-      Files.createDirectories(snapDir)
       val parent = currentSnapshotId
       val id = math.max(parent.getOrElse(0L), maxManifestId.getOrElse(0L)) + 1L
-      locally {
-        val idx = SnapshotTable.lineageIndex(root)
-        idx.synchronized {
-          if (id <= idx.scanned) { idx.scanned = 0L; idx.byKV.clear() }
-        }
+      val idx = SnapshotTable.lineageIndex(root)
+      idx.synchronized {
+        if (id <= idx.scanned) { idx.scanned = 0L; idx.byKV.clear() }
       }
       val m: ObjectNode = mapper.createObjectNode()
       m.put("snapshot_id", id)
       m.put("parent_id", parent.getOrElse(0L))
-      populate(m, id, parent)
+      content(m, id, parent)
       val lin = m.putObject("lineage")
       lineage.foreach { case (k, v) => lin.put(k, v) }
-      val tmp = snapDir.resolve(s"v$id.json.tmp")
-      Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(m))
-      Files.move(tmp, snapDir.resolve(s"v$id.json"), StandardCopyOption.ATOMIC_MOVE)
-      def epochOf(sid: Long): Option[Long] =
-        manifest(sid).flatMap { mm =>
-          if (mm.has("lineage") && mm.get("lineage").has("epoch"))
-            scala.util.Try(mm.get("lineage").get("epoch").asText.toLong).toOption
-          else None
-        }
+      AtomicFile.createExclusive(manifestPath(id),
+        mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(m))
       val regresses = epochOrdered && (for {
         cur <- parent
         curEpoch <- epochOf(cur)
-        newEpoch <- lineage.get("epoch").flatMap(s => scala.util.Try(s.toLong).toOption)
+        newEpoch <- lineage.get("epoch").flatMap(_.toLongOption)
       } yield newEpoch < curEpoch).getOrElse(false)
-      if (!regresses) {
-        val curTmp = snapDir.resolve("current.tmp")
-        Files.write(curTmp, id.toString.getBytes(StandardCharsets.UTF_8))
-        Files.move(curTmp, snapDir.resolve("current"),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      }
+      if (!regresses) setCurrent(id)
       id
+    }
+
+  private def epochOf(id: Long): Option[Long] =
+    manifest(id).flatMap(m => Option(m.get("lineage")).flatMap(l => Option(l.get("epoch"))))
+      .flatMap(_.asText.toLongOption)
+
+  private def setCurrent(id: Long): Unit =
+    AtomicFile.replace(snapDir.resolve("current"), id.toString.getBytes(StandardCharsets.UTF_8))
+
+  /** Point `current` back at an earlier snapshot (epoch rollback), under
+    * the same lock and through the same pointer write as a commit. Later
+    * snapshots stay on disk; the next commit allocates past them. */
+  def rollbackTo(id: Long): Unit =
+    SnapshotTable.rootLock(root).synchronized {
+      require(Files.exists(manifestPath(id)), s"no snapshot $id in $root")
+      setCurrent(id)
     }
 
   /** Expire all but the newest `keepLast` snapshots (Iceberg
@@ -413,18 +395,14 @@ final class SnapshotTable(val root: String, spark: SparkSession,
 
   // --- stage markers (mid-epoch resume) -------------------------------------
 
-  /** Record that a named intra-job stage finished (atomic marker file). */
-  def markStage(epoch: Long, stage: String): Unit = {
-    val p = Paths.get(root, "stages")
-    Files.createDirectories(p)
-    val tmp = p.resolve(s"e$epoch-$stage.tmp")
-    Files.write(tmp, Array.emptyByteArray)
-    Files.move(tmp, p.resolve(s"e$epoch-$stage"), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def marker(epoch: Long, stage: String): Path =
+    Paths.get(root, "stages", s"e$epoch-$stage")
 
-  def stageDone(epoch: Long, stage: String): Boolean =
-    Files.exists(Paths.get(root, "stages", s"e$epoch-$stage"))
+  /** Record that a named intra-job stage finished (atomic marker file). */
+  def markStage(epoch: Long, stage: String): Unit =
+    AtomicFile.replace(marker(epoch, stage), Array.emptyByteArray)
+
+  def stageDone(epoch: Long, stage: String): Boolean = Files.exists(marker(epoch, stage))
 }
 
 object SnapshotTable {

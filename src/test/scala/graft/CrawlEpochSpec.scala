@@ -502,4 +502,46 @@ class CrawlEpochSpec extends SparkSpecBase {
     assert(schedB.currentSnapshotId.get === schedSnapshotBefore, "schedule stage was redone")
     assert(outSorted(rootA) === outSorted(rootB), "resumed run diverged from clean run")
   }
+
+  test("mid-epoch resume at the publish boundaries: manifest without pointer flip, pointer without marker") {
+    val (pages, images, seeds, robots) = corpus()
+    def crawl(root: String, epoch: Long) =
+      CrawlEpoch.run(root, spark, pages, images, Some(robots), budgetPerHost = 5, epoch = epoch)
+    def state(root: String) = (
+      outSorted(root),
+      CrawlEpoch.frontierTable(root, spark).read()
+        .select(col("url"), col("priority"), col("retries"))
+        .collect().map(_.toString).sorted.toSeq,
+      new graft.frontier.SeenSet(s"$root/seen", spark)
+        .keys().collect().map(_.getLong(0)).sorted.toSeq)
+    val clean = Files.createTempDirectory("crawlPubClean").toString
+    CrawlEpoch.seed(clean, spark, seeds)
+    crawl(clean, 1)
+    val cleanMetrics = crawl(clean, 2)
+    val cleanState = state(clean)
+    // A crash inside epoch 2's publish of `table`, simulated by editing files
+    // after a complete epoch 2. The marker is always lost; with
+    // `flipped = false` the pointer is also put back to epoch 1's snapshot,
+    // leaving epoch 2's manifest on disk unreferenced.
+    for (table <- Seq("out", "frontier"); flipped <- Seq(false, true)) {
+      val label = s"$table stage, " +
+        (if (flipped) "pointer flipped, marker missing" else "manifest written, pointer not flipped")
+      val root = Files.createTempDirectory(s"crawlPub-$table").toString
+      val pointer = java.nio.file.Paths.get(root, table, "snapshots", "current")
+      CrawlEpoch.seed(root, spark, seeds)
+      crawl(root, 1)
+      val epoch1Pointer = Files.readAllBytes(pointer)
+      crawl(root, 2)
+      val orphan = new SnapshotTable(s"$root/$table", spark).currentSnapshotId.get
+      if (!flipped) Files.write(pointer, epoch1Pointer)
+      Files.delete(java.nio.file.Paths.get(root, table, "stages", s"e2-$table"))
+      val resumed = crawl(root, 2)
+      assert(resumed === cleanMetrics, s"$label: resumed metrics differ from the clean run")
+      assert(state(root) === cleanState, s"$label: resumed state differs from the clean run")
+      val t = new SnapshotTable(s"$root/$table", spark)
+      assert(t.stageDone(2, table), s"$label: marker not rewritten")
+      assert(t.currentSnapshotId.exists(_ > orphan),
+        s"$label: the redone stage must publish past the unreferenced manifest")
+    }
+  }
 }

@@ -253,7 +253,7 @@ class FrontierSpec extends SparkSpecBase {
       assert(bounded.as[Long].collect().sorted.toSeq === lazyRows)
       assert(bounded.queryExecution.executedPlan.toString.contains("LeftSemi"))
       // oversized maybe set: falls back to the unpruned plan, same rows
-      spark.conf.set("graft.bcastMaybesMax", "1")
+      spark.conf.set("graft.bcastSeenMax", "1")
       try {
         val fb = seen.filterUnseenPersisted(frontier)
         assert(fb.as[Long].collect().sorted.toSeq === lazyRows)
@@ -263,7 +263,7 @@ class FrontierSpec extends SparkSpecBase {
         val fb2 = seen.filterUnseenPersisted(frontier, rowBound = 5000L)
         assert(fb2.as[Long].collect().sorted.toSeq === lazyRows)
         assert(!fb2.queryExecution.executedPlan.toString.contains("LeftSemi"))
-      } finally spark.conf.unset("graft.bcastMaybesMax")
+      } finally spark.conf.unset("graft.bcastSeenMax")
     } finally frontier.unpersist(blocking = false)
   }
 
