@@ -1,12 +1,19 @@
 package graft
 
+import graft.crawl.PageStore
 import graft.frontier.{Scheduler, SeenSet}
 import graft.functions.GraftFunctions
+
+import org.apache.hadoop.fs.FileUtil
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
+
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 /** Crawl-stage operators under the DuckDB oracle: URL canonicalization +
   * frontier scheduling (dedupe → robots → politeness window) and the image
@@ -25,65 +32,61 @@ object CrawlQueries {
     * an existence-only marker would silently reuse state built from the
     * old data and fail the oracle compare. */
   private def sourceFingerprint(dir: String): String = {
-    val p = java.nio.file.Paths.get(dir, "documents.parquet")
-    if (!java.nio.file.Files.exists(p)) return "absent"
+    val p = Paths.get(dir, "documents.parquet")
+    if (!Files.exists(p)) return "absent"
     val entries =
-      if (java.nio.file.Files.isDirectory(p)) {
-        val s = java.nio.file.Files.list(p)
+      if (Files.isDirectory(p)) {
+        val s = Files.list(p)
         try s.iterator().asScala.toSeq.sortBy(_.toString) finally s.close()
       } else Seq(p)
-    entries.map(f => s"${f.getFileName}:${java.nio.file.Files.size(f)}:" +
-      java.nio.file.Files.getLastModifiedTime(f).toMillis).mkString("|")
+    entries.map(f => s"${f.getFileName}:${Files.size(f)}:" +
+      Files.getLastModifiedTime(f).toMillis).mkString("|")
   }
 
-  /** Memo guard: true iff `marker` exists AND records the current source
-    * fingerprint. Callers rebuild and [[writeMarker]] otherwise. */
-  private def markerCurrent(marker: java.nio.file.Path, dir: String): Boolean =
-    java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker)) == sourceFingerprint(dir)
-
-  private def writeMarker(marker: java.nio.file.Path, dir: String): Unit =
-    java.nio.file.Files.write(marker, sourceFingerprint(dir).getBytes)
-
-  /** Liveness touch: a directory's mtime freezes once its entries stop
-    * changing, while a long-lived process keeps READING the memoized state
-    * — every use advances the root's mtime so the sibling-GC's idle-age
-    * gate cannot collect a live root. */
-  private def touchRoot(root: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(root))
-      try java.nio.file.Files.setLastModifiedTime(root,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-      catch { case _: Exception => () }
-
-  /** GC memo roots from PREVIOUS fingerprints of the same source (each
-    * would otherwise orphan a full state/store copy in the tmpdir forever),
-    * keeping `current`. Only roots idle ≥30 min are collected: a CONCURRENT
-    * bench/verify process may still be using a previous-fingerprint root —
-    * its [[touchRoot]] keeps it young; an orphan's mtime stops advancing
-    * once its owner exits, so the age gate still reclaims it. */
-  private def gcStaleSiblings(prefix: String, current: java.nio.file.Path): Unit = {
-    val gcIdleMs = 30L * 60 * 1000
-    val now = System.currentTimeMillis()
-    val tmpDir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val siblings = java.nio.file.Files.list(tmpDir)
-    try siblings.iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith(prefix) &&
-        p != current &&
-        (try now - java.nio.file.Files.getLastModifiedTime(p).toMillis > gcIdleMs
-         catch { case _: Exception => false }))
-      .foreach { old =>
-        // per-sibling best-effort: a concurrent GC (or an owner deleting its
-        // own dir) racing us must not fail THIS process's query — losing the
-        // race just leaves the sibling for the next GC pass
-        try {
-          val w = java.nio.file.Files.walk(old)
-          val paths = try w.iterator().asScala.toSeq finally w.close()
-          paths.reverse.foreach(p =>
-            try java.nio.file.Files.deleteIfExists(p)
-            catch { case _: java.io.IOException => () })
-        } catch { case _: Exception => () }
-      }
-    finally siblings.close()
+  /** The one memo for fixture state built from `documents` (input
+    * preparation, not the query under test, so repeat bench invocations
+    * time the query, not the build): a root under the tmpdir per (source
+    * dir, source fingerprint), filled once by `build` and reused while its
+    * marker records the current fingerprint and `valid` accepts it.
+    *
+    * The root name embeds the fingerprint, so changed data moves to a
+    * fresh root instead of rebuilding in place: the executor-side
+    * Bloom/cuckoo probe caches key on (root, snapshot id), and a rebuilt
+    * state at the SAME root would reuse ids 1..N — stale cached filters
+    * would serve wrong membership. Roots of previous fingerprints are
+    * deleted once idle ≥30 min: a CONCURRENT bench/verify process may still
+    * use one, and every use touches its root's mtime to keep it young,
+    * while an orphan's mtime stops advancing once its owner exits. */
+  private def memo(prefix: String, dir: String, valid: Path => Boolean = _ => true)(
+      build: Path => Unit): Path = {
+    val fp = sourceFingerprint(dir)
+    val tag = s"graft-$prefix-${Integer.toHexString(dir.hashCode)}-"
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    val root = tmp.resolve(tag + Integer.toHexString(fp.hashCode))
+    val marker = root.resolve("_memo_ok")
+    def touch(): Unit = // best-effort: a racing GC may have taken the root
+      try Files.setLastModifiedTime(root, FileTime.fromMillis(System.currentTimeMillis()))
+      catch { case _: java.io.IOException => () }
+    if (Files.exists(root)) touch()
+    val current = Files.exists(marker) &&
+      new String(Files.readAllBytes(marker)) == fp && valid(root)
+    if (!current) {
+      val now = System.currentTimeMillis()
+      val siblings = Files.list(tmp)
+      try siblings.iterator().asScala
+        .filter(p => p.getFileName.toString.startsWith(tag) && p != root &&
+          Try(now - Files.getLastModifiedTime(p).toMillis > 30L * 60 * 1000).getOrElse(false))
+        .foreach(old => FileUtil.fullyDelete(old.toFile))
+      finally siblings.close()
+      FileUtil.fullyDelete(root.toFile) // a partial build (no marker): restart
+      Files.createDirectories(root)
+      build(root)
+      Files.write(marker, fp.getBytes)
+      // re-touch after the (possibly long) build, which may have outlasted
+      // the idle-age gate a concurrent process applies
+      touch()
+    }
+    root
   }
 
   // --- frontier scheduling ----------------------------------------------------
@@ -108,8 +111,8 @@ object CrawlQueries {
       .select(concat(lit("site"), col("id"), lit(".example")).as("host"),
         when(col("id") % 7 === 0, array(lit("/page/1")))
           .otherwise(array().cast("array<string>")).as("disallowed"))
-    val emptySeen = new SeenSet(
-      java.nio.file.Files.createTempDirectory("qfs-seen").toString, s)
+    // a seen-set root nothing ever writes: the empty set
+    val emptySeen = new SeenSet(memo("qfs", dir)(_ => ()).resolve("seen").toString, s)
     Scheduler.scheduleEpoch(seeds, emptySeen, Some(robots), budgetPerHost = 2)
       .select(col("canon_url"), col("host"),
         col("priority").cast("bigint").as("priority"), col("host_rank"))
@@ -138,48 +141,17 @@ object CrawlQueries {
 
   // --- seen-set retraction (cuckoo deletion path) -------------------------------
 
-  /** One-time SETUP for [[qSeenRetract]]: the add → retract → re-add state
-    * lifecycle (snapshot commits + Bloom/cuckoo sidecar builds) is input
-    * preparation, not the query under test — memoized behind a marker file
-    * (the qWarcRead fixture lesson) so repeat bench invocations time the
-    * PROBE, not state construction. */
-  private def ensureSeenRetractState(s: SparkSession, dir: String): String = {
-    // The root embeds the SOURCE FINGERPRINT, not just the dir: the
-    // executor-side Bloom/cuckoo probe caches key on (root, snapshot id),
-    // and a rebuilt state at the SAME root would reuse ids 1..N — stale
-    // cached filters would then serve wrong membership. A fingerprint
-    // change moves the state to a fresh root instead of rebuilding in place.
-    val dirTag = Integer.toHexString(dir.hashCode)
-    val root = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      s"graft-qsr-$dirTag-" +
-        Integer.toHexString(sourceFingerprint(dir).hashCode))
-    val marker = root.resolve("_state_ok")
-    touchRoot(root)
-    if (!markerCurrent(marker, dir)) {
-      // Fresh roots per fingerprint (not in-place rebuilds) are required
-      // because the executor probe caches key on (root, snapshot id);
-      // previous-fingerprint roots are GC'd under the idle-age gate.
-      gcStaleSiblings(s"graft-qsr-$dirTag-", root)
-      if (java.nio.file.Files.exists(root)) { // partial build (no marker): restart
-        val w = java.nio.file.Files.walk(root)
-        val paths = try w.iterator().asScala.toSeq finally w.close()
-        paths.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
-      java.nio.file.Files.createDirectories(root)
+  /** One-time SETUP for [[qSeenRetract]] ([[memo]]): the add → retract →
+    * re-add state lifecycle (snapshot commits + Bloom/cuckoo sidecar
+    * builds). */
+  private def ensureSeenRetractState(s: SparkSession, dir: String): String =
+    memo("qsr", dir) { root =>
       val docs = t(s, dir, "documents").select(col("doc_id"))
       val seen = new SeenSet(root.toString, s)
       seen.add(docs.filter(col("doc_id") % 3 === 0).select(col("doc_id").as("url_hash")))
       seen.retract(docs.filter(col("doc_id") % 21 === 0).select(col("doc_id").as("url_hash")))
       seen.add(docs.filter(col("doc_id") % 42 === 0).select(col("doc_id").as("url_hash")))
-      writeMarker(marker, dir)
-      // re-touch after the (possibly long) build: the idle-age GC gate reads
-      // mtime, and a build that outlasted the gate would look abandoned to a
-      // concurrent process even though we just finished it
-      touchRoot(root)
-    }
-    root.toString
-  }
+    }.toString
 
   /** Seen-set lifecycle under the oracle: add (Bloom sidecars), RETRACT
     * (exact tombstones + cuckoo sidecar), re-add (in-place cuckoo delete of
@@ -302,21 +274,14 @@ object CrawlQueries {
 
   // --- WARC source round-trip (S1 RetryWarcReader analog) ----------------------
 
-  /** One-time SETUP for [[qWarcRead]]: deterministic WARC fixtures from
-    * `documents` (4 gzip files sharded by doc_id%4, one response record per
-    * doc). Memoized behind a marker file — fixture generation is input
-    * preparation, not part of the timed/verified query, so repeat bench
-    * invocations skip the collect+write entirely. */
+  /** One-time SETUP for [[qWarcRead]] ([[memo]]): deterministic WARC
+    * fixtures from `documents` (4 gzip files sharded by doc_id%4, one
+    * response record per doc). */
   private def ensureWarcFixtures(s: SparkSession, dir: String): String = {
     import graft.sources.WarcSource
-    val warcDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      s"graft-warc-${Integer.toHexString(dir.hashCode)}")
-    val marker = warcDir.resolve("_fixtures_ok")
-    if (!markerCurrent(marker, dir)) {
+    memo("warc", dir) { warcDir =>
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
         .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      java.nio.file.Files.createDirectories(warcDir)
       (0 until 4).foreach { shard =>
         val recs = docs.filter(_._1 % 4 == shard).map { case (id, text) =>
           WarcSource.WarcRecord(
@@ -327,12 +292,10 @@ object CrawlQueries {
             warc_date = "2024-03-01T00:00:00Z",
             content = text)
         }
-        java.nio.file.Files.write(warcDir.resolve(s"shard$shard.warc.gz"),
+        Files.write(warcDir.resolve(s"shard$shard.warc.gz"),
           WarcSource.warcGzBytes(recs.toIndexedSeq))
       }
-      writeMarker(marker, dir)
-    }
-    warcDir.toString
+    }.toString
   }
 
   /** Distributed WARC read (binaryFile + streaming gzip record walk) over the
@@ -358,31 +321,20 @@ object CrawlQueries {
 
   // --- bucketed page-store pruned fetch (PageStore driver gate) --------------
 
-  /** One-time SETUP for [[qPageStore]]: a bucketed [[graft.crawl.PageStore]]
-    * built from `documents` (url = http://docs.example/<doc_id>, html =
-    * text), memoized behind the source-fingerprint marker like the WARC
-    * fixtures. The marker lives NEXT TO the store dir (a parquet overwrite
-    * wipes the target path itself). */
+  /** One-time SETUP for [[qPageStore]] ([[memo]]): a bucketed
+    * [[graft.crawl.PageStore]] built from `documents` (url =
+    * http://docs.example/<doc_id>, html = text). A store the memo does not
+    * vouch for — written for other data, or in another layout — is
+    * rebuilt, never read. */
   private def ensurePageStore(s: SparkSession, dir: String): String = {
-    val dirTag = Integer.toHexString(dir.hashCode)
-    val root = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      s"graft-pgstore-$dirTag-" +
-        Integer.toHexString(sourceFingerprint(dir).hashCode))
-    val marker = root.resolve("_store_ok")
-    touchRoot(root)
-    if (!markerCurrent(marker, dir)) {
-      // reclaim stores built from previous fingerprints of this source —
-      // each holds a full parquet copy of the documents table
-      gcStaleSiblings(s"graft-pgstore-$dirTag-", root)
-      java.nio.file.Files.createDirectories(root)
+    val fp = sourceFingerprint(dir)
+    def store(root: Path) = root.resolve("store").toString
+    store(memo("pgstore", dir, root => PageStore.matches(store(root), 64, fp)) { root =>
       val pages = t(s, dir, "documents").select(
         concat(lit("http://docs.example/"), col("doc_id")).as("url"),
         col("text").as("html"), col("doc_id"))
-      graft.crawl.PageStore.write(pages, s"$root/store", nBuckets = 64)
-      writeMarker(marker, dir)
-    }
-    s"$root/store"
+      PageStore.write(pages, store(root), nBuckets = 64, fingerprint = fp)
+    })
   }
 
   /** Fetch-against-the-store: the schedule (doc_id < 40) reads the bucketed
@@ -399,7 +351,7 @@ object CrawlQueries {
         GraftFunctions.urlHash64(
           concat(lit("http://docs.example/"), col("doc_id"))).as("url_hash"),
         concat(lit("http://docs.example/"), col("doc_id")).as("canon_url"))
-    val pruned = graft.crawl.PageStore.readForSchedule(s, store, sched,
+    val pruned = PageStore.readForSchedule(s, store, sched,
       schedRows = 40)
     pruned.join(sched,
         pruned("page_hash") === sched("url_hash") &&

@@ -22,6 +22,14 @@ import scala.jdk.CollectionConverters._
   */
 object CrawlEpoch {
 
+  /** The epoch's out-table counts (fetched, licensed, decode_ok): observed
+    * on the out commit's write, or aggregated over a resumed epoch's
+    * committed snapshot. */
+  private def outCounts: Seq[org.apache.spark.sql.Column] = Seq(
+    count(when(col("fetch_status") === 200, 1)).as("fetched"),
+    count(when(col("license_abbr").isNotNull, 1)).as("licensed"),
+    count(when(col("pixels_ok") && col("phash_ok"), 1)).as("decode_ok"))
+
   /** Pool for the concurrent epoch stages (Spark actions are
     * driver-blocking). Cached: pipelined execution keeps one out-stage per
     * in-flight epoch outstanding. Daemon threads: the pool must not keep
@@ -272,8 +280,10 @@ object CrawlEpoch {
     // schedule + static corpus tables — run them as CONCURRENT Spark jobs so
     // the epoch's wall clock is schedule + max(2,3,4), not the sum, and tasks
     // from one stage fill cores the others leave idle.
-    val schedSnap = schedTable.snapshotForLineage("epoch", epoch.toString)
-    val schedRows = schedSnap.flatMap(schedTable.rowCount).getOrElse(Long.MaxValue)
+    val schedSnap = schedTable.snapshotForLineage("epoch", epoch.toString).getOrElse(
+      sys.error(s"epoch $epoch: no schedule snapshot under $stateRoot/scheduled " +
+        "after its schedule stage"))
+    val schedRows = schedTable.rowCount(schedSnap).get
     // EMPTY-EPOCH SHORT-CIRCUITS (manifest-exact counts, never a job): a
     // drained epoch must still advance lineage — resume markers, metrics
     // and the next epoch all look state up by epoch — but owes no Spark
@@ -315,20 +325,18 @@ object CrawlEpoch {
     // html never crosses their exchanges. Built at most once — `lazy val` is
     // the thread-safety barrier, stages 2 and 4 run concurrently. Bloom
     // false positives die in the exact joins; false negatives do not exist.
-    lazy val scheduleBloom: Option[(String, Long)] = schedSnap.map { sid =>
+    lazy val scheduleBloom: String = {
       val schedRoot = s"$stateRoot/scheduled"
-      if (!ShardFiles.allPresent(ShardFiles.Bloom, schedRoot, sid))
-        SeenSet.buildWriteShards(schedRoot, sid,
+      if (!ShardFiles.allPresent(ShardFiles.Bloom, schedRoot, schedSnap))
+        SeenSet.buildWriteShards(schedRoot, schedSnap,
           scheduled.select(col("url_hash")),
           math.max(1000L, schedRows / SeenSet.ShardCount),
           knownRows = schedRows) // exact, from the schedule manifest
-      (schedRoot, sid)
+      schedRoot
     }
-    def bloomPrefiltered(df: DataFrame): DataFrame = scheduleBloom match {
-      case Some((r, sid)) => df.where(call_function("bloom_might_contain",
-        col("page_hash"), lit(r), lit(sid)))
-      case None => df // no schedule manifest (shouldn't happen): exact-only
-    }
+    def bloomPrefiltered(df: DataFrame): DataFrame =
+      df.where(call_function("bloom_might_contain",
+        col("page_hash"), lit(scheduleBloom), lit(schedSnap)))
 
     // --- stage 2: fetch + decode + annotate → out ---------------------------
     val outMetricsHolder =
@@ -445,26 +453,19 @@ object CrawlEpoch {
           else persistedFrame.getOrElse(licensed))
           .select(col("image_id"))
           .where(col("image_id").isNotNull).distinct()
-        // The sidecar is keyed by the SCHEDULE snapshot id; with no schedule
-        // manifest (shouldn't happen) there is no collision-free key — an
-        // epoch number can collide with a genuine snapshot id already under
-        // imgbloom/ and silently reuse a stale filter (false negatives would
-        // null out decode results) — so that branch skips the prefilter and
-        // relies on the exact semi join alone, mirroring bloomPrefiltered.
+        // The sidecar is keyed by the SCHEDULE snapshot id: unique per
+        // epoch, so a filter under imgbloom/ is never another epoch's.
         val wantedImages =
           if (smallSchedule) // fetched ids are broadcast-small with the schedule
             images.join(broadcast(fetchedIds), Seq("image_id"), "left_semi")
-          else if (schedSnap.isEmpty) // unhinted: size unknown, let AQE pick
-            images.join(fetchedIds, Seq("image_id"), "left_semi")
           else {
             val imgRoot = s"$stateRoot/imgbloom"
-            val sid = schedSnap.get
-            if (!ShardFiles.allPresent(ShardFiles.Bloom, imgRoot, sid))
-              SeenSet.buildWriteShards(imgRoot, sid,
+            if (!ShardFiles.allPresent(ShardFiles.Bloom, imgRoot, schedSnap))
+              SeenSet.buildWriteShards(imgRoot, schedSnap,
                 fetchedIds.select(xxhash64(col("image_id")).as("url_hash")),
                 math.max(1000L, schedRows / SeenSet.ShardCount))
             images.where(call_function("bloom_might_contain",
-              xxhash64(col("image_id")), lit(imgRoot), lit(sid)))
+              xxhash64(col("image_id")), lit(imgRoot), lit(schedSnap)))
           }
         val imgSeed = substring(col("image_id"), 5, 8).cast("long")
         val chk = GraftFunctions.imageCheck(col("bytes"), imgSeed, col("w"), col("h"))
@@ -495,10 +496,7 @@ object CrawlEpoch {
           if (smallSchedule) broadcast(checkedImages) else checkedImages
         val out = licensed.join(checkedSide, Seq("image_id"), "left")
           .withColumn("epoch", lit(epoch))
-          .observe(obs,
-            count(when(col("fetch_status") === 200, 1)).as("fetched"),
-            count(when(col("license_abbr").isNotNull, 1)).as("licensed"),
-            count(when(col("pixels_ok") && col("phash_ok"), 1)).as("decode_ok"))
+          .observe(obs, outCounts.head, outCounts.tail: _*)
         outTable.commit(out,
           Map("epoch" -> epoch.toString, "stage" -> "out"),
           partitionBy = Seq("fetch_status"))
@@ -617,8 +615,7 @@ object CrawlEpoch {
 
     RunningEpoch(
       epoch = epoch,
-      scheduled = schedTable.snapshotForLineage("epoch", epoch.toString)
-        .flatMap(schedTable.rowCount).getOrElse(0L),
+      scheduled = schedRows,
       newFrontier = frontier.snapshotForLineage("epoch", epoch.toString)
         .flatMap(frontier.rowCount).getOrElse(0L),
       outDone = outF,
@@ -731,11 +728,7 @@ object CrawlEpoch {
     val observed = r.outMetrics.get()
     val outStats = if (observed.isDefined) None else
       r.outTable.snapshotForLineage("epoch", r.epoch.toString)
-      .map(id => r.outTable.readAt(id).agg(
-        count(when(col("fetch_status") === 200, 1)).as("fetched"),
-        count(when(col("license_abbr").isNotNull, 1)).as("licensed"),
-        count(when(col("pixels_ok") && col("phash_ok"), 1)).as("decode_ok")
-      ).collect()(0))
+      .map(id => r.outTable.readAt(id).agg(outCounts.head, outCounts.tail: _*).collect()(0))
     // last epoch out: restore the broadcast-timeout default we raised in
     // start() — unless someone set their own value over ours in between
     raiseLock.synchronized {

@@ -1,11 +1,16 @@
 package graft.crawl
 
 import graft.functions.GraftFunctions
+import graft.table.SnapshotTable
+
+import org.apache.hadoop.fs.FileUtil
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Paths}
+import java.io.File
+
+import scala.util.Try
 
 /** File-backed page store partitioned by url-hash bucket — the fetch-side
   * analog of the bucketed IVF layout (`Ann.ivfWriteBucketed`): the corpus is
@@ -25,45 +30,43 @@ import java.nio.file.{Files, Paths}
   * (misses, links) are computed against a corpus superset of all possible
   * matches. Byte-equality with the unpruned path is spec-asserted.
   *
-  * Big schedules (more rows than `graft.pageStorePruneMax`) skip the prune:
-  * their bucket coverage approaches 100% and the distinct-buckets job would
-  * buy nothing.
+  * The store is a [[SnapshotTable]] partitioned by `bucket`: one commit
+  * whose manifest lists every bucket's files, so reads — pruned or not —
+  * plan from that one JSON file instead of listing `nBuckets` directories
+  * (BASELINE.md "PageStore manifest catalog": 4096-bucket tail epochs
+  * 10–11 s → 2 s). Its lineage records the bucket count and the caller's
+  * corpus fingerprint.
   */
 object PageStore {
-
-  /** Rows under this schedule size attempt bucket pruning (above it the
-    * schedule touches ~every bucket anyway). */
-  def pruneMax(spark: SparkSession): Long =
-    graft.core.GraftConf.longKnob(spark,
-      "graft.pageStorePruneMax", "SPARK_GRAFT_PAGESTORE_PRUNE_MAX", 1000000L)
 
   def bucketOf(urlHash: Column, nBuckets: Int): Column =
     pmod(urlHash, lit(nBuckets)).cast("int")
 
-  private def metaPath(path: String) = Paths.get(path, "_graft_buckets")
-
-  private def metaLines(path: String): Array[String] =
-    new String(Files.readAllBytes(metaPath(path))).split("\n", 2)
+  /** The store's snapshot and its lineage; an error for a path holding no
+    * store, or a store in the layout before it was a snapshot table. */
+  private def snapshot(spark: SparkSession,
+      path: String): (SnapshotTable, Long, Map[String, String]) = {
+    val t = new SnapshotTable(path, spark)
+    t.currentSnapshotId.map(id => (t, id, t.lineage(id))).filter(_._3.contains("buckets"))
+      .getOrElse(sys.error(s"$path holds no PageStore snapshot; (re)write it with PageStore.write"))
+  }
 
   /** Number of buckets the store at `path` was written with. */
-  def bucketCount(path: String): Int = metaLines(path)(0).trim.toInt
-
-  /** The caller-supplied corpus fingerprint recorded at write time (empty
-    * when none was given). */
-  def storedFingerprint(path: String): String =
-    metaLines(path).lift(1).getOrElse("").trim
+  def bucketCount(path: String): Int =
+    snapshot(SparkSession.active, path)._3("buckets").toInt
 
   /** True when `path` holds a complete store written with exactly this
     * bucket count and fingerprint — the reuse gate: a store written for a
     * different corpus or layout must be rewritten, not silently served
     * (stale-store reads would 404 every page the old corpus lacked). */
   def matches(path: String, nBuckets: Int, fingerprint: String): Boolean =
-    Files.exists(metaPath(path)) &&
-      bucketCount(path) == nBuckets && storedFingerprint(path) == fingerprint
+    Try(snapshot(SparkSession.active, path)._3).toOption.exists(l =>
+      l("buckets") == nBuckets.toString && l.get("fingerprint").contains(fingerprint))
 
   /** One-time layout: `pages` (url, html, …) → parquet partitioned by
     * `bucket = url_hash64(url) mod nBuckets`, columns pre-shaped for the
-    * fetch join (`page_url`, `page_hash` — no per-epoch re-hash).
+    * fetch join (`page_url`, `page_hash` — no per-epoch re-hash), committed
+    * as one snapshot that replaces whatever was at `path`.
     * `fingerprint` is any caller-chosen corpus identity string (row count,
     * snapshot id…) checked by [[matches]] on reuse. */
   def write(pages: DataFrame, path: String, nBuckets: Int,
@@ -73,7 +76,6 @@ object PageStore {
     val shaped = pages
       .withColumnsRenamed(Map("url" -> "page_url"))
       .withColumn("page_hash", GraftFunctions.urlHash64(col("page_url")))
-    shaped
       .withColumn("bucket", bucketOf(col("page_hash"), nBuckets))
       // shuffle rows to their bucket BEFORE the partitioned write: without
       // this every write task opens a file in every bucket dir it sees —
@@ -81,32 +83,28 @@ object PageStore {
       // 1M-page corpus stalled for >10 min opening ~131k parquet writers).
       // After the repartition each bucket is one task → one file.
       .repartition(nBuckets, col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    // one write-time listing → a single-file catalog: every subsequent read
-    // (pruned or not) plans from ONE JSON read instead of nBuckets directory
-    // listings + schema inference — the dominant cost of small pruned reads
-    // at local scale, and millions of object-store LIST calls at 100 TB
-    graft.sources.ManifestParquet.writeManifest(path, "bucket", shaped.schema)
-    graft.table.AtomicFile.replace(metaPath(path), s"$nBuckets\n$fingerprint".getBytes)
+    FileUtil.fullyDelete(new File(path))
+    new SnapshotTable(path, pages.sparkSession).commit(shaped,
+      Map("buckets" -> nBuckets.toString, "fingerprint" -> fingerprint),
+      partitionBy = Seq("bucket"))
   }
 
   /** The store as an epoch's corpus frame (shape of CrawlEpoch's
-    * `pagesHashed`), pruned to the buckets `scheduled`'s url hashes touch
-    * when the schedule is small enough to bother. `schedRows` is the
-    * manifest-exact schedule row count — never a counting job. */
+    * `pagesHashed`), pruned to the buckets `scheduled`'s url hashes touch.
+    * `schedRows` is the manifest-exact schedule row count — never a
+    * counting job. The bucket filter reaches the manifest's file index as a
+    * partition filter: pruning is an in-memory filter, no listing. */
   def readForSchedule(spark: SparkSession, path: String, scheduled: DataFrame,
       schedRows: Long): DataFrame = {
-    val n = bucketCount(path)
-    // plan from the single-file catalog when present (stores written before
-    // the manifest existed fall back to directory listing); the bucket
-    // isin-filter below reaches ManifestFileIndex as a partition filter —
-    // pruning is an in-memory array filter, zero filesystem listings
-    val all =
-      if (graft.sources.ManifestParquet.hasManifest(path))
-        graft.sources.ManifestParquet.read(spark, path)
-      else spark.read.parquet(path)
+    val (t, id, lineage) = snapshot(spark, path)
+    val n = lineage("buckets").toInt
+    val all = t.readAt(id)
+    // r uniform hashes leave n(1 - 1/n)^r of n buckets untouched on
+    // average; below one the prune would keep every bucket, so the
+    // distinct-buckets job buys nothing
     val pruned =
-      if (schedRows <= pruneMax(spark)) {
+      if (n * math.pow(1.0 - 1.0 / n, schedRows.toDouble) < 1.0) all
+      else {
         import spark.implicits._
         // distinct buckets of the schedule: one narrow job over epoch-sized
         // input, output bounded by nBuckets ints
@@ -116,7 +114,7 @@ object PageStore {
         if (buckets.length < n)
           all.where(col("bucket").isin(buckets.map(Integer.valueOf).toSeq: _*))
         else all
-      } else all
+      }
     pruned.drop("bucket")
   }
 }

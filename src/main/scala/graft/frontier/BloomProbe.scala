@@ -52,14 +52,6 @@ private[frontier] object ProbeCacheBudget {
   private[frontier] def registered(cache: TwoGenCache[_], key: String): Unit =
     insertOrder.add((cache, key))
 
-  /** Test seam: drop EVERY registered entry (all probe caches) and return
-    * the ledger to zero — lets an A/B measure cold-cache load counts per
-    * arm instead of inheriting the previous arm's residency. */
-  private[frontier] def clearForTest(): Unit = {
-    var v = insertOrder.poll()
-    while (v != null) { v._1.removeForBudget(v._2); v = insertOrder.poll() }
-  }
-
   /** Called after an insert grew `totalBytes` past the budget: evict
     * oldest-inserted keys across ALL caches, sparing the key just inserted
     * (evicting it would guarantee a reload on the very next row). */
@@ -147,7 +139,6 @@ object BloomProbe {
     ProbeCacheBudget.budgetOverride = b
   private[graft] def cacheStats: (Int, Long) =
     (cache.entryCount, ProbeCacheBudget.totalBytes.get())
-  private[graft] def clearCacheForTest(): Unit = ProbeCacheBudget.clearForTest()
 
   /** Static probe entry point for generated code (whole-stage codegen calls
     * this directly — no boxing, no UDF wrapper). `shardCount` is resolved

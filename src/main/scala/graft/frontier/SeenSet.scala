@@ -270,12 +270,13 @@ final class SeenSet(root: String, spark: SparkSession,
           knownRows = total, shardCount = S, fpp = F)
         cid
       } else {
-        // delta-only Bloom build, reading back the just-committed delta files
-        // (columnar longs — no recompute of the filter plan, no persist);
+        // delta-only Bloom build, reading back the just-committed delta's
+        // own files (columnar longs — no recompute of the filter plan, no
+        // persist);
         // each shard task merges the parent generation's shard in place.
         // delta_rows (exact, from the manifest) routes tiny deltas — the
         // steady-state late-epoch case — to the bounded driver fast path.
-        SeenSet.buildWriteShards(root, id, spark.read.parquet(table.deltaDir(id).get),
+        SeenSet.buildWriteShards(root, id, table.readDelta(id),
           perShard, mergeParentId = Some(parent),
           knownRows = table.deltaRows(id).get, shardCount = S, fpp = F)
         id

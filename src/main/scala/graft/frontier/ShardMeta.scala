@@ -70,8 +70,4 @@ private[graft] object ShardMeta {
       s
     }
   }
-
-  /** Test seam: a root deleted and rebuilt with a different fan-out within
-    * one JVM must not serve the stale cached value. */
-  private[graft] def invalidate(root: String): Unit = cache.remove(root)
 }

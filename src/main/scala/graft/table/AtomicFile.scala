@@ -12,8 +12,7 @@ import java.util.UUID
   *
   * Two modes:
   *  - [[replace]]: the last writer wins (`rename(2)`). The `current`
-  *    pointer, stage markers, `bloom-meta.json`, shard sidecars, the
-  *    ManifestParquet manifest and `_graft_buckets`.
+  *    pointer, stage markers, `bloom-meta.json` and the shard sidecars.
   *  - [[createExclusive]]: the first writer wins (`link(2)`). Snapshot
   *    manifests `v<id>.json` and `shard-count`. Rename cannot do this: on
   *    POSIX it replaces an existing target even when REPLACE_EXISTING is

@@ -8,7 +8,12 @@ import graft.frontier.ShardFiles
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -19,7 +24,9 @@ import scala.jdk.CollectionConverters._
   * Layout:
   * {{{
   *   <root>/data/s<snapshotId>/...parquet      (immutable per-snapshot data dirs)
-  *   <root>/snapshots/v<id>.json               (manifest: files, counts, lineage)
+  *   <root>/snapshots/v<id>.json               (manifest: every data file of the
+  *                                              snapshot with rows and bytes —
+  *                                              the read catalog — counts, lineage)
   *   <root>/snapshots/current                  (atomic pointer, rename-committed)
   *   <root>/stages/e<epoch>-<stage>            (resume markers)
   * }}}
@@ -72,13 +79,11 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   /** Rows snapshot `id` itself added (all of them for a full commit). */
   def deltaRows(id: Long): Option[Long] = manifest(id).map(_.get("delta_rows").asLong)
 
-  /** The data directory holding only snapshot `id`'s own rows (for a delta
-    * commit: the delta, without its parent chain). */
-  def deltaDir(id: Long): Option[String] = manifest(id).map(_.get("data_dir").asText)
-
-  /** The Spark schema (JSON) recorded for snapshot `id`. */
-  private def schemaJson(id: Long): Option[String] =
-    manifest(id).filter(_.has("schema_json")).map(_.get("schema_json").asText)
+  /** The lineage recorded for snapshot `id` (empty when it has none or the
+    * manifest is gone). */
+  def lineage(id: Long): Map[String, String] =
+    manifest(id).flatMap(m => Option(m.get("lineage"))).fold(Map.empty[String, String])(l =>
+      l.fieldNames().asScala.map(k => k -> l.get(k).asText).toMap)
 
   /** Highest manifest id on disk. May exceed [[currentSnapshotId]]: after a
     * rollback, or when a pipelined EARLIER epoch's commit lands after a later
@@ -116,8 +121,9 @@ final class SnapshotTable(val root: String, spark: SparkSession,
 
   /** Append-only commit: `df` holds only NEW rows; the snapshot's logical
     * content is the parent snapshot plus `df`. The manifest records the full
-    * chain of data directories (`data_dirs`) so [[read]] unions them with one
-    * multi-path parquet scan — the parent's files are never rewritten. This
+    * chain of data directories (`data_dirs`) and inherits the parent's file
+    * entries, so [[read]] scans the whole chain from this one manifest — the
+    * parent's files are never rewritten. This
     * is the Iceberg fast-append pattern: per-epoch commit cost is
     * O(delta), not O(table). Mixing with [[commit]] is allowed: a full
     * commit starts a fresh single-dir chain (compaction). */
@@ -126,72 +132,42 @@ final class SnapshotTable(val root: String, spark: SparkSession,
 
   /** All data directories of snapshot `id` (the delta chain, or the single
     * dir of a full commit). */
-  def dataDirs(id: Long): Seq[String] =
-    manifest(id) match {
-      case Some(m) if m.has("data_dirs") =>
-        m.get("data_dirs").elements().asScala.map(_.asText).toSeq
-      case Some(m) => Seq(m.get("data_dir").asText)
-      case None => Nil
-    }
+  def dataDirs(id: Long): Seq[String] = manifest(id).fold(Seq.empty[String])(dirsOf)
+
+  private def dirsOf(m: JsonNode): Seq[String] =
+    if (m.has("data_dirs")) m.get("data_dirs").elements().asScala.map(_.asText).toSeq
+    else Seq(m.get("data_dir").asText)
 
   /** Find the snapshot whose manifest lineage has `key` → `value` (newest
     * first) — e.g. the out-table snapshot of a given epoch when commits from
-    * pipelined epochs may land out of order. */
+    * pipelined epochs may land out of order. The scan starts at the highest
+    * manifest, not `current` (an out-of-order pipelined commit may have an
+    * id above the pointer), so the engine's lookups — always for the epoch
+    * it just committed — read one manifest, or two under pipelining. */
   def snapshotForLineage(key: String, value: String): Option[Long] = {
-    // search from the highest manifest, not `current`: an out-of-order
-    // pipelined commit may have an id above the pointer
-    val cur = math.max(currentSnapshotId.getOrElse(return None),
+    val top = math.max(currentSnapshotId.getOrElse(return None),
       maxManifestId.getOrElse(0L))
-    val idx = SnapshotTable.lineageIndex(root)
-    idx.synchronized {
-      // fold manifests committed since the last lookup into the index —
-      // the only per-call cost that grows, and it grows with NEW commits
-      var id = idx.scanned + 1
-      while (id <= cur) {
-        manifest(id).foreach { m =>
-          if (m.has("lineage")) {
-            val lin = m.get("lineage")
-            lin.fieldNames().asScala.foreach { k =>
-              val kv = (k, lin.get(k).asText)
-              idx.byKV(kv) = id :: idx.byKV.getOrElse(kv, Nil)
-            }
-          }
-        }
-        id += 1
-      }
-      idx.scanned = math.max(idx.scanned, cur)
-      val hits = idx.byKV.getOrElse((key, value), Nil)
-      // lazily shed expired entries (existence check, no JSON read); the
-      // `<= cur` guard keeps rollback semantics identical to the old scan,
-      // which never looked above the current ceiling
-      val live = hits.filter(h => Files.exists(manifestPath(h)))
-      if (live.size != hits.size) idx.byKV((key, value)) = live
-      // verify the hit's manifest still carries the requested key/value
-      // (one JSON read per RETURNED hit only): if another process wiped and
-      // rebuilt this root with reused ids, a stale index entry can pass the
-      // existence check while pointing at a new-world snapshot with
-      // different lineage (ADVICE r5) — fall through to the next candidate
-      live.find(h => h <= cur && manifest(h).exists(m =>
-        m.has("lineage") && m.get("lineage").has(key) &&
-          m.get("lineage").get(key).asText == value))
-    }
+    (top to 1L by -1L).find(id => lineage(id).get(key).contains(value))
   }
 
   private def commitInternal(df: DataFrame, lineage: Map[String, String],
-      partitionBy: Seq[String], delta: Boolean): Long =
+      partitionBy: Seq[String], delta: Boolean): Long = {
+    require(partitionBy.size <= 1, s"at most one partition column, got $partitionBy")
     publish(lineage) { (m, id, parent) =>
       val dir = dataDir(id)
       val writer = df.write.mode(SaveMode.Overwrite)
       (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
         .parquet(dir.toString)
-      // per-partition (per-file) lineage & metrics straight from the parquet
-      // footers — a driver-side metadata read, not a Spark job (the commit
-      // path is on the serial critical path of every epoch)
-      val files = Files.walk(dir).iterator().asScala
-        .filter(p => p.toString.endsWith(".parquet"))
-        .map(_.toString).toSeq.sorted
-      val fileCounts = files.map(f => f -> footerRowCount(f))
-      val deltaRows = fileCounts.map(_._2).sum
+      // per-file rows (parquet footers) and bytes — a driver-side metadata
+      // read, not a Spark job (the commit path is on the serial critical
+      // path of every epoch). These entries are the snapshot's catalog:
+      // [[readAt]] plans its scan from them instead of listing directories.
+      val walk = Files.walk(dir)
+      val files =
+        try walk.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
+        finally walk.close()
+      val counted = files.map(f => (f, footerRowCount(f.toString)))
+      val deltaRows = counted.map(_._2).sum
       val parentRows = if (delta) parent.flatMap(rowCount).getOrElse(0L) else 0L
       m.put("row_count", parentRows + deltaRows)
       m.put("delta_rows", deltaRows)
@@ -201,34 +177,43 @@ final class SnapshotTable(val root: String, spark: SparkSession,
       // otherwise make the read un-inferable (a drained crawl epoch is
       // legitimate state)
       m.put("schema_json", df.schema.json)
+      partitionBy.foreach(m.put("partition_col", _))
       if (delta) {
         val dd: ArrayNode = m.putArray("data_dirs")
         (parent.map(dataDirs).getOrElse(Nil) :+ dir.toString).foreach(dd.add)
       }
-      // per-partition (per-file) lineage + metrics (north rule)
       val fa: ArrayNode = m.putArray("files")
-      fileCounts.foreach { case (f, n) =>
+      // a delta's catalog is its parent's entries plus its own files
+      if (delta) parent.flatMap(manifest).flatMap(p => Option(p.get("files")))
+        .foreach(_.elements().asScala.foreach(fa.add))
+      counted.foreach { case (f, n) =>
         val o = fa.addObject()
-        o.put("path", f)
+        o.put("path", f.toString)
         o.put("rows", n)
+        o.put("bytes", Files.size(f))
+        // `<col>=<value>/part-…`: the file's int partition value
+        partitionBy.foreach(_ =>
+          o.put("partition", f.getParent.getFileName.toString.split("=", 2)(1).toInt))
       }
     }
+  }
 
   /** Manifest-only commit of an EMPTY snapshot typed like the current one
-    * (its recorded schema): no Spark job, no data files — [[readAt]] serves
-    * `row_count == 0` manifests straight from `schema_json`. For sink tables
+    * (its recorded schema and partition column): no Spark job, no data
+    * files — [[readAt]] plans a scan of no files. For sink tables
     * in an epoch that provably produced nothing (a drained crawl), where
     * even a zero-row distributed write costs a job on the serial epoch
     * floor. None, and nothing written, when there is no current snapshot
     * with a recorded schema to copy (the caller takes its general path,
     * which records one). */
   def commitEmpty(lineage: Map[String, String] = Map.empty): Option[Long] =
-    currentSnapshotId.flatMap(schemaJson).map { schema =>
+    currentSnapshotId.flatMap(manifest).filter(_.has("schema_json")).map { cur =>
       publish(lineage) { (m, id, _) =>
         m.put("row_count", 0L)
         m.put("delta_rows", 0L)
         m.put("data_dir", dataDir(id).toString)
-        m.put("schema_json", schema)
+        Seq("schema_json", "partition_col").filter(cur.has)
+          .foreach(f => m.set[JsonNode](f, cur.get(f)))
         m.putArray("files")
       }
     }
@@ -246,7 +231,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
       m.put("row_count", pm.get("row_count").asLong)
       m.put("delta_rows", 0L)
       m.put("data_dir", pm.get("data_dir").asText)
-      Seq("data_dirs", "schema_json", "files").filter(pm.has).foreach(f =>
+      Seq("data_dirs", "schema_json", "partition_col", "files").filter(pm.has).foreach(f =>
         m.set[JsonNode](f, pm.get(f).deepCopy[JsonNode]()))
     }
 
@@ -256,29 +241,22 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     *   1. allocate the id past the highest manifest ever written, not past
     *      `current` — after a rollback (current < max) current+1 would
     *      collide with an existing snapshot;
-    *   2. wipe guard: an id at or below the lineage index's watermark means
-    *      the root was WIPED and rebuilt in place (ids restarting from 1),
-    *      so the index describes a dead world — reset it;
-    *   3. `content(manifest, id, parent)` adds the content fields (a data
+    *   2. `content(manifest, id, parent)` adds the content fields (a data
     *      commit writes its parquet here first);
-    *   4. the manifest is created EXCLUSIVELY — a snapshot id is never
+    *   3. the manifest is created EXCLUSIVELY — a snapshot id is never
     *      overwritten, by this process or another one sharing the root;
-    *   5. the `current` pointer flips, unless this is an epoch-ordered
+    *   4. the `current` pointer flips, unless this is an epoch-ordered
     *      table and the commit's epoch is older than the current one's —
     *      pipelined epochs land out of completion order, and a reader of
     *      `current` must see the newest epoch. Such a commit is still fully
     *      recorded (readable via [[readAt]] / [[snapshotForLineage]]).
-    * A crash before 4 leaves only an orphan data dir (a re-run overwrites
-    * it); a crash between 4 and 5 leaves a manifest the pointer skips. */
+    * A crash before 3 leaves only an orphan data dir (a re-run overwrites
+    * it); a crash between 3 and 4 leaves a manifest the pointer skips. */
   private def publish(lineage: Map[String, String])(
       content: (ObjectNode, Long, Option[Long]) => Unit): Long =
     SnapshotTable.rootLock(root).synchronized {
       val parent = currentSnapshotId
       val id = math.max(parent.getOrElse(0L), maxManifestId.getOrElse(0L)) + 1L
-      val idx = SnapshotTable.lineageIndex(root)
-      idx.synchronized {
-        if (id <= idx.scanned) { idx.scanned = 0L; idx.byKV.clear() }
-      }
       val m: ObjectNode = mapper.createObjectNode()
       m.put("snapshot_id", id)
       m.put("parent_id", parent.getOrElse(0L))
@@ -289,16 +267,12 @@ final class SnapshotTable(val root: String, spark: SparkSession,
         mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(m))
       val regresses = epochOrdered && (for {
         cur <- parent
-        curEpoch <- epochOf(cur)
+        curEpoch <- this.lineage(cur).get("epoch").flatMap(_.toLongOption)
         newEpoch <- lineage.get("epoch").flatMap(_.toLongOption)
       } yield newEpoch < curEpoch).getOrElse(false)
       if (!regresses) setCurrent(id)
       id
     }
-
-  private def epochOf(id: Long): Option[Long] =
-    manifest(id).flatMap(m => Option(m.get("lineage")).flatMap(l => Option(l.get("epoch"))))
-      .flatMap(_.asText.toLongOption)
 
   private def setCurrent(id: Long): Unit =
     AtomicFile.replace(snapDir.resolve("current"), id.toString.getBytes(StandardCharsets.UTF_8))
@@ -364,30 +338,70 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   def read(): DataFrame = readAt(
     currentSnapshotId.getOrElse(sys.error(s"no committed snapshot in $root")))
 
-  /** Time-travel read of a specific snapshot (unions the delta chain).
-    * A snapshot with zero rows may have no parquet files at all (empty
-    * partitioned write); it is served as an empty frame with the manifest's
-    * recorded schema. */
+  /** Time-travel read of a specific snapshot (unions the delta chain),
+    * planned from the manifest's file entries. A snapshot with zero rows
+    * may have no parquet files at all (empty partitioned write, or a
+    * [[commitEmpty]]); its scan has no files and the recorded schema, typed
+    * like every other read of the table. */
   def readAt(id: Long): DataFrame = {
-    val m = manifest(id)
-    val empty = m.exists(n => n.has("row_count") && n.get("row_count").asLong == 0L)
-    val schemaJson = m.filter(_.has("schema_json")).map(_.get("schema_json").asText)
-    val schema = schemaJson.map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    if (empty && schema.isDefined) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema.get)
-    } else {
-      val dirs = dataDirs(id)
-      // Pin the read to the manifest's recorded schema: a delta chain whose
-      // older dirs predate a column (e.g. a legacy 2-column frontier under a
-      // retries-bearing delta) must read legacy rows as NULL in that column.
-      // Un-pinned, spark.read.parquet samples ONE file's footer for the
-      // schema and can drop the new column for the whole chain. Also skips
-      // footer schema inference on the serial per-epoch read path.
-      val reader = schema.fold(spark.read)(s => spark.read.schema(s))
-      if (dirs.isEmpty) reader.parquet(dataDir(id).toString)
-      else reader.parquet(dirs: _*)
+    val m = existingManifest(id)
+    scan(m, dirsOf(m), _ => true)
+  }
+
+  /** Only the rows snapshot `id` itself wrote: for a delta commit, the
+    * delta without its parent chain. */
+  def readDelta(id: Long): DataFrame = {
+    val m = existingManifest(id)
+    val own = Paths.get(m.get("data_dir").asText)
+    scan(m, Seq(own.toString), p => Paths.get(p).startsWith(own))
+  }
+
+  private def existingManifest(id: Long): JsonNode =
+    manifest(id).getOrElse(sys.error(s"no snapshot $id in $root"))
+
+  private def schemaOf(m: JsonNode): Option[StructType] =
+    Option(m.get("schema_json")).map(j => DataType.fromJson(j.asText).asInstanceOf[StructType])
+
+  /** A file source reads every column as nullable, at every depth. */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(asNullable(m.keyType), asNullable(m.valueType), valueContainsNull = true)
+    case o => o
+  }
+
+  /** The parquet scan of manifest `m`'s file entries whose path passes
+    * `keep`, through [[ManifestFileIndex]]: no directory listing, no schema
+    * inference. The shape equals `spark.read.schema(recorded).parquet(dirs)`
+    * — nullable data columns, the partition column last. */
+  private def scan(m: JsonNode, dirs: Seq[String], keep: String => Boolean): DataFrame = {
+    val schema = schemaOf(m)
+    val files = Option(m.get("files")).map(_.elements().asScala
+      .filter(e => keep(e.get("path").asText)).toSeq)
+    (schema, files) match {
+      case (Some(s), Some(fs)) if fs.forall(_.has("bytes")) =>
+        val partCol = Option(m.get("partition_col")).map(_.asText)
+        val (parts, data) = asNullable(s).asInstanceOf[StructType]
+          .partition(f => partCol.contains(f.name))
+        val (partSchema, dataSchema) = (StructType(parts), StructType(data))
+        val byPartition = fs.groupBy(e => if (partCol.isDefined) e.get("partition").asInt else 0)
+          .toSeq.sortBy(_._1).map { case (k, es) =>
+            k -> es.map(e => new FileStatus(e.get("bytes").asLong, false, 1, 128L << 20, 0L,
+              new HPath(new java.io.File(e.get("path").asText).toURI))).toArray
+          }
+        val index = new ManifestFileIndex(
+          dirs.map(d => new HPath(new java.io.File(d).toURI)), partSchema, byPartition)
+        val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        session.baseRelationToDataFrame(HadoopFsRelation(index, partSchema, dataSchema,
+          bucketSpec = None, new ParquetFileFormat, options = Map.empty)(session))
+      case _ =>
+        // a manifest written before file entries carried sizes (or with no
+        // entries at all): list its directories. Pinned to the recorded
+        // schema — a delta chain whose older dirs predate a column must read
+        // legacy rows as NULL there, where footer inference could drop it.
+        schema.fold(spark.read)(spark.read.schema(_)).parquet(dirs: _*)
     }
   }
 
@@ -411,24 +425,4 @@ object SnapshotTable {
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
   private[table] def rootLock(root: String): AnyRef =
     locks.computeIfAbsent(root, _ => new AnyRef)
-
-  /** Per-root lineage→snapshot-ids index, built INCREMENTALLY: a lookup
-    * scans only manifests committed since the previous lookup (each
-    * manifest JSON is read once per JVM), so [[SnapshotTable
-    * .snapshotForLineage]] costs O(new commits) instead of O(all epochs)
-    * per call — at a 10^5-epoch crawl the old newest→oldest linear scan was
-    * 10^5 driver-side JSON reads per finish(). Manifests are immutable once
-    * written (commit protocol), so scanned ranges never need re-reading;
-    * EXPIRED (deleted) manifests are dropped lazily at lookup via an
-    * existence check, falling back to the next-newest match exactly like
-    * the unindexed scan. JVM-wide like the commit locks: pipelined epochs
-    * touch one root through many instances. */
-  private[table] final class LineageIndex {
-    var scanned: Long = 0L // every id in [1, scanned] has been read
-    val byKV = scala.collection.mutable.Map.empty[(String, String), List[Long]] // ids descending
-  }
-  private val lineageIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, LineageIndex]()
-  private[table] def lineageIndex(root: String): LineageIndex =
-    lineageIndexes.computeIfAbsent(root, _ => new LineageIndex)
 }

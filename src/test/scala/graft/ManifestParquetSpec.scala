@@ -1,15 +1,16 @@
 package graft
 
 import graft.crawl.PageStore
-import graft.sources.ManifestParquet
+import graft.table.SnapshotTable
 
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
-/** Pins the manifest catalog (VERDICT r4 next-round #3): reads plan from the
-  * single-file manifest instead of directory listings, prune correctness,
-  * and schema/row equality with the listing-based read. */
+/** Pins the manifest catalog: a PageStore is a bucket-partitioned
+  * [[SnapshotTable]] whose reads plan from the snapshot manifest instead of
+  * directory listings — prune correctness, and schema/row equality with the
+  * listing-based read. */
 class ManifestParquetSpec extends SparkSpecBase {
 
   private def freshStore(nBuckets: Int): String = {
@@ -22,23 +23,33 @@ class ManifestParquetSpec extends SparkSpecBase {
     path
   }
 
+  private def viaManifest(path: String) = new SnapshotTable(path, spark).read()
+
+  /** The same snapshot read the way it was before the manifest was the
+    * catalog: list its data directory, schema pinned to the recorded one. */
+  private def viaListing(path: String) = {
+    val recorded = new SnapshotTable(path, spark).manifest(1).get.get("schema_json").asText
+    spark.read.schema(org.apache.spark.sql.types.DataType.fromJson(recorded)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]).parquet(s"$path/data/s1")
+  }
+
   test("manifest read: identical rows and schema to the listing-based read") {
     val path = freshStore(16)
-    assert(ManifestParquet.hasManifest(path))
-    val viaManifest = ManifestParquet.read(spark, path)
-    val viaListing = spark.read.parquet(path)
-    assert(viaManifest.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
-      viaListing.schema.fields.map(f => (f.name, f.dataType)).toSeq)
-    val a = viaManifest.orderBy("page_hash").collect().toSeq
-    val b = viaListing.orderBy("page_hash").collect().toSeq
+    assert(PageStore.matches(path, 16, "spec"))
+    assert(!PageStore.matches(path, 16, "other") && !PageStore.matches(path, 8, "spec"))
+    val m = viaManifest(path)
+    val l = viaListing(path)
+    assert(m.schema === l.schema)
+    assert(m.schema.fieldNames.last === "bucket")
+    val a = m.orderBy("page_hash").collect().toSeq
+    val b = l.orderBy("page_hash").collect().toSeq
     assert(a === b)
     assert(a.size === 5000)
   }
 
   test("bucket filter reaches the manifest index as a partition filter: only those buckets' files scanned") {
     val path = freshStore(16)
-    val pruned = ManifestParquet.read(spark, path)
-      .where(col("bucket").isin(3, 7))
+    val pruned = viaManifest(path).where(col("bucket").isin(3, 7))
     // file-level proof: every file the scan actually opened lives under a
     // selected bucket directory — the others were pruned from the manifest
     // entries, no listing involved
@@ -49,7 +60,7 @@ class ManifestParquetSpec extends SparkSpecBase {
       assert(f.contains("bucket=3/") || f.contains("bucket=7/"),
         s"file outside pruned buckets: $f"))
     // value-level: pruned read == full read filtered
-    val expect = spark.read.parquet(path).where(col("bucket").isin(3, 7))
+    val expect = viaListing(path).where(col("bucket").isin(3, 7))
       .orderBy("page_hash").collect().toSeq
     assert(pruned.orderBy("page_hash").collect().toSeq === expect)
   }
@@ -58,18 +69,21 @@ class ManifestParquetSpec extends SparkSpecBase {
     import spark.implicits._
     val path = freshStore(32)
     // a schedule touching a handful of hashes → few buckets
-    val scheduled = ManifestParquet.read(spark, path)
+    val scheduled = viaManifest(path)
       .limit(40).select(col("page_hash").as("url_hash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val nSched = scheduled.count()
       val pruned = PageStore.readForSchedule(spark, path, scheduled, nSched)
-      val all = spark.read.parquet(path).drop("bucket")
-      // every scheduled hash's page is present in the pruned frame (prune
-      // exactness: a match can only live in its own hash's bucket)
-      val hits = pruned.join(scheduled, pruned("page_hash") === scheduled("url_hash"))
-      assert(hits.count() === nSched)
-      // and the pruned frame is a subset of the store
+      val all = viaListing(path).drop("bucket")
+      // the scheduled pages read through the pruned frame equal those read
+      // unpruned (prune exactness: a match can only live in its own hash's
+      // bucket), and the pruned frame is a subset of the store
+      def hits(df: org.apache.spark.sql.DataFrame) =
+        df.join(scheduled, df("page_hash") === scheduled("url_hash"), "left_semi")
+          .orderBy("page_hash").collect().toSeq
+      assert(hits(pruned).size === nSched)
+      assert(hits(pruned) === hits(all))
       assert(pruned.exceptAll(all).isEmpty)
       // scan proportionality: distinct files touched ≤ distinct buckets of
       // the schedule (≤ 40), not the store's 32-bucket full file set
@@ -82,6 +96,18 @@ class ManifestParquetSpec extends SparkSpecBase {
         val b = "bucket=(\\d+)/".r.findFirstMatchIn(f).map(_.group(1).toInt)
         assert(b.exists(schedBuckets.contains), s"unscheduled bucket file: $f")
       }
+      assert(filesTouched.size < 32)
     } finally scheduled.unpersist(blocking = false)
+  }
+
+  test("a store in the layout before the manifest catalog is not reused: matches is false, reads fail clearly") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("oldstore").toString
+    Seq(("http://a.example/", "<html/>", 1L, 0)).toDF("page_url", "html", "page_hash", "bucket")
+      .write.mode("overwrite").partitionBy("bucket").parquet(path)
+    Files.write(java.nio.file.Paths.get(path, "_graft_buckets"), "1\n".getBytes)
+    assert(!PageStore.matches(path, 1, ""))
+    val e = intercept[RuntimeException](PageStore.bucketCount(path))
+    assert(e.getMessage.contains("PageStore.write"))
   }
 }
