@@ -69,14 +69,11 @@ object CrawlEpoch {
       epoch: Long,
       scheduled: Long,
       newFrontier: Long,
-      outDone: scala.concurrent.Future[Unit],
-      private[crawl] val outTable: SnapshotTable,
       // (fetched, licensed, decode_ok) observed ON the out commit's write
       // action (no separate scan job); None when the stage was resumed as
       // already-committed — finish() then falls back to the snapshot scan
-      private[crawl] val outMetrics:
-        java.util.concurrent.atomic.AtomicReference[Option[(Long, Long, Long)]] =
-        new java.util.concurrent.atomic.AtomicReference(None))
+      outDone: scala.concurrent.Future[Option[(Long, Long, Long)]],
+      private[crawl] val outTable: SnapshotTable)
 
   def frontierTable(stateRoot: String, spark: SparkSession) =
     new SnapshotTable(s"$stateRoot/frontier", spark)
@@ -157,7 +154,6 @@ object CrawlEpoch {
     val outTable = new SnapshotTable(s"$stateRoot/out", spark, epochOrdered = true)
 
     def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
       // Job-group label per stage thread (thread-local in SparkContext):
       // lets a listener attribute every Spark job to its epoch+stage — the
       // floor-attack measurement map. Always set (cheap, thread-local);
@@ -169,19 +165,16 @@ object CrawlEpoch {
       val prev = Seq("spark.jobGroup.id", "spark.job.description",
         "spark.job.interruptOnCancel").map(k => k -> sc.getLocalProperty(k))
       sc.setJobGroup(s"e$epoch-$name", s"epoch $epoch $name")
-      val a =
-        try f
-        finally prev.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-      if (sys.env.contains("SPARK_GRAFT_TRACE"))
-        System.err.println(f"[epoch $epoch] $name%-10s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      a
+      try f
+      finally prev.foreach { case (k, v) => sc.setLocalProperty(k, v) }
     }
 
     // --- stage 0: robots cache (north rule "robots.txt caching") -------------
     // The robots source models the live web: fetching is per-host work, so
     // the cache stores every host's verdict (including "no robots.txt", as a
     // null disallow-list — negative caching) and each epoch fetches ONLY the
-    // hosts newly appearing in the frontier, committed as a DELTA snapshot.
+    // hosts newly appearing in the frontier, committed as a DELTA snapshot
+    // (the table compacts its chain, so the cache's dirs stay bounded).
     // Cost discipline: the SCHEDULE gates against `cache ∪ (source \ cached
     // hosts)` — gating never needs the frontier's host set, because a host
     // with no row on the broadcast side is simply not disallowed — so robots
@@ -234,8 +227,7 @@ object CrawlEpoch {
           // empty frontier ⇒ no hosts ⇒ no new verdicts: marker only
           if (emptyFrontier && cacheT.exists) cacheT.markStage(epoch, "robots")
           else {
-            if (cacheT.exists) cacheT.commitDelta(fetched, Map("epoch" -> epoch.toString))
-            else cacheT.commit(fetched, Map("epoch" -> epoch.toString))
+            cacheT.commitDelta(fetched, Map("epoch" -> epoch.toString))
             cacheT.markStage(epoch, "robots")
           }
         }
@@ -339,9 +331,9 @@ object CrawlEpoch {
         col("page_hash"), lit(scheduleBloom), lit(schedSnap)))
 
     // --- stage 2: fetch + decode + annotate → out ---------------------------
-    val outMetricsHolder =
-      new java.util.concurrent.atomic.AtomicReference[Option[(Long, Long, Long)]](None)
-    def runOutStage(): Unit = if (!outTable.stageDone(epoch, "out")) {
+    // returns the epoch's out counts; None when the stage was already done
+    def runOutStage(): Option[(Long, Long, Long)] = {
+      if (outTable.stageDone(epoch, "out")) return None
       // 0 scheduled rows ⇒ the sink is empty by construction: commit the
       // typed empty snapshot from the parent's recorded schema, no job.
       // (First-ever epoch with an empty schedule has no parent schema to
@@ -349,8 +341,7 @@ object CrawlEpoch {
       if (emptySchedule &&
           outTable.commitEmpty(Map("epoch" -> epoch.toString, "stage" -> "out")).isDefined) {
         outTable.markStage(epoch, "out")
-        outMetricsHolder.set(Some((0L, 0L, 0L)))
-        return
+        return Some((0L, 0L, 0L))
       }
       // Fetch join, 100 TB shape: html NEVER crosses an exchange on either
       // path. Broadcast path (schedule fits a broadcast): hits stream
@@ -502,10 +493,8 @@ object CrawlEpoch {
           partitionBy = Seq("fetch_status"))
         outTable.markStage(epoch, "out")
         val m = obs.get
-        outMetricsHolder.set(Some((
-          m("fetched").asInstanceOf[Long],
-          m("licensed").asInstanceOf[Long],
-          m("decode_ok").asInstanceOf[Long])))
+        Some((m("fetched").asInstanceOf[Long], m("licensed").asInstanceOf[Long],
+          m("decode_ok").asInstanceOf[Long]))
       } finally persistedFrame.foreach(_.unpersist(blocking = false))
     }
 
@@ -521,13 +510,13 @@ object CrawlEpoch {
 
     // --- stage 4: next frontier (discovered links + unscheduled backlog) ----
     def runFrontierStage(): Unit = if (!frontier.stageDone(epoch, "frontier")) {
-      // empty schedule AND empty frontier ⇒ no links, nothing to shed:
-      // carry the parent's (empty) content forward, manifest-only. A
+      // empty schedule AND empty frontier ⇒ no links, nothing to shed: a
+      // typed empty snapshot, manifest-only (its parent is empty too). A
       // NON-empty frontier with an empty schedule must still run the full
       // stage — its rows are all seen/disallowed and shedding the seen
       // ones is the stage's job.
-      if (emptySchedule && frontierRowsExact == 0L) {
-        frontier.commitCarry(Map("epoch" -> epoch.toString, "stage" -> "frontier"))
+      if (emptySchedule && frontierRowsExact == 0L && frontier.commitEmpty(
+          Map("epoch" -> epoch.toString, "stage" -> "frontier")).isDefined) {
         frontier.markStage(epoch, "frontier")
         return
       }
@@ -619,8 +608,7 @@ object CrawlEpoch {
       newFrontier = frontier.snapshotForLineage("epoch", epoch.toString)
         .flatMap(frontier.rowCount).getOrElse(0L),
       outDone = outF,
-      outTable = outTable,
-      outMetrics = outMetricsHolder)
+      outTable = outTable)
   }
 
   /** Expire old crawl-STATE snapshots (storage maintenance between epochs):
@@ -636,12 +624,11 @@ object CrawlEpoch {
     * in-flight out stage still reads would race the data files). */
   def expireState(stateRoot: String, spark: SparkSession, keepLast: Int): Int = {
     val seen = new SeenSet(s"$stateRoot/seen", spark)
-    val robots = new SnapshotTable(s"$stateRoot/robots", spark)
     val schedT = new SnapshotTable(s"$stateRoot/scheduled", spark)
     val n = frontierTable(stateRoot, spark).expireSnapshots(keepLast) +
       schedT.expireSnapshots(keepLast) +
       seen.expire(keepLast) +
-      (if (robots.exists) robots.expireSnapshots(keepLast) else 0)
+      new SnapshotTable(s"$stateRoot/robots", spark).expireSnapshots(keepLast)
     // GC image-id Bloom sidecars (written by the out stage, keyed by the
     // schedule snapshot id) whose schedule snapshot was just expired
     val imgSnap = java.nio.file.Paths.get(s"$stateRoot/imgbloom", "snapshots")
@@ -721,11 +708,11 @@ object CrawlEpoch {
     * breakdown is ONE aggregate job over the epoch's own snapshot (located
     * by lineage — pipelined later epochs may have committed after it). */
   def finish(r: RunningEpoch): EpochMetrics = {
-    scala.concurrent.Await.result(r.outDone, scala.concurrent.duration.Duration.Inf)
     // metrics were observed on the commit's own write action; the scan
     // below only runs when this epoch RESUMED over an already-committed out
     // stage (no fresh action to observe)
-    val observed = r.outMetrics.get()
+    val observed =
+      scala.concurrent.Await.result(r.outDone, scala.concurrent.duration.Duration.Inf)
     val outStats = if (observed.isDefined) None else
       r.outTable.snapshotForLineage("epoch", r.epoch.toString)
       .map(id => r.outTable.readAt(id).agg(outCounts.head, outCounts.tail: _*).collect()(0))

@@ -27,9 +27,12 @@ import org.apache.spark.util.sketch.BloomFilter
   * read-union-distinct-rewrite of the whole table was O(total) per epoch and
   * would rewrite ~80 GB every epoch at 10^10 keys. Shard capacity is fixed at
   * first build (OR-merge requires identical bit geometry) and recorded in a
-  * meta sidecar; when the accumulated count outgrows it (fpp past design) or
-  * the delta chain gets long, [[add]] compacts: one full rewrite + fresh
-  * shards at 4× the current size — amortized O(1) per key.
+  * meta sidecar; when the accumulated count outgrows it (fpp past design),
+  * [[add]] rebuilds every shard from the key set at 4× the current size —
+  * amortized O(1) per key. The key table's chain is bounded by the table
+  * itself: [[SnapshotTable.commitDelta]] compacts it at 64 dirs, and that
+  * add rebuilds the shards too. The key set never changes on a rebuild;
+  * only the filters do.
   *
   * Membership discipline (reference J1 exactness,
   * `db_containment_annotator_single.py:50-67`):
@@ -46,7 +49,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * deletes its tombstone fingerprint in place, which a Bloom filter cannot.
   *
   * @param expectedKeys sizing hint for the first Bloom build; underestimating
-  *        only triggers an earlier compaction, never wrong answers.
+  *        only triggers an earlier shard rebuild, never wrong answers.
   * @param shardCount sidecar fan-out, a FIRST-BUILD parameter ([[ShardMeta]]):
   *        recorded under `root/snapshots/` at the first build and fixed for
   *        the root's life (merge geometry + file layout + probe routing all
@@ -69,8 +72,6 @@ final class SeenSet(root: String, spark: SparkSession,
     expectedKeys: Long = SeenSet.DefaultExpectedKeys,
     shardCount: Int = SeenSet.ShardCount,
     fpp: Double = SeenSet.DefaultFpp) {
-
-  import SeenSet.MaxChainLength
 
   /** Effective fan-out: the recorded value for an existing root, the
     * constructor's for a root this instance is about to build. */
@@ -227,61 +228,49 @@ final class SeenSet(root: String, spark: SparkSession,
       s"""{"per_shard":$perShard,"shard_count":$S,"fpp":$F}""".getBytes)
 
   /** Add `urlHashes` (column `url_hash`) as a DELTA: keys already present are
-    * filtered out (Bloom fast path + exact anti-join on the maybes), only new
-    * keys are committed, and only they are hashed into the Bloom shards
-    * (merged into the parent generation's sidecars). Idempotent under replay:
-    * a replayed add contributes an empty delta. Returns the new snapshot id. */
+    * filtered out (Bloom fast path + exact anti-join on the maybes), and only
+    * new keys are committed, in ONE [[SnapshotTable.commitDelta]] (which also
+    * compacts the key table's chain when it is full). Bloom shards are built
+    * from the delta alone and merged into the parent generation's sidecars,
+    * or, when that cannot be done, rebuilt from the whole key set.
+    * Idempotent under replay: a replayed add contributes an empty delta.
+    * Returns the new snapshot id. */
   def add(urlHashes: DataFrame, lineage: Map[String, String] = Map.empty): Long = {
     val newKeys = urlHashes.select(col("url_hash")).distinct()
-    if (!table.exists) {
-      // first add: full commit + fresh shards; fix capacity for the chain
-      val id = table.commit(newKeys, lineage)
-      val n = table.rowCount(id).getOrElse(0L)
-      val perShard = math.max(1000L, math.max(expectedKeys, 4 * n) / S)
-      writeShardCapacity(perShard)
-      SeenSet.buildWriteShards(root, id, table.readAt(id), perShard,
-        knownRows = n, shardCount = S, fpp = F)
-      id
+    // a re-added retracted key just loses its tombstone (it is already in
+    // the key table); afterwards filterUnseen sees it as seen again, so the
+    // delta below holds only genuinely-new keys
+    clearTombstones(newKeys)
+    // the delta's parent: this set's only writer is this call
+    val parent = table.currentSnapshotId
+    val id = table.commitDelta(filterUnseen(newKeys), lineage)
+    val total = table.rowCount(id).get
+    val perShard = shardCapacity.getOrElse(
+      math.max(1000L, math.max(expectedKeys, 4 * total) / S))
+    val outgrown = total > perShard * S
+    // more than one dir: the commit chained onto the parent (a first add or
+    // a compacting commit writes one)
+    if (table.dataDirs(id).size > 1 && !outgrown &&
+        parent.exists(ShardFiles.allPresent(ShardFiles.Bloom, root, _))) {
+      // delta-only Bloom build, reading back the just-committed delta's
+      // own files (columnar longs — no recompute of the filter plan, no
+      // persist); each shard task merges the parent generation's shard in
+      // place. delta_rows (exact, from the manifest) routes tiny deltas —
+      // the steady-state late-epoch case — to the bounded driver fast path.
+      SeenSet.buildWriteShards(root, id, table.readDelta(id),
+        perShard, mergeParentId = parent,
+        knownRows = table.deltaRows(id).get, shardCount = S, fpp = F)
     } else {
-      // a re-added retracted key just loses its tombstone (it is already in
-      // the key table); afterwards filterUnseen sees it as seen again, so the
-      // delta below holds only genuinely-new keys
-      clearTombstones(newKeys)
-      // the delta's parent: this set's only writer is this call
-      val parent = table.currentSnapshotId.get
-      val id = table.commitDelta(filterUnseen(newKeys), lineage)
-      val total = table.rowCount(id).get
-      val chainLen = table.dataDirs(id).size
-      val perShard = shardCapacity.getOrElse(
-        math.max(1000L, math.max(expectedKeys, 4 * total) / S))
-      val outgrown = total > perShard * S
-      if (outgrown || chainLen > MaxChainLength ||
-          !ShardFiles.allPresent(ShardFiles.Bloom, root, parent)) {
-        // compaction (amortized O(1)/key): rewrite the chain into one dir and
-        // rebuild shards at 4x the current size. Also the crash-recovery path
-        // when the parent generation's sidecars are missing.
-        val cid = table.commit(table.readAt(id),
-          lineage + ("compaction" -> "true"))
-        val newPerShard =
-          if (outgrown) math.max(perShard, 4 * total / S)
-          else perShard
-        writeShardCapacity(newPerShard)
-        SeenSet.buildWriteShards(root, cid, table.readAt(cid), newPerShard,
-          knownRows = total, shardCount = S, fpp = F)
-        cid
-      } else {
-        // delta-only Bloom build, reading back the just-committed delta's
-        // own files (columnar longs — no recompute of the filter plan, no
-        // persist);
-        // each shard task merges the parent generation's shard in place.
-        // delta_rows (exact, from the manifest) routes tiny deltas — the
-        // steady-state late-epoch case — to the bounded driver fast path.
-        SeenSet.buildWriteShards(root, id, table.readDelta(id),
-          perShard, mergeParentId = Some(parent),
-          knownRows = table.deltaRows(id).get, shardCount = S, fpp = F)
-        id
-      }
+      // every shard from the whole key set: the first add, a compacting
+      // commit, the parent's sidecars lost (crash recovery), or the fixed
+      // capacity outgrown (fpp past design) — then at 4× the current size,
+      // amortized O(1) per key
+      val newPerShard = if (outgrown) math.max(perShard, 4 * total / S) else perShard
+      writeShardCapacity(newPerShard)
+      SeenSet.buildWriteShards(root, id, table.readAt(id), newPerShard,
+        knownRows = total, shardCount = S, fpp = F)
     }
+    id
   }
 
   /** Expire old key-table and tombstone snapshots (storage maintenance; see
@@ -290,8 +279,7 @@ final class SeenSet(root: String, spark: SparkSession,
     * sidecars, which expiry always retains. Rollback below the horizon is
     * gone by design. */
   def expire(keepLast: Int): Int =
-    table.expireSnapshots(keepLast) +
-      (if (tombTable.exists) tombTable.expireSnapshots(keepLast) else 0)
+    table.expireSnapshots(keepLast) + tombTable.expireSnapshots(keepLast)
 
   /** Roll the seen set back to an earlier snapshot (epoch rollback). The
     * Bloom sidecars are per-snapshot, so the pointer flip restores the exact
@@ -408,12 +396,8 @@ object SeenSet {
     * task-slot count instead. */
   val ShardCount: Int = 16
 
-  /** Delta-chain length that triggers compaction (bounds per-read file-list
-    * overhead and sidecar lineage). */
-  val MaxChainLength: Int = 64
-
   /** Default first-build sizing hint (callers at larger scale pass their
-    * own; outgrowing it only triggers compaction). */
+    * own; outgrowing it only triggers a shard rebuild). */
   val DefaultExpectedKeys: Long = 4L * 1000 * 1000
 
   /** Default Bloom sidecar false-positive rate (a first-build parameter of

@@ -125,8 +125,14 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * entries, so [[read]] scans the whole chain from this one manifest — the
     * parent's files are never rewritten. This
     * is the Iceberg fast-append pattern: per-epoch commit cost is
-    * O(delta), not O(table). Mixing with [[commit]] is allowed: a full
-    * commit starts a fresh single-dir chain (compaction). */
+    * O(delta), not O(table). The table bounds the chain itself: when the
+    * parent's chain already holds [[SnapshotTable.MaxChainLength]] dirs,
+    * this commit writes parent + `df` into one dir instead — a full
+    * snapshot with lineage `compaction -> true` — so every read plans at
+    * most that many dirs, and expiry frees the old chain once no retained
+    * manifest lists it. `delta_rows` is always the rows this commit added.
+    * With no parent this is a full commit, like [[commit]]; a full commit
+    * also starts a fresh single-dir chain. */
   def commitDelta(df: DataFrame, lineage: Map[String, String] = Map.empty): Long =
     commitInternal(df, lineage, Nil, delta = true)
 
@@ -153,9 +159,17 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   private def commitInternal(df: DataFrame, lineage: Map[String, String],
       partitionBy: Seq[String], delta: Boolean): Long = {
     require(partitionBy.size <= 1, s"at most one partition column, got $partitionBy")
-    publish(lineage) { (m, id, parent) =>
+    publish { (m, id, parent) =>
+      // a delta chains onto its parent's dirs, unless that chain is full:
+      // then the parent's content and `df` are rewritten into one dir
+      val pm = if (delta) parent.flatMap(manifest) else None
+      val chain = pm.fold(Seq.empty[String])(dirsOf)
+      val compact = chain.size >= SnapshotTable.MaxChainLength
+      val chained = chain.nonEmpty && !compact
+      val data =
+        if (compact) readAt(parent.get).unionByName(df, allowMissingColumns = true) else df
       val dir = dataDir(id)
-      val writer = df.write.mode(SaveMode.Overwrite)
+      val writer = data.write.mode(SaveMode.Overwrite)
       (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
         .parquet(dir.toString)
       // per-file rows (parquet footers) and bytes — a driver-side metadata
@@ -167,24 +181,25 @@ final class SnapshotTable(val root: String, spark: SparkSession,
         try walk.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
         finally walk.close()
       val counted = files.map(f => (f, footerRowCount(f.toString)))
-      val deltaRows = counted.map(_._2).sum
-      val parentRows = if (delta) parent.flatMap(rowCount).getOrElse(0L) else 0L
-      m.put("row_count", parentRows + deltaRows)
-      m.put("delta_rows", deltaRows)
+      val written = counted.map(_._2).sum
+      val parentRows = pm.fold(0L)(_.get("row_count").asLong)
+      val rows = if (chained) parentRows + written else written
+      m.put("row_count", rows)
+      m.put("delta_rows", rows - parentRows)
       m.put("data_dir", dir.toString)
       // schema recorded so an all-empty snapshot stays readable: a
       // partitioned write of zero rows produces NO part files, which would
       // otherwise make the read un-inferable (a drained crawl epoch is
       // legitimate state)
-      m.put("schema_json", df.schema.json)
+      m.put("schema_json", data.schema.json)
       partitionBy.foreach(m.put("partition_col", _))
-      if (delta) {
+      if (chained) {
         val dd: ArrayNode = m.putArray("data_dirs")
-        (parent.map(dataDirs).getOrElse(Nil) :+ dir.toString).foreach(dd.add)
+        (chain :+ dir.toString).foreach(dd.add)
       }
       val fa: ArrayNode = m.putArray("files")
       // a delta's catalog is its parent's entries plus its own files
-      if (delta) parent.flatMap(manifest).flatMap(p => Option(p.get("files")))
+      if (chained) pm.flatMap(p => Option(p.get("files")))
         .foreach(_.elements().asScala.foreach(fa.add))
       counted.foreach { case (f, n) =>
         val o = fa.addObject()
@@ -195,44 +210,30 @@ final class SnapshotTable(val root: String, spark: SparkSession,
         partitionBy.foreach(_ =>
           o.put("partition", f.getParent.getFileName.toString.split("=", 2)(1).toInt))
       }
+      if (compact) lineage + ("compaction" -> "true") else lineage
     }
   }
 
-  /** Manifest-only commit of an EMPTY snapshot typed like the current one
-    * (its recorded schema and partition column): no Spark job, no data
-    * files — [[readAt]] plans a scan of no files. For sink tables
-    * in an epoch that provably produced nothing (a drained crawl), where
-    * even a zero-row distributed write costs a job on the serial epoch
-    * floor. None, and nothing written, when there is no current snapshot
-    * with a recorded schema to copy (the caller takes its general path,
-    * which records one). */
+  /** The one manifest-only commit: an EMPTY snapshot typed like the
+    * current one (its recorded schema and partition column), no Spark job,
+    * no data files — [[readAt]] plans a scan of no files. For tables in an
+    * epoch that provably produced nothing (a drained crawl's schedule, out
+    * and frontier), where even a zero-row distributed write costs a job on
+    * the serial epoch floor, and whose lineage must still advance (resume
+    * and metrics look the epoch's snapshot up by lineage). None, and
+    * nothing written, when there is no current snapshot with a recorded
+    * schema to copy (the caller takes its general path, which records one). */
   def commitEmpty(lineage: Map[String, String] = Map.empty): Option[Long] =
     currentSnapshotId.flatMap(manifest).filter(_.has("schema_json")).map { cur =>
-      publish(lineage) { (m, id, _) =>
+      publish { (m, id, _) =>
         m.put("row_count", 0L)
         m.put("delta_rows", 0L)
         m.put("data_dir", dataDir(id).toString)
         Seq("schema_json", "partition_col").filter(cur.has)
           .foreach(f => m.set[JsonNode](f, cur.get(f)))
         m.putArray("files")
+        lineage
       }
-    }
-
-  /** Manifest-only commit that CARRIES the parent snapshot's content
-    * verbatim — same data dirs, same row count, no Spark job, no data
-    * copy. For state tables an empty epoch leaves untouched but whose
-    * lineage must still advance (the epoch happened; resume and metrics
-    * look its snapshot up by lineage). [[expireSnapshots]] keeps the
-    * carried dirs alive while any referencing manifest is retained. */
-  def commitCarry(lineage: Map[String, String] = Map.empty): Long =
-    publish(lineage) { (m, _, parent) =>
-      val pm = parent.flatMap(manifest).getOrElse(
-        sys.error(s"carry commit requires a parent snapshot in $root"))
-      m.put("row_count", pm.get("row_count").asLong)
-      m.put("delta_rows", 0L)
-      m.put("data_dir", pm.get("data_dir").asText)
-      Seq("data_dirs", "schema_json", "partition_col", "files").filter(pm.has).foreach(f =>
-        m.set[JsonNode](f, pm.get(f).deepCopy[JsonNode]()))
     }
 
   /** THE publish path — every commit goes through it, under the per-root
@@ -242,7 +243,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     *      `current` — after a rollback (current < max) current+1 would
     *      collide with an existing snapshot;
     *   2. `content(manifest, id, parent)` adds the content fields (a data
-    *      commit writes its parquet here first);
+    *      commit writes its parquet here first) and returns the lineage;
     *   3. the manifest is created EXCLUSIVELY — a snapshot id is never
     *      overwritten, by this process or another one sharing the root;
     *   4. the `current` pointer flips, unless this is an epoch-ordered
@@ -252,15 +253,15 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     *      recorded (readable via [[readAt]] / [[snapshotForLineage]]).
     * A crash before 3 leaves only an orphan data dir (a re-run overwrites
     * it); a crash between 3 and 4 leaves a manifest the pointer skips. */
-  private def publish(lineage: Map[String, String])(
-      content: (ObjectNode, Long, Option[Long]) => Unit): Long =
+  private def publish(
+      content: (ObjectNode, Long, Option[Long]) => Map[String, String]): Long =
     SnapshotTable.rootLock(root).synchronized {
       val parent = currentSnapshotId
       val id = math.max(parent.getOrElse(0L), maxManifestId.getOrElse(0L)) + 1L
       val m: ObjectNode = mapper.createObjectNode()
       m.put("snapshot_id", id)
       m.put("parent_id", parent.getOrElse(0L))
-      content(m, id, parent)
+      val lineage = content(m, id, parent)
       val lin = m.putObject("lineage")
       lineage.foreach { case (k, v) => lin.put(k, v) }
       AtomicFile.createExclusive(manifestPath(id),
@@ -349,7 +350,8 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   }
 
   /** Only the rows snapshot `id` itself wrote: for a delta commit, the
-    * delta without its parent chain. */
+    * delta without its parent chain (for a compacting one, the whole
+    * rewritten table). */
   def readDelta(id: Long): DataFrame = {
     val m = existingManifest(id)
     val own = Paths.get(m.get("data_dir").asText)
@@ -425,4 +427,8 @@ object SnapshotTable {
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
   private[table] def rootLock(root: String): AnyRef =
     locks.computeIfAbsent(root, _ => new AnyRef)
+
+  /** Delta-chain length at which [[SnapshotTable.commitDelta]] compacts
+    * (bounds every read's dirs and file list, and what expiry keeps). */
+  private val MaxChainLength: Int = 64
 }

@@ -172,16 +172,57 @@ class FrontierSpec extends SparkSpecBase {
     assert(seen.table.manifest(seen.table.currentSnapshotId.get)
       .get.get("delta_rows").asLong === 0L)
     assert(seen.keys().count() === 8000L)
-    // outgrow the fixed bloom capacity (first build sized ~20k): compaction
-    // rewrites the chain into one dir and rebuilds shards larger
+    // outgrow the fixed bloom capacity (first build sized ~20k): the add
+    // rebuilds every shard of its snapshot at 4x the accumulated count
     seen.add((8000L until 40000L).toDF("url_hash"))
-    val mc = seen.table.manifest(seen.table.currentSnapshotId.get).get
-    assert(!mc.has("data_dirs"), "outgrown capacity must trigger compaction")
+    val idc = seen.table.currentSnapshotId.get
+    val mc = seen.table.manifest(idc).get
+    assert((0 until 16).forall(s => Files.exists(ShardFiles.path(ShardFiles.Bloom, root, idc, s))),
+      "outgrown capacity must write all 16 shards of the snapshot")
+    val meta = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(java.nio.file.Paths.get(root, "snapshots", "bloom-meta.json").toFile)
+    assert(meta.get("per_shard").asLong >= 4L * 40000 / 16,
+      "outgrown shards must be rebuilt at 4x the key count")
     assert(mc.get("row_count").asLong === 40000L)
     // exactness end-to-end after deltas + compaction
     val unseen = seen.filterUnseen((39000L until 41000L).toDF("url_hash"))
       .as[Long].collect().sorted.toSeq
     assert(unseen === (40000L until 41000L).toSeq)
+  }
+
+  test("seen set: the add that lands on a compacting commit rebuilds every shard, stays exact") {
+    import spark.implicits._
+    val root = tmpDir("seenchain")
+    val seen = new SeenSet(root, spark, expectedKeys = 1000)
+    // small adds: every shard build takes the driver arm
+    (0 until 65).foreach(i => seen.add((i * 10L until i * 10L + 10).toDF("url_hash")))
+    val id = seen.table.currentSnapshotId.get
+    // the 65th add found a 64-dir chain: ONE commit, a compacting one
+    assert(seen.table.lineage(id).get("compaction") === Some("true"))
+    assert(seen.table.dataDirs(id).size === 1)
+    assert(seen.table.rowCount(id) === Some(650L) && seen.table.deltaRows(id) === Some(10L))
+    assert(id === 65L, "one key-table commit per add")
+    // every shard holds every key of its shard, at the recorded capacity
+    val perShard = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(java.nio.file.Paths.get(root, "snapshots", "bloom-meta.json").toFile)
+      .get("per_shard").asLong
+    (0 until 16).foreach { s =>
+      val expected = org.apache.spark.util.sketch.BloomFilter.create(perShard, SeenSet.DefaultFpp)
+      (0L until 650L).filter(SeenSet.shardOf(_, 16) == s).foreach(expected.putLong)
+      val out = new java.io.ByteArrayOutputStream()
+      expected.writeTo(out)
+      assert(ShardFiles.read(ShardFiles.Bloom, root, id, s).sameElements(out.toByteArray),
+        s"shard $s differs from a fresh build of its keys")
+    }
+    val unseen = seen.filterUnseen((600L until 700L).toDF("url_hash")).as[Long].collect().sorted
+    assert(unseen.toSeq === (650L until 700L))
+    // the next add chains onto the compacted snapshot and stays exact
+    seen.add((650L until 660L).toDF("url_hash"))
+    val next = seen.table.currentSnapshotId.get
+    assert(seen.table.dataDirs(next).size === 2)
+    assert(seen.filterUnseen((640L until 700L).toDF("url_hash")).as[Long].collect().sorted.toSeq ===
+      (660L until 700L))
+    assert(seen.keys().count() === 660L)
   }
 
   test("bloom probe: executor cache keeps at most two generations per shard") {

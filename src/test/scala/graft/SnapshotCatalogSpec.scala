@@ -43,6 +43,36 @@ class SnapshotCatalogSpec extends SparkSpecBase {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("commitDelta bounds every chain at 64 dirs: the commit onto a full chain compacts it") {
+    val t = new SnapshotTable(Files.createTempDirectory("chain70").toString, spark)
+    def urls(df: DataFrame): Seq[Long] = df.orderBy("url_hash").collect().map(_.getLong(0)).toSeq
+    val ids = (0 until 70).map { i =>
+      val id = t.commitDelta(spark.range(i * 10L, i * 10L + 10).toDF("url_hash"))
+      assert(t.dataDirs(id).size <= 64, s"commit ${i + 1} chains ${t.dataDirs(id).size} dirs")
+      id
+    }
+    assert(ids.take(64).map(t.dataDirs(_).size) === (1 to 64))
+    // the 65th commit found a 64-dir chain: parent + delta in one dir
+    val c = ids(64)
+    val mc = t.manifest(c).get
+    assert(t.dataDirs(c) === Seq(mc.get("data_dir").asText) && !mc.has("data_dirs"))
+    assert(t.lineage(c) === Map("compaction" -> "true"))
+    assert(t.rowCount(c) === Some(650L) && t.deltaRows(c) === Some(10L))
+    assert(mc.get("files").elements().asScala.forall(_.get("path").asText
+      .startsWith(mc.get("data_dir").asText + "/")), "a compacting commit lists its own files only")
+    assert(ids.drop(65).map(t.dataDirs(_).size) === (2 to 6))
+    assert(t.rowCount(ids.last) === Some(700L) && t.deltaRows(ids.last) === Some(10L))
+    assert(urls(t.read()) === (0L until 700L))
+    // time travel below the compaction is unchanged
+    val pre = ids(63)
+    assert(urls(t.readAt(pre)) === (0L until 640L))
+    // once no retained manifest lists the old chain, expiry deletes it
+    val oldChain = t.dataDirs(pre)
+    assert(t.expireSnapshots(2) === 68)
+    assert(oldChain.forall(d => !Files.exists(Paths.get(d))), "pre-compaction dirs survived expiry")
+    assert(urls(t.read()) === (0L until 700L))
+  }
+
   test("a delta chain of 34 data dirs is read with no Spark job before its first action") {
     val t = new SnapshotTable(Files.createTempDirectory("chain34").toString, spark)
     t.commit(spark.range(0, 10).toDF("url_hash"))
