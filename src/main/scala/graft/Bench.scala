@@ -285,14 +285,14 @@ object Bench {
     CrawlEpoch.seed(root, spark, seeds)
     val budget = math.max(100, (nPages / 8).toInt)
     val nEpochs = sys.env.getOrElse("SPARK_GRAFT_EPOCHS", "1").toInt
-    // WARMUP epoch (untimed, SPARK_GRAFT_WARMUP=0 to skip): the crawl epoch's
-    // ~20-stage plan family pays a large one-off whole-stage-codegen/janino
-    // compile on first execution (measured ~70 s at local[32] in round 4:
-    // cold first epoch 107.8 s vs identical repeat 35.1 s). A tiny epoch over
-    // the SAME corpus frames compiles the same plan family, so the timed
-    // epochs measure engine throughput — the reproducible quantity — instead
-    // of JIT state. Two warmup epochs: epoch ≥2 takes extra plan shapes
-    // (non-empty seen-set sidecar merge) that epoch 1 never compiles.
+    // WARMUP epochs (untimed, SPARK_GRAFT_WARMUP=0 to skip): two tiny epochs
+    // over the SAME corpus frames load and JIT-compile the engine's and
+    // Spark's own code on both epoch shapes (epoch ≥2 adds the non-empty
+    // seen-set paths), so the timed epochs measure engine throughput instead
+    // of JVM start-up. They do NOT pre-compile the timed epochs' generated
+    // classes: those differ from the warm-up's in literals (stage ids, epoch,
+    // snapshot ids), and every crawl step runs interpreted anyway
+    // (CrawlEpoch's step settings), compiling next to nothing.
     val warmupRan = !sys.env.get("SPARK_GRAFT_WARMUP").contains("0")
     val wWarmup0 = winSample()
     val warmupJson =

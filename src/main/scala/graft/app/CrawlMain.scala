@@ -79,13 +79,18 @@ object CrawlMain {
     (1 to epochs).foreach { e =>
       val m = CrawlEpoch.run(state, spark, pages, images, Some(robots), budget, e,
         pageStore = pageStore)
+      // the execution mode the epoch's schedule commit recorded
+      val sched = new graft.table.SnapshotTable(s"$state/scheduled", spark)
+      val lineage = sched.snapshotForLineage("epoch", e.toString)
+        .map(sched.lineage).getOrElse(Map.empty)
       val requeued =
         if (retryBudget > 0)
           CrawlEpoch.requeueFailures(state, spark, e, retryBudget = retryBudget)
         else 0L
       if (expireKeep > 0) CrawlEpoch.expireState(state, spark, expireKeep)
       println(s"epoch $e: scheduled=${m.scheduled} fetched=${m.fetched} " +
-        s"licensed=${m.licensed} decodeOk=${m.decodeOk} frontier=${m.newFrontier}" +
+        s"licensed=${m.licensed} decodeOk=${m.decodeOk} frontier=${m.newFrontier} " +
+        s"exec=${lineage.getOrElse("exec", "?")} exec_rows=${lineage.getOrElse("exec_rows", "?")}" +
         (if (retryBudget > 0) s" requeued=$requeued" else ""))
     }
     spark.stop()

@@ -42,17 +42,107 @@ object CrawlEpoch {
         t
       }))
 
-  /** Broadcast-timeout raise, SCOPED to the set of in-flight epochs:
-    * [[start]] raises the session's `spark.sql.broadcastTimeout` (only when
-    * the user never set the key themselves), [[finish]] restores the default
-    * once no epoch remains in flight — pipelined epochs share one raise via
-    * this refcount, so an application embedding CrawlEpoch on a long-lived
-    * session gets its 300 s broadcast hang safety net back between crawls.
-    * An epoch that is started but never finished (abandoned) leaves the
-    * raise in place — there is no safe point to restore under it. */
-  private val raiseLock = new Object
-  private var activeEpochs = 0
-  private var raisedOn: Option[SparkSession] = None
+  /** Epochs and requeues whose deciding row count is at most this run on
+    * Spark's interpreted path (see [[stepSettings]]). Compiled, an epoch's
+    * ~45 plans generate ~150 Janino classes, which no warm-up keeps — they
+    * differ in literals (stage id, epoch, snapshot ids) and one drain round
+    * generates more of them than Spark's codegen cache holds. In 10
+    * alternating pairs per size the bound sits between a tie and a loss:
+    * at 0.8M frontier rows compiled and interpreted epochs were even, at 2M
+    * compiled was faster in 7 of 10 pairs and by 11% in the median
+    * (BASELINE.md, "Interpreted small crawl steps"). */
+  private val InterpretedRowsMax = 1000000L
+
+  /** The session SQL settings of a crawl step deciding on `rows` (exact,
+    * from a manifest; `Long.MaxValue` = unknown, which runs compiled):
+    *   - `spark.sql.broadcastTimeout` 3600: every broadcast here is
+    *     threshold-gated in ROWS, but a broadcast whose input subplan is the
+    *     FIRST materializer of a cold cache (the keys-side prune's maybes
+    *     over the just-persisted frontier) runs the whole upstream under
+    *     the timeout — 300 s by default, a flaky failure in a degraded I/O
+    *     window. Batch epochs prefer late success.
+    *   - at most [[InterpretedRowsMax]] rows: whole-stage codegen off and
+    *     the expression factory on `NO_CODEGEN` (an internal SQLConf key,
+    *     but the only switch that interprets projections, predicates and
+    *     orderings). Above the bound Spark's defaults stand.
+    * An epoch decides on its input frontier's rows, which bound the rows
+    * of every per-epoch stage: the schedule, fetch, seen-set delta and
+    * next frontier are at most frontier-sized, and a PageStore read is
+    * pruned to the schedule's buckets. Two scans are not bounded by it:
+    * the seen set's full shard rebuild when the set outgrows its shard
+    * capacity (rare, amortized over the epochs that filled it), and the
+    * corpus frames of an epoch run without a PageStore, whose size is not
+    * known without a job. A requeue decides on its out snapshot's rows. */
+  private[graft] def stepSettings(rows: Long): Map[String, String] =
+    Map("spark.sql.broadcastTimeout" -> "3600") ++ (
+      if (rows <= InterpretedRowsMax)
+        Map("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+      else Map.empty)
+
+  /** Session settings SCOPED to the in-flight crawl steps. Each step
+    * [[enter]]s with its [[stepSettings]] and [[exit]]s with the token it
+    * got; after each, the session holds the settings EVERY in-flight step
+    * agrees on, so a step above the bound runs compiled even while small
+    * ones are in flight (they then run compiled too, a speed cost only —
+    * results are identical in both modes), and the last exit restores the
+    * session. [[start]] enters and [[finish]] exits (the out-stage future
+    * outlives start()); [[requeueFailures]] enters and exits around its own
+    * work. Two rules:
+    *   - a key the user set explicitly (`getAllConfs` holds explicitly-set
+    *     entries only) is never touched — setting
+    *     `spark.sql.codegen.factoryMode` / `spark.sql.codegen.wholeStage`
+    *     yourself overrides the size gate;
+    *   - a value is changed or restored only while it is still ours.
+    * The settings are SESSION-wide: a query the embedding application runs
+    * on the same session while a step is in flight runs under them too. A
+    * start() that throws exits its own step; an epoch that is started but
+    * never finished (abandoned) keeps its step, and the settings, in place —
+    * there is no safe point to restore under it. */
+  private[graft] object StepScope {
+    private var steps = Map.empty[Long, Map[String, String]] // in flight
+    private var next = 0L
+    private var ours = Map.empty[String, String] // set by us, still our value
+    private var session: Option[SparkSession] = None
+
+    def enter(spark: SparkSession, settings: Map[String, String]): Long = synchronized {
+      if (steps.isEmpty) session = Some(spark)
+      next += 1
+      steps += next -> settings
+      sync()
+      next
+    }
+
+    def exit(step: Long): Unit = synchronized {
+      steps -= step
+      sync()
+      if (steps.isEmpty) session = None
+    }
+
+    private def sync(): Unit = session.foreach { s =>
+      val agreed =
+        if (steps.isEmpty) Map.empty[String, String]
+        else steps.values.reduce((a, b) => a.filter { case (k, v) => b.get(k).contains(v) })
+      val explicit = s.sessionState.conf.getAllConfs
+      ours = ours.filter { case (k, v) => explicit.get(k).contains(v) }
+      for (k <- agreed.keySet ++ ours.keySet if ours.contains(k) || !explicit.contains(k))
+        agreed.get(k) match {
+          case Some(v) => s.conf.set(k, v); ours += k -> v
+          case None    => s.conf.unset(k); ours -= k
+        }
+    }
+  }
+
+  /** Lineage explaining the execution mode a step's commit ran under:
+    * `exec` is `interpreted` when the session runs with whole-stage codegen
+    * off and the `NO_CODEGEN` expression factory, else `compiled`;
+    * `exec_rows` is the count the step's size gate decided on. */
+  private def execLineage(spark: SparkSession, rows: Long): Map[String, String] = {
+    val interpreted = spark.conf.get("spark.sql.codegen.wholeStage") == "false" &&
+      spark.conf.get("spark.sql.codegen.factoryMode") == "NO_CODEGEN"
+    Map("exec" -> (if (interpreted) "interpreted" else "compiled"),
+      "exec_rows" -> rows.toString)
+  }
 
   final case class EpochMetrics(
       epoch: Long,
@@ -73,7 +163,8 @@ object CrawlEpoch {
       // action (no separate scan job); None when the stage was resumed as
       // already-committed — finish() then falls back to the snapshot scan
       outDone: scala.concurrent.Future[Option[(Long, Long, Long)]],
-      private[crawl] val outTable: SnapshotTable)
+      private[crawl] val outTable: SnapshotTable,
+      private[crawl] val step: Long) // its StepScope token
 
   def frontierTable(stateRoot: String, spark: SparkSession) =
     new SnapshotTable(s"$stateRoot/frontier", spark)
@@ -129,28 +220,46 @@ object CrawlEpoch {
       linkPriorityDecay: Double = 0.8,
       pageStore: Option[String] = None): RunningEpoch = {
     GraftFunctions.register(spark)
-    // Batch crawl epochs prefer late success over spurious broadcast aborts:
-    // every broadcast here is threshold-gated in ROWS (robots, schedule,
-    // maybes, tombstones), but a broadcast whose input subplan is the FIRST
-    // materializer of a cold cache (the keys-side prune's maybes over the
-    // just-persisted frontier, when the gating count was skipped) runs the
-    // whole upstream under spark.sql.broadcastTimeout — 300 s default, a
-    // flaky failure mode in a degraded I/O window. Raised ONLY when the user
-    // never set the key themselves (getAllConfs holds explicitly-set entries
-    // only — an explicit 300 is respected), and restored by finish() once no
-    // epoch is in flight (see raiseLock above): the out-stage future
-    // outlives start(), so the refcount — not this call — scopes the raise.
-    raiseLock.synchronized {
-      activeEpochs += 1
-      if (raisedOn.isEmpty &&
-          !spark.sessionState.conf.getAllConfs.contains("spark.sql.broadcastTimeout")) {
-        spark.conf.set("spark.sql.broadcastTimeout", "3600")
-        raisedOn = Some(spark)
-      }
-    }
     val frontier = frontierTable(stateRoot, spark)
-    val seen = new SeenSet(s"$stateRoot/seen", spark)
     val schedTable = new SnapshotTable(s"$stateRoot/scheduled", spark)
+    // Manifest-exact frontier row count (normalize only dedupes), read
+    // before the first action: it picks the epoch's execution mode (see
+    // stepSettings) and bounds the Bloom maybes so the keys-side prune's
+    // gating count job is skipped whenever the whole frontier fits the
+    // broadcast cap — the per-epoch-floor case. No counting job is ever run
+    // for this. Also drives the empty-epoch short-circuits below: 0
+    // frontier rows means the schedule/robots/frontier stages provably have
+    // nothing to compute.
+    val frontierRowsExact = frontier.currentRowCount.getOrElse(Long.MaxValue)
+    // A resumed epoch whose schedule is committed decides on the count that
+    // schedule recorded: the current frontier may already be the epoch's
+    // output.
+    val execRows = schedTable.snapshotForLineage("epoch", epoch.toString)
+      .flatMap(schedTable.lineage(_).get("exec_rows")).map(_.toLong)
+      .getOrElse(frontierRowsExact)
+    val step = StepScope.enter(spark, stepSettings(execRows))
+    try startScoped(stateRoot, spark, pages, images, robots, budgetPerHost, epoch,
+      linkPriorityDecay, pageStore, frontier, schedTable, frontierRowsExact, execRows, step)
+    catch { case t: Throwable => StepScope.exit(step); throw t }
+  }
+
+  /** [[start]]'s body, run inside its [[StepScope]]. */
+  private def startScoped(
+      stateRoot: String,
+      spark: SparkSession,
+      pages: DataFrame,
+      images: DataFrame,
+      robots: Option[DataFrame],
+      budgetPerHost: Int,
+      epoch: Long,
+      linkPriorityDecay: Double,
+      pageStore: Option[String],
+      frontier: SnapshotTable,
+      schedTable: SnapshotTable,
+      frontierRowsExact: Long,
+      execRows: Long,
+      step: Long): RunningEpoch = {
+    val seen = new SeenSet(s"$stateRoot/seen", spark)
     val outTable = new SnapshotTable(s"$stateRoot/out", spark, epochOrdered = true)
 
     def timed[A](name: String)(f: => A): A = {
@@ -239,19 +348,13 @@ object CrawlEpoch {
     // 10^10 seen keys the prune keeps the key table out of the exchange)
     // and the schedule plan itself, then is dropped once the schedule is
     // committed. Epoch-frontier sized by the shedding invariant.
-    // Manifest-exact frontier row count (normalize only dedupes): bounds
-    // the Bloom maybes so the keys-side prune's gating count job is
-    // skipped whenever the whole frontier fits the broadcast cap — the
-    // per-epoch-floor case. No counting job is ever run for this. Also
-    // drives the empty-epoch short-circuits below: 0 frontier rows means
-    // the schedule/robots/frontier stages provably have nothing to compute.
-    val frontierRowsExact = frontier.currentRowCount.getOrElse(Long.MaxValue)
+    val schedLineage =
+      Map("epoch" -> epoch.toString, "stage" -> "scheduled") ++ execLineage(spark, execRows)
     if (!schedTable.stageDone(epoch, "scheduled")) timed("schedule") {
       // empty frontier ⇒ empty schedule: typed manifest-only commit from
       // the parent schedule's recorded schema (first epoch has no parent —
       // the general path writes the schema then)
-      if (frontierRowsExact == 0L && schedTable.commitEmpty(
-          Map("epoch" -> epoch.toString, "stage" -> "scheduled")).isDefined)
+      if (frontierRowsExact == 0L && schedTable.commitEmpty(schedLineage).isDefined)
         schedTable.markStage(epoch, "scheduled")
       else {
         val normalized = Scheduler.normalize(frontier.read())
@@ -261,7 +364,7 @@ object CrawlEpoch {
             robotsCache.map(_._3), budgetPerHost,
             robotsHosts = robotsCache.map(_._4).getOrElse(Long.MaxValue),
             persisted = true, frontierRows = frontierRowsExact)
-          schedTable.commit(sch, Map("epoch" -> epoch.toString, "stage" -> "scheduled"))
+          schedTable.commit(sch, schedLineage)
           schedTable.markStage(epoch, "scheduled")
         } finally normalized.unpersist(blocking = false)
       }
@@ -608,7 +711,8 @@ object CrawlEpoch {
       newFrontier = frontier.snapshotForLineage("epoch", epoch.toString)
         .flatMap(frontier.rowCount).getOrElse(0L),
       outDone = outF,
-      outTable = outTable)
+      outTable = outTable,
+      step = step)
   }
 
   /** Expire old crawl-STATE snapshots (storage maintenance between epochs):
@@ -655,7 +759,9 @@ object CrawlEpoch {
     * `retryBudget` is PERMANENTLY dropped — it stays in the seen set and is
     * never rescheduled — matching the reference's 100-attempt cap; the drop
     * count is recorded as `requeue_dropped` in the committed delta's
-    * lineage (durable in the manifest, next to the rows it explains).
+    * lineage (durable in the manifest, next to the rows it explains),
+    * with the execution mode it ran under (`exec`, `exec_rows`; see
+    * [[execLineage]]), decided on the out snapshot's rows.
     * IDEMPOTENT per epoch (a stage marker makes a replay a 0-row no-op).
     * Returns the number of URLs re-queued. */
   def requeueFailures(
@@ -671,37 +777,42 @@ object CrawlEpoch {
     if (frontier.stageDone(epoch, "requeue")) return 0L
     val snap = outTable.snapshotForLineage("epoch", epoch.toString)
       .getOrElse(sys.error(s"no out snapshot for epoch $epoch under $stateRoot"))
-    val outSnap = outTable.readAt(snap)
-    val prior = // legacy out snapshots (pre-retries schedules) count as 0;
-      // coalesce also covers null retries from mixed-schema delta chains —
-      // a null here would fail BOTH the < budget filter (not retried) and
-      // the >= budget drop counter (not counted): silent URL loss
-      if (outSnap.columns.contains("retries"))
-        coalesce(col("retries"), lit(0)) else lit(0)
-    // Persist the failed set: it feeds the drop/keep accounting, the seen
-    // retraction AND the frontier delta — unpersisted, each action would
-    // re-scan and re-distinct the epoch's out snapshot, and at 10^10-URL
-    // scale transient failures are the norm, not the exception.
-    val failed = outSnap
-      .filter(col("fetch_status").isin(retryStatuses: _*))
-      .select(col("canon_url").as("url"), col("url_hash"),
-        prior.as("retries")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the out snapshot's manifest-exact row count bounds every frame below
+    val outRows = outTable.rowCount(snap).getOrElse(Long.MaxValue)
+    val step = StepScope.enter(spark, stepSettings(outRows))
     try {
-      val dropped = failed.filter(col("retries") >= retryBudget).count()
-      val within = failed.filter(col("retries") < retryBudget)
-      seen.retract(within.select(col("url_hash")),
-        Map("epoch" -> epoch.toString, "stage" -> "requeue"))
-      // the drop count rides the delta's LINEAGE so it is durably recorded
-      // in the manifest, queryable next to the rows it explains
-      val fid = frontier.commitDelta(
-        within.select(col("url"), lit(retryPriority).as("priority"),
-          (col("retries") + 1).as("retries")),
-        Map("epoch" -> epoch.toString, "stage" -> "requeue",
-          "requeue_dropped" -> dropped.toString))
-      frontier.markStage(epoch, "requeue")
-      frontier.deltaRows(fid).getOrElse(0L)
-    } finally failed.unpersist(blocking = false)
+      val outSnap = outTable.readAt(snap)
+      val prior = // legacy out snapshots (pre-retries schedules) count as 0;
+        // coalesce also covers null retries from mixed-schema delta chains —
+        // a null here would fail BOTH the < budget filter (not retried) and
+        // the >= budget drop counter (not counted): silent URL loss
+        if (outSnap.columns.contains("retries"))
+          coalesce(col("retries"), lit(0)) else lit(0)
+      // Persist the failed set: it feeds the drop/keep accounting, the seen
+      // retraction AND the frontier delta — unpersisted, each action would
+      // re-scan and re-distinct the epoch's out snapshot, and at 10^10-URL
+      // scale transient failures are the norm, not the exception.
+      val failed = outSnap
+        .filter(col("fetch_status").isin(retryStatuses: _*))
+        .select(col("canon_url").as("url"), col("url_hash"),
+          prior.as("retries")).distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val dropped = failed.filter(col("retries") >= retryBudget).count()
+        val within = failed.filter(col("retries") < retryBudget)
+        seen.retract(within.select(col("url_hash")),
+          Map("epoch" -> epoch.toString, "stage" -> "requeue"))
+        // the drop count rides the delta's LINEAGE so it is durably recorded
+        // in the manifest, queryable next to the rows it explains
+        val fid = frontier.commitDelta(
+          within.select(col("url"), lit(retryPriority).as("priority"),
+            (col("retries") + 1).as("retries")),
+          Map("epoch" -> epoch.toString, "stage" -> "requeue",
+            "requeue_dropped" -> dropped.toString) ++ execLineage(spark, outRows))
+        frontier.markStage(epoch, "requeue")
+        frontier.deltaRows(fid).getOrElse(0L)
+      } finally failed.unpersist(blocking = false)
+    } finally StepScope.exit(step)
   }
 
   /** Await the epoch's sink stage and assemble its metrics. The out-table
@@ -710,23 +821,15 @@ object CrawlEpoch {
   def finish(r: RunningEpoch): EpochMetrics = {
     // metrics were observed on the commit's own write action; the scan
     // below only runs when this epoch RESUMED over an already-committed out
-    // stage (no fresh action to observe)
-    val observed =
-      scala.concurrent.Await.result(r.outDone, scala.concurrent.duration.Duration.Inf)
-    val outStats = if (observed.isDefined) None else
-      r.outTable.snapshotForLineage("epoch", r.epoch.toString)
-      .map(id => r.outTable.readAt(id).agg(outCounts.head, outCounts.tail: _*).collect()(0))
-    // last epoch out: restore the broadcast-timeout default we raised in
-    // start() — unless someone set their own value over ours in between
-    raiseLock.synchronized {
-      activeEpochs -= 1
-      if (activeEpochs == 0 && raisedOn.isDefined) {
-        val s = raisedOn.get
-        if (s.conf.get("spark.sql.broadcastTimeout", "3600") == "3600")
-          s.conf.unset("spark.sql.broadcastTimeout")
-        raisedOn = None
-      }
-    }
+    // stage (no fresh action to observe); a failed out stage still exits
+    // the epoch's scope
+    val (observed, outStats) = try {
+      val observed =
+        scala.concurrent.Await.result(r.outDone, scala.concurrent.duration.Duration.Inf)
+      (observed, if (observed.isDefined) None else
+        r.outTable.snapshotForLineage("epoch", r.epoch.toString)
+        .map(id => r.outTable.readAt(id).agg(outCounts.head, outCounts.tail: _*).collect()(0)))
+    } finally StepScope.exit(r.step)
     EpochMetrics(
       epoch = r.epoch,
       scheduled = r.scheduled,

@@ -197,8 +197,12 @@ abstract class SidecarProbe extends TernaryExpression {
     java.lang.Boolean.valueOf(probe(root, snapId, shardCount, h.asInstanceOf[Long]))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    // root and snapshot id are references, not literals: every snapshot of
+    // a root then shares one generated class instead of compiling its own
     val rootRef = ctx.addReferenceObj("probeRoot", root)
-    defineCodeGen(ctx, ev, (h, _, _) => s"$probeMethod($rootRef, ${snapId}L, $shardCount, $h)")
+    val snapRef = ctx.addReferenceObj("probeSnap", snapId)
+    defineCodeGen(ctx, ev, (h, _, _) =>
+      s"$probeMethod($rootRef, $snapRef.longValue(), $shardCount, $h)")
   }
 }
 

@@ -258,12 +258,17 @@ class FrontierSpec extends SparkSpecBase {
     val frontier = spark.read.parquet(fDir)
     val out = seen.filterUnseen(frontier)
     // CODEGEN_ONLY forbids the silent interpreted fallback: if
-    // BloomMightContain's doGenCode emitted uncompilable Java this throws
+    // BloomMightContain's doGenCode emitted uncompilable Java this throws.
+    // The prior state is restored, unset when it was unset: an explicitly
+    // set key would pin every later small crawl epoch on this shared
+    // session to compiled execution.
+    val prior = spark.sessionState.conf.getAllConfs.get("spark.sql.codegen.factoryMode")
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       val got = out.as[Long].collect().sorted.toSeq
       assert(got === (1000L until 1500L).toSeq)
-    } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    } finally prior.fold(spark.conf.unset("spark.sql.codegen.factoryMode"))(
+      spark.conf.set("spark.sql.codegen.factoryMode", _))
     // ONE scan of the frontier source (round 1's two complementary filters
     // scanned it twice); the probe rides the scan→join stage
     val plan = out.queryExecution.executedPlan.toString
