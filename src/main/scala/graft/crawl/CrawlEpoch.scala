@@ -4,7 +4,7 @@ import graft.frontier.{Scheduler, SeenSet, ShardFiles}
 import graft.functions.GraftFunctions
 import graft.table.SnapshotTable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSessions, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -53,7 +53,7 @@ object CrawlEpoch {
     * (BASELINE.md, "Interpreted small crawl steps"). */
   private val InterpretedRowsMax = 1000000L
 
-  /** The session SQL settings of a crawl step deciding on `rows` (exact,
+  /** The SQL settings of a crawl step deciding on `rows` (exact,
     * from a manifest; `Long.MaxValue` = unknown, which runs compiled):
     *   - `spark.sql.broadcastTimeout` 3600: every broadcast here is
     *     threshold-gated in ROWS, but a broadcast whose input subplan is the
@@ -80,62 +80,24 @@ object CrawlEpoch {
           "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
       else Map.empty)
 
-  /** Session settings SCOPED to the in-flight crawl steps. Each step
-    * [[enter]]s with its [[stepSettings]] and [[exit]]s with the token it
-    * got; after each, the session holds the settings EVERY in-flight step
-    * agrees on, so a step above the bound runs compiled even while small
-    * ones are in flight (they then run compiled too, a speed cost only —
-    * results are identical in both modes), and the last exit restores the
-    * session. [[start]] enters and [[finish]] exits (the out-stage future
-    * outlives start()); [[requeueFailures]] enters and exits around its own
-    * work. Two rules:
-    *   - a key the user set explicitly (`getAllConfs` holds explicitly-set
-    *     entries only) is never touched — setting
-    *     `spark.sql.codegen.factoryMode` / `spark.sql.codegen.wholeStage`
-    *     yourself overrides the size gate;
-    *   - a value is changed or restored only while it is still ours.
-    * The settings are SESSION-wide: a query the embedding application runs
-    * on the same session while a step is in flight runs under them too. A
-    * start() that throws exits its own step; an epoch that is started but
-    * never finished (abandoned) keeps its step, and the settings, in place —
-    * there is no safe point to restore under it. */
-  private[graft] object StepScope {
-    private var steps = Map.empty[Long, Map[String, String]] // in flight
-    private var next = 0L
-    private var ours = Map.empty[String, String] // set by us, still our value
-    private var session: Option[SparkSession] = None
-
-    def enter(spark: SparkSession, settings: Map[String, String]): Long = synchronized {
-      if (steps.isEmpty) session = Some(spark)
-      next += 1
-      steps += next -> settings
-      sync()
-      next
-    }
-
-    def exit(step: Long): Unit = synchronized {
-      steps -= step
-      sync()
-      if (steps.isEmpty) session = None
-    }
-
-    private def sync(): Unit = session.foreach { s =>
-      val agreed =
-        if (steps.isEmpty) Map.empty[String, String]
-        else steps.values.reduce((a, b) => a.filter { case (k, v) => b.get(k).contains(v) })
-      val explicit = s.sessionState.conf.getAllConfs
-      ours = ours.filter { case (k, v) => explicit.get(k).contains(v) }
-      for (k <- agreed.keySet ++ ours.keySet if ours.contains(k) || !explicit.contains(k))
-        agreed.get(k) match {
-          case Some(v) => s.conf.set(k, v); ours += k -> v
-          case None    => s.conf.unset(k); ours -= k
-        }
-    }
+  /** Applies [[stepSettings]]`(rows)` to `step`, the crawl step's own
+    * session: a [[GraftSessions.cloneOf]] the caller's session, taken when
+    * the step starts so that it inherits every key set before it. A key the
+    * caller set explicitly (a clone's `getAllConfs` holds exactly those) is
+    * left as it is, so setting `spark.sql.codegen.factoryMode` /
+    * `spark.sql.codegen.wholeStage` yourself overrides the size gate. Every
+    * table, frame and action of the step is built from `step`: its settings
+    * reach no other query, and the caller's session is never written.
+    * Returns `step`. */
+  private[graft] def withStepSettings(step: SparkSession, rows: Long): SparkSession = {
+    val explicit = step.sessionState.conf.getAllConfs
+    for ((k, v) <- stepSettings(rows) if !explicit.contains(k)) step.conf.set(k, v)
+    step
   }
 
   /** Lineage explaining the execution mode a step's commit ran under:
-    * `exec` is `interpreted` when the session runs with whole-stage codegen
-    * off and the `NO_CODEGEN` expression factory, else `compiled`;
+    * `exec` is `interpreted` when the step session runs with whole-stage
+    * codegen off and the `NO_CODEGEN` expression factory, else `compiled`;
     * `exec_rows` is the count the step's size gate decided on. */
   private def execLineage(spark: SparkSession, rows: Long): Map[String, String] = {
     val interpreted = spark.conf.get("spark.sql.codegen.wholeStage") == "false" &&
@@ -163,8 +125,7 @@ object CrawlEpoch {
       // action (no separate scan job); None when the stage was resumed as
       // already-committed — finish() then falls back to the snapshot scan
       outDone: scala.concurrent.Future[Option[(Long, Long, Long)]],
-      private[crawl] val outTable: SnapshotTable,
-      private[crawl] val step: Long) // its StepScope token
+      private[crawl] val outTable: SnapshotTable)
 
   def frontierTable(stateRoot: String, spark: SparkSession) =
     new SnapshotTable(s"$stateRoot/frontier", spark)
@@ -211,7 +172,7 @@ object CrawlEpoch {
     *        ignored by this epoch. */
   def start(
       stateRoot: String,
-      spark: SparkSession,
+      caller: SparkSession,
       pages: DataFrame,
       images: DataFrame,
       robots: Option[DataFrame],
@@ -219,7 +180,8 @@ object CrawlEpoch {
       epoch: Long,
       linkPriorityDecay: Double = 0.8,
       pageStore: Option[String] = None): RunningEpoch = {
-    GraftFunctions.register(spark)
+    GraftFunctions.register(caller)
+    val spark = GraftSessions.cloneOf(caller) // the step session, see withStepSettings
     val frontier = frontierTable(stateRoot, spark)
     val schedTable = new SnapshotTable(s"$stateRoot/scheduled", spark)
     // Manifest-exact frontier row count (normalize only dedupes), read
@@ -237,30 +199,12 @@ object CrawlEpoch {
     val execRows = schedTable.snapshotForLineage("epoch", epoch.toString)
       .flatMap(schedTable.lineage(_).get("exec_rows")).map(_.toLong)
       .getOrElse(frontierRowsExact)
-    val step = StepScope.enter(spark, stepSettings(execRows))
-    try startScoped(stateRoot, spark, pages, images, robots, budgetPerHost, epoch,
-      linkPriorityDecay, pageStore, frontier, schedTable, frontierRowsExact, execRows, step)
-    catch { case t: Throwable => StepScope.exit(step); throw t }
-  }
-
-  /** [[start]]'s body, run inside its [[StepScope]]. */
-  private def startScoped(
-      stateRoot: String,
-      spark: SparkSession,
-      pages: DataFrame,
-      images: DataFrame,
-      robots: Option[DataFrame],
-      budgetPerHost: Int,
-      epoch: Long,
-      linkPriorityDecay: Double,
-      pageStore: Option[String],
-      frontier: SnapshotTable,
-      schedTable: SnapshotTable,
-      frontierRowsExact: Long,
-      execRows: Long,
-      step: Long): RunningEpoch = {
+    withStepSettings(spark, execRows)
     val seen = new SeenSet(s"$stateRoot/seen", spark)
     val outTable = new SnapshotTable(s"$stateRoot/out", spark, epochOrdered = true)
+    val stepPages = GraftSessions.rebind(pages, spark)
+    val stepImages = GraftSessions.rebind(images, spark)
+    val stepRobots = robots.map(GraftSessions.rebind(_, spark))
 
     def timed[A](name: String)(f: => A): A = {
       // Job-group label per stage thread (thread-local in SparkContext):
@@ -310,7 +254,7 @@ object CrawlEpoch {
         case _                => None
       }
     }
-    val robotsCache: Option[(SnapshotTable, DataFrame, DataFrame, Long)] = robots.map { src =>
+    val robotsCache: Option[(SnapshotTable, DataFrame, DataFrame, Long)] = stepRobots.map { src =>
       val cacheT = new SnapshotTable(s"$stateRoot/robots", spark)
       val known = if (cacheT.exists) Some(cacheT.read()) else None
       val forSchedule = known.fold(src)(k =>
@@ -400,7 +344,7 @@ object CrawlEpoch {
     lazy val pagesHashed = pageStore match {
       case Some(path) =>
         PageStore.readForSchedule(spark, path, scheduled, schedRows)
-      case None => pages
+      case None => stepPages
         .withColumnsRenamed(Map("url" -> "page_url"))
         .withColumn("page_hash", GraftFunctions.urlHash64(col("page_url")))
     }
@@ -551,14 +495,14 @@ object CrawlEpoch {
         // epoch, so a filter under imgbloom/ is never another epoch's.
         val wantedImages =
           if (smallSchedule) // fetched ids are broadcast-small with the schedule
-            images.join(broadcast(fetchedIds), Seq("image_id"), "left_semi")
+            stepImages.join(broadcast(fetchedIds), Seq("image_id"), "left_semi")
           else {
             val imgRoot = s"$stateRoot/imgbloom"
             if (!ShardFiles.allPresent(ShardFiles.Bloom, imgRoot, schedSnap))
               SeenSet.buildWriteShards(imgRoot, schedSnap,
                 fetchedIds.select(xxhash64(col("image_id")).as("url_hash")),
                 math.max(1000L, schedRows / SeenSet.ShardCount))
-            images.where(call_function("bloom_might_contain",
+            stepImages.where(call_function("bloom_might_contain",
               xxhash64(col("image_id")), lit(imgRoot), lit(schedSnap)))
           }
         val imgSeed = substring(col("image_id"), 5, 8).cast("long")
@@ -711,8 +655,7 @@ object CrawlEpoch {
       newFrontier = frontier.snapshotForLineage("epoch", epoch.toString)
         .flatMap(frontier.rowCount).getOrElse(0L),
       outDone = outF,
-      outTable = outTable,
-      step = step)
+      outTable = outTable)
   }
 
   /** Expire old crawl-STATE snapshots (storage maintenance between epochs):
@@ -766,11 +709,12 @@ object CrawlEpoch {
     * Returns the number of URLs re-queued. */
   def requeueFailures(
       stateRoot: String,
-      spark: SparkSession,
+      caller: SparkSession,
       epoch: Long,
       retryStatuses: Seq[Int] = Seq(404),
       retryPriority: Double = 1.0,
       retryBudget: Int = 100): Long = {
+    val spark = GraftSessions.cloneOf(caller) // the step session, see withStepSettings
     val outTable = new SnapshotTable(s"$stateRoot/out", spark)
     val frontier = frontierTable(stateRoot, spark)
     val seen = new SeenSet(s"$stateRoot/seen", spark)
@@ -779,40 +723,38 @@ object CrawlEpoch {
       .getOrElse(sys.error(s"no out snapshot for epoch $epoch under $stateRoot"))
     // the out snapshot's manifest-exact row count bounds every frame below
     val outRows = outTable.rowCount(snap).getOrElse(Long.MaxValue)
-    val step = StepScope.enter(spark, stepSettings(outRows))
+    withStepSettings(spark, outRows)
+    val outSnap = outTable.readAt(snap)
+    val prior = // legacy out snapshots (pre-retries schedules) count as 0;
+      // coalesce also covers null retries from mixed-schema delta chains —
+      // a null here would fail BOTH the < budget filter (not retried) and
+      // the >= budget drop counter (not counted): silent URL loss
+      if (outSnap.columns.contains("retries"))
+        coalesce(col("retries"), lit(0)) else lit(0)
+    // Persist the failed set: it feeds the drop/keep accounting, the seen
+    // retraction AND the frontier delta — unpersisted, each action would
+    // re-scan and re-distinct the epoch's out snapshot, and at 10^10-URL
+    // scale transient failures are the norm, not the exception.
+    val failed = outSnap
+      .filter(col("fetch_status").isin(retryStatuses: _*))
+      .select(col("canon_url").as("url"), col("url_hash"),
+        prior.as("retries")).distinct()
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val outSnap = outTable.readAt(snap)
-      val prior = // legacy out snapshots (pre-retries schedules) count as 0;
-        // coalesce also covers null retries from mixed-schema delta chains —
-        // a null here would fail BOTH the < budget filter (not retried) and
-        // the >= budget drop counter (not counted): silent URL loss
-        if (outSnap.columns.contains("retries"))
-          coalesce(col("retries"), lit(0)) else lit(0)
-      // Persist the failed set: it feeds the drop/keep accounting, the seen
-      // retraction AND the frontier delta — unpersisted, each action would
-      // re-scan and re-distinct the epoch's out snapshot, and at 10^10-URL
-      // scale transient failures are the norm, not the exception.
-      val failed = outSnap
-        .filter(col("fetch_status").isin(retryStatuses: _*))
-        .select(col("canon_url").as("url"), col("url_hash"),
-          prior.as("retries")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val dropped = failed.filter(col("retries") >= retryBudget).count()
-        val within = failed.filter(col("retries") < retryBudget)
-        seen.retract(within.select(col("url_hash")),
-          Map("epoch" -> epoch.toString, "stage" -> "requeue"))
-        // the drop count rides the delta's LINEAGE so it is durably recorded
-        // in the manifest, queryable next to the rows it explains
-        val fid = frontier.commitDelta(
-          within.select(col("url"), lit(retryPriority).as("priority"),
-            (col("retries") + 1).as("retries")),
-          Map("epoch" -> epoch.toString, "stage" -> "requeue",
-            "requeue_dropped" -> dropped.toString) ++ execLineage(spark, outRows))
-        frontier.markStage(epoch, "requeue")
-        frontier.deltaRows(fid).getOrElse(0L)
-      } finally failed.unpersist(blocking = false)
-    } finally StepScope.exit(step)
+      val dropped = failed.filter(col("retries") >= retryBudget).count()
+      val within = failed.filter(col("retries") < retryBudget)
+      seen.retract(within.select(col("url_hash")),
+        Map("epoch" -> epoch.toString, "stage" -> "requeue"))
+      // the drop count rides the delta's LINEAGE so it is durably recorded
+      // in the manifest, queryable next to the rows it explains
+      val fid = frontier.commitDelta(
+        within.select(col("url"), lit(retryPriority).as("priority"),
+          (col("retries") + 1).as("retries")),
+        Map("epoch" -> epoch.toString, "stage" -> "requeue",
+          "requeue_dropped" -> dropped.toString) ++ execLineage(spark, outRows))
+      frontier.markStage(epoch, "requeue")
+      frontier.deltaRows(fid).getOrElse(0L)
+    } finally failed.unpersist(blocking = false)
   }
 
   /** Await the epoch's sink stage and assemble its metrics. The out-table
@@ -821,15 +763,12 @@ object CrawlEpoch {
   def finish(r: RunningEpoch): EpochMetrics = {
     // metrics were observed on the commit's own write action; the scan
     // below only runs when this epoch RESUMED over an already-committed out
-    // stage (no fresh action to observe); a failed out stage still exits
-    // the epoch's scope
-    val (observed, outStats) = try {
-      val observed =
-        scala.concurrent.Await.result(r.outDone, scala.concurrent.duration.Duration.Inf)
-      (observed, if (observed.isDefined) None else
-        r.outTable.snapshotForLineage("epoch", r.epoch.toString)
-        .map(id => r.outTable.readAt(id).agg(outCounts.head, outCounts.tail: _*).collect()(0)))
-    } finally StepScope.exit(r.step)
+    // stage (no fresh action to observe)
+    val observed =
+      scala.concurrent.Await.result(r.outDone, scala.concurrent.duration.Duration.Inf)
+    val outStats = if (observed.isDefined) None else
+      r.outTable.snapshotForLineage("epoch", r.epoch.toString)
+        .map(id => r.outTable.readAt(id).agg(outCounts.head, outCounts.tail: _*).collect()(0))
     EpochMetrics(
       epoch = r.epoch,
       scheduled = r.scheduled,

@@ -5,13 +5,15 @@ import graft.gen.SyntheticCorpus
 import graft.table.SnapshotTable
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{GraftSessions, SparkSession}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
 /** Execution mode of crawl steps: epochs and requeues under CrawlEpoch's
-  * interpreted-row bound run on Spark's interpreted path inside a scoped
-  * block of session settings, with results identical to compiled runs. */
+  * interpreted-row bound run on Spark's interpreted path in their own step
+  * session, with results identical to compiled runs. */
 class ExecModeSpec extends SparkSpecBase {
 
   private val WholeStage = "spark.sql.codegen.wholeStage"
@@ -19,6 +21,10 @@ class ExecModeSpec extends SparkSpecBase {
   private val BroadcastTimeout = "spark.sql.broadcastTimeout"
 
   private def explicitConfs = spark.sessionState.conf.getAllConfs
+
+  private def callerUntouched(when: String): Unit =
+    for (k <- Seq(WholeStage, FactoryMode, BroadcastTimeout))
+      assert(!explicitConfs.contains(k), s"$k set on the caller's session $when")
 
   private lazy val corpus = {
     val pages = SyntheticCorpus.pages(spark, 400).cache()
@@ -44,6 +50,11 @@ class ExecModeSpec extends SparkSpecBase {
     val t = new SnapshotTable(s"$root/scheduled", spark)
     t.snapshotForLineage("epoch", epoch.toString).map(t.lineage).getOrElse(Map.empty)
   }
+
+  /** Whether `session` plans a simple projection with whole-stage codegen. */
+  private def wholeStageCodegen(session: SparkSession): Boolean =
+    session.range(1000).selectExpr("id * 2 AS x").where("x > 10").queryExecution
+      .executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec])
 
   private def withConfs[A](confs: Map[String, String])(f: => A): A = {
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -107,17 +118,15 @@ class ExecModeSpec extends SparkSpecBase {
     val root = Files.createTempDirectory("execScope").toString
     CrawlEpoch.seed(root, spark, seeds)
     val r = CrawlEpoch.start(root, spark, pages, images, Some(robots), budgetPerHost = 5, epoch = 1)
-    // in flight: the out stage may still run under the scope
-    assert(explicitConfs.get(FactoryMode).contains("NO_CODEGEN"))
-    assert(explicitConfs.get(WholeStage).contains("false"))
+    // in flight: the out stage may still run in its step session
+    callerUntouched("while the out stage is in flight")
+    assert(wholeStageCodegen(spark), "a caller's query runs interpreted during the epoch")
     CrawlEpoch.finish(r)
     assert(schedLineage(root, 1).get("exec").contains("interpreted"))
     assert(schedLineage(root, 1).get("exec_rows").contains("300"), "the seed frontier's 300 rows decide")
-    for (k <- Seq(WholeStage, FactoryMode, BroadcastTimeout))
-      assert(!explicitConfs.contains(k), s"$k left set after finish")
+    callerUntouched("after finish")
     CrawlEpoch.requeueFailures(root, spark, 1, retryBudget = 1)
-    for (k <- Seq(WholeStage, FactoryMode, BroadcastTimeout))
-      assert(!explicitConfs.contains(k), s"$k left set after requeueFailures")
+    callerUntouched("after requeueFailures")
 
     withConfs(Map(WholeStage -> "true")) {
       CrawlEpoch.run(root, spark, pages, images, Some(robots), budgetPerHost = 5, epoch = 2)
@@ -126,42 +135,38 @@ class ExecModeSpec extends SparkSpecBase {
     assert(schedLineage(root, 2).get("exec").contains("compiled"), "whole-stage codegen set by the user")
     assert(!explicitConfs.contains(FactoryMode))
 
-    // pipelined epochs share one scope: it closes with the last finish()
+    // pipelined epochs: each decides in its own step session
     val piped = Files.createTempDirectory("execPiped").toString
     CrawlEpoch.seed(piped, spark, seeds)
     val p1 = CrawlEpoch.start(piped, spark, pages, images, Some(robots), budgetPerHost = 5, epoch = 1)
     val p2 = CrawlEpoch.start(piped, spark, pages, images, Some(robots), budgetPerHost = 5, epoch = 2)
+    callerUntouched("while pipelined epochs are in flight")
     CrawlEpoch.finish(p1)
-    assert(explicitConfs.get(FactoryMode).contains("NO_CODEGEN"), "scope closed under epoch 2")
     CrawlEpoch.finish(p2)
-    assert(schedLineage(piped, 2).get("exec").contains("interpreted"))
-    for (k <- Seq(WholeStage, FactoryMode, BroadcastTimeout))
-      assert(!explicitConfs.contains(k), s"$k left set after the pipelined epochs")
+    for (e <- 1L to 2L)
+      assert(schedLineage(piped, e).get("exec").contains("interpreted"), s"pipelined epoch $e")
+    callerUntouched("after the pipelined epochs")
   }
 
   test("a step above the bound runs compiled while small steps are in flight") {
-    import CrawlEpoch.{StepScope, stepSettings}
-    val small = StepScope.enter(spark, stepSettings(1000L))
-    assert(explicitConfs.get(FactoryMode).contains("NO_CODEGEN"))
-    // a large epoch started while the small one is in flight (pipelined)
-    val large = StepScope.enter(spark, stepSettings(2000000L))
-    assert(!explicitConfs.contains(FactoryMode) && !explicitConfs.contains(WholeStage),
+    import CrawlEpoch.{stepSettings, withStepSettings}
+    // a small and a large step session alive at once (a pipelined crawl)
+    val small = withStepSettings(GraftSessions.cloneOf(spark), 1000L)
+    val large = withStepSettings(GraftSessions.cloneOf(spark), 2000000L)
+    def confs(s: SparkSession) = s.sessionState.conf.getAllConfs
+    assert(confs(small).get(FactoryMode).contains("NO_CODEGEN"))
+    assert(confs(small).get(WholeStage).contains("false"))
+    assert(!confs(large).contains(FactoryMode) && !confs(large).contains(WholeStage),
       "the large step runs under the small one's interpreted settings")
-    assert(explicitConfs.get(BroadcastTimeout).contains("3600"))
-    StepScope.exit(small)
-    assert(!explicitConfs.contains(FactoryMode))
-    // a later small step in the same pipeline: compiled while the large one runs
-    val small2 = StepScope.enter(spark, stepSettings(1000L))
-    assert(!explicitConfs.contains(FactoryMode))
-    StepScope.exit(large)
-    assert(explicitConfs.get(FactoryMode).contains("NO_CODEGEN"), "alone again: interpreted")
-    // a value someone else set mid-scope is theirs: neither changed nor restored
-    spark.conf.set(WholeStage, "true")
-    StepScope.exit(small2)
-    assert(explicitConfs.get(WholeStage).contains("true"))
-    spark.conf.unset(WholeStage)
-    for (k <- Seq(WholeStage, FactoryMode, BroadcastTimeout))
-      assert(!explicitConfs.contains(k), s"$k left set after the last step")
+    for (s <- Seq(small, large)) assert(confs(s).get(BroadcastTimeout).contains("3600"))
+    assert(!wholeStageCodegen(small) && wholeStageCodegen(large) && wholeStageCodegen(spark))
+    callerUntouched("while both step sessions are alive")
+    // a key the caller set is inherited by a later step session and kept
+    withConfs(Map(WholeStage -> "true")) {
+      val small2 = withStepSettings(GraftSessions.cloneOf(spark), 1000L)
+      assert(confs(small2).get(WholeStage).contains("true"))
+      assert(confs(small2).get(FactoryMode).contains("NO_CODEGEN"))
+    }
     // unknown counts run compiled
     assert(!stepSettings(Long.MaxValue).contains(FactoryMode))
   }
