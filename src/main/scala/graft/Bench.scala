@@ -127,7 +127,7 @@ object Bench {
       } catch { case _: Exception => () }
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(shmBase))
     }
-    val builder = SparkSession.builder()
+    val builder = Graft.withCodegenCache(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpusInt.getOrElse(32).toString)
       .config("spark.sql.adaptive.enabled", "true")

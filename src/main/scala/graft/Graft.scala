@@ -42,11 +42,19 @@ object Graft {
     spark
   }
 
+  /** Sizes Spark's codegen cache (a static conf, 100 entries by default)
+    * past the ~150 classes of a compiled crawl epoch or query pass, unless
+    * the JVM's Spark properties (`spark-submit --conf`) already set it. */
+  def withCodegenCache(b: SparkSession.Builder): SparkSession.Builder = {
+    val key = "spark.sql.codegen.cache.maxEntries"
+    b.config(key, sys.props.getOrElse(key, "1000"))
+  }
+
   /** Local session with the settings this engine is tuned for. */
   def session(master: String = "local[*]",
       shufflePartitions: Option[Int] = None): SparkSession = {
     val cores = Runtime.getRuntime.availableProcessors()
-    val s = SparkSession.builder()
+    val s = withCodegenCache(SparkSession.builder())
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions",

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, GraftSessions, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -11,12 +10,11 @@ import org.apache.spark.sql.functions._
   * same tables. Column names/aliases match exactly on both sides (the driver
   * sorts columns by name before hashing). Every query carries a deterministic
   * ORDER BY on a unique key so row order is reproducible across engines and
-  * parallelism levels.
+  * parallelism levels. Each entry builds its frame in its own step session
+  * ([[GraftSessions.query]]), whose execution mode the frame's input size
+  * picks.
   */
 object SparkEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * the license-annotation operator end-to-end (SURVEY §2.3 P1). */
@@ -25,7 +23,7 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Queries.all
+    Queries.all.map { case (name, build) => name -> GraftSessions.query(build) }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -1,13 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSessions, SparkSession}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json for a DuckDB compare and exec_modes.json, each query's
+  * execution mode and scanned bytes. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = Graft.withCodegenCache(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -15,13 +16,6 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -34,9 +28,23 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // per query: the execution mode its step session ran and the input
+    // bytes that picked it (GraftSessions.query)
+    val modes = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      try {
+        val df = fn(spark, sfDir)
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        Some(s"${q(name)}: {\"mode\": ${q(GraftSessions.mode(df.sparkSession))}, " +
+          s"\"scanned_bytes\": ${GraftSessions.scannedBytes(df)}}")
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        None
+      }
+    }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/exec_modes.json"), modes.mkString("{", ",\n", "}"))
     spark.stop()
   }
 }

@@ -37,7 +37,7 @@ object CrawlMain {
     // store too large to cache); 0 = keep the in-memory corpus frame
     val storeBuckets = opts.getOrElse("--page-store-buckets", "0").toInt
 
-    val spark = SparkSession.builder()
+    val spark = graft.Graft.withCodegenCache(SparkSession.builder())
       .appName("graft-crawl")
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()

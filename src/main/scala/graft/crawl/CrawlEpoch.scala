@@ -44,13 +44,14 @@ object CrawlEpoch {
 
   /** Epochs and requeues whose deciding row count is at most this run on
     * Spark's interpreted path (see [[stepSettings]]). Compiled, an epoch's
-    * ~45 plans generate ~150 Janino classes, which no warm-up keeps — they
-    * differ in literals (stage id, epoch, snapshot ids) and one drain round
-    * generates more of them than Spark's codegen cache holds. In 10
-    * alternating pairs per size the bound sits between a tie and a loss:
-    * at 0.8M frontier rows compiled and interpreted epochs were even, at 2M
-    * compiled was faster in 7 of 10 pairs and by 11% in the median
-    * (BASELINE.md, "Interpreted small crawl steps"). */
+    * ~45 plans generate ~150 Janino classes, more than Spark's codegen cache
+    * (100 entries by default) holds, so the LRU evicts them before the next
+    * epoch asks for the same code: at 1000 entries a second fresh root
+    * compiled 0 classes. In 10 alternating pairs per size the bound sits
+    * between a tie and a loss: at 0.8M frontier rows compiled and
+    * interpreted epochs were even, at 2M compiled was faster in 7 of 10
+    * pairs and by 11% in the median (BASELINE.md, "Interpreted small crawl
+    * steps"). */
   private val InterpretedRowsMax = 1000000L
 
   /** The SQL settings of a crawl step deciding on `rows` (exact,
@@ -61,10 +62,8 @@ object CrawlEpoch {
     *     over the just-persisted frontier) runs the whole upstream under
     *     the timeout — 300 s by default, a flaky failure in a degraded I/O
     *     window. Batch epochs prefer late success.
-    *   - at most [[InterpretedRowsMax]] rows: whole-stage codegen off and
-    *     the expression factory on `NO_CODEGEN` (an internal SQLConf key,
-    *     but the only switch that interprets projections, predicates and
-    *     orderings). Above the bound Spark's defaults stand.
+    *   - at most [[InterpretedRowsMax]] rows: [[GraftSessions.Interpreted]].
+    *     Above the bound Spark's defaults stand.
     * An epoch decides on its input frontier's rows, which bound the rows
     * of every per-epoch stage: the schedule, fetch, seen-set delta and
     * next frontier are at most frontier-sized, and a PageStore read is
@@ -74,37 +73,20 @@ object CrawlEpoch {
     * corpus frames of an epoch run without a PageStore, whose size is not
     * known without a job. A requeue decides on its out snapshot's rows. */
   private[graft] def stepSettings(rows: Long): Map[String, String] =
-    Map("spark.sql.broadcastTimeout" -> "3600") ++ (
-      if (rows <= InterpretedRowsMax)
-        Map("spark.sql.codegen.wholeStage" -> "false",
-          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-      else Map.empty)
+    Map("spark.sql.broadcastTimeout" -> "3600") ++
+      (if (rows <= InterpretedRowsMax) GraftSessions.Interpreted else Map.empty)
 
   /** Applies [[stepSettings]]`(rows)` to `step`, the crawl step's own
-    * session: a [[GraftSessions.cloneOf]] the caller's session, taken when
-    * the step starts so that it inherits every key set before it. A key the
-    * caller set explicitly (a clone's `getAllConfs` holds exactly those) is
-    * left as it is, so setting `spark.sql.codegen.factoryMode` /
-    * `spark.sql.codegen.wholeStage` yourself overrides the size gate. Every
-    * table, frame and action of the step is built from `step`: its settings
-    * reach no other query, and the caller's session is never written.
-    * Returns `step`. */
-  private[graft] def withStepSettings(step: SparkSession, rows: Long): SparkSession = {
-    val explicit = step.sessionState.conf.getAllConfs
-    for ((k, v) <- stepSettings(rows) if !explicit.contains(k)) step.conf.set(k, v)
-    step
-  }
+    * session ([[GraftSessions.cloneOf]]), from which every table, frame and
+    * action of the step is built. Returns `step`. */
+  private[graft] def withStepSettings(step: SparkSession, rows: Long): SparkSession =
+    GraftSessions.settle(step, stepSettings(rows))
 
   /** Lineage explaining the execution mode a step's commit ran under:
-    * `exec` is `interpreted` when the step session runs with whole-stage
-    * codegen off and the `NO_CODEGEN` expression factory, else `compiled`;
-    * `exec_rows` is the count the step's size gate decided on. */
-  private def execLineage(spark: SparkSession, rows: Long): Map[String, String] = {
-    val interpreted = spark.conf.get("spark.sql.codegen.wholeStage") == "false" &&
-      spark.conf.get("spark.sql.codegen.factoryMode") == "NO_CODEGEN"
-    Map("exec" -> (if (interpreted) "interpreted" else "compiled"),
-      "exec_rows" -> rows.toString)
-  }
+    * `exec` is the step session's [[GraftSessions.mode]]; `exec_rows` is the
+    * count the step's size gate decided on. */
+  private def execLineage(spark: SparkSession, rows: Long): Map[String, String] =
+    Map("exec" -> GraftSessions.mode(spark), "exec_rows" -> rows.toString)
 
   final case class EpochMetrics(
       epoch: Long,
@@ -180,8 +162,7 @@ object CrawlEpoch {
       epoch: Long,
       linkPriorityDecay: Double = 0.8,
       pageStore: Option[String] = None): RunningEpoch = {
-    GraftFunctions.register(caller)
-    val spark = GraftSessions.cloneOf(caller) // the step session, see withStepSettings
+    val spark = GraftSessions.cloneOf(caller)
     val frontier = frontierTable(stateRoot, spark)
     val schedTable = new SnapshotTable(s"$stateRoot/scheduled", spark)
     // Manifest-exact frontier row count (normalize only dedupes), read
@@ -714,7 +695,7 @@ object CrawlEpoch {
       retryStatuses: Seq[Int] = Seq(404),
       retryPriority: Double = 1.0,
       retryBudget: Int = 100): Long = {
-    val spark = GraftSessions.cloneOf(caller) // the step session, see withStepSettings
+    val spark = GraftSessions.cloneOf(caller)
     val outTable = new SnapshotTable(s"$stateRoot/out", spark)
     val frontier = frontierTable(stateRoot, spark)
     val seen = new SeenSet(s"$stateRoot/seen", spark)

@@ -2,6 +2,8 @@
 """Local stand-in for the driver's correctness gate: run each oracle SQL from
 Verify's oracle_sql.json in DuckDB over the sfDir parquet tables, and compare
 against the Spark parquet output (columns sorted by name, rows as produced).
+When Verify wrote exec_modes.json, each OK line also names the execution mode
+the query ran in and the input bytes that picked it.
 
 Usage: check_oracle.py <sfDir> <verifyOutDir>
 """
@@ -32,6 +34,8 @@ def main(sf_dir, out_dir):
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {tb} AS SELECT * FROM read_parquet('{p}')")
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
+    modes_path = os.path.join(out_dir, "exec_modes.json")
+    modes = json.load(open(modes_path)) if os.path.exists(modes_path) else {}
     n_ok = n_bad = 0
     for name, sql in sorted(oracles.items()):
         spark_files = glob.glob(os.path.join(out_dir, name, "*.parquet"))
@@ -63,7 +67,9 @@ def main(sf_dir, out_dir):
         if dt:
             print(f"WARN {name}: dtype drift on {dt}: "
                   + ", ".join(f"{c}:{a[c].dtype}vs{b[c].dtype}" for c in dt))
-        print(f"OK   {name} ({len(got_n)} rows)"); n_ok += 1
+        m = modes.get(name)
+        mode = f", {m['mode']}, {m['scanned_bytes']} B scanned" if m else ""
+        print(f"OK   {name} ({len(got_n)} rows{mode})"); n_ok += 1
     print(f"\n{n_ok} ok, {n_bad} failed")
     return 1 if n_bad else 0
 
