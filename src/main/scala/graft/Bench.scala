@@ -212,13 +212,18 @@ object Bench {
         // charged for it; q_seen_retract and q_pagestore build their
         // memoized state/store (input prep) so the timed runs measure the
         // probe/pruned-read, not one-time construction.
+        // Each run materializes every row and column of the query (the
+        // `noop` sink): `count()` lets the optimizer prune output columns
+        // (at sf0.1, q_percentiles 0.245 s under count() vs 5.46 s collected).
+        def materialize(): Unit =
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         if (name == "q1_agg" || name == "q_seen_retract" ||
             name == "q_pagestore" || preruns(name))
-          try SparkEntry.queries(name)(spark, sfDir).count() catch { case _: Throwable => }
+          try materialize() catch { case _: Throwable => }
         val wb = winSample()
         val (_, secs) = time {
-          try fn(spark, sfDir).count()
-          catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); -1L }
+          try materialize()
+          catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
         }
         val wd = winDelta(wb, winSample())
         queriesGc += wd._1

@@ -504,9 +504,12 @@ class CrawlEpochSpec extends SparkSpecBase {
   }
 
   test("mid-epoch resume at the publish boundaries: manifest without pointer flip, pointer without marker") {
-    val (pages, images, seeds, robots) = corpus()
+    val (pages, images, _, robots) = corpus()
+    // seeds past the corpus: their 404s give the requeue rows to append
+    val seeds = SyntheticCorpus.seedUrls(spark, 300, pageCount = 600)
     def crawl(root: String, epoch: Long) =
       CrawlEpoch.run(root, spark, pages, images, Some(robots), budgetPerHost = 5, epoch = epoch)
+    def requeue(root: String) = CrawlEpoch.requeueFailures(root, spark, epoch = 2)
     def state(root: String) = (
       outSorted(root),
       CrawlEpoch.frontierTable(root, spark).read()
@@ -518,30 +521,66 @@ class CrawlEpochSpec extends SparkSpecBase {
     CrawlEpoch.seed(clean, spark, seeds)
     crawl(clean, 1)
     val cleanMetrics = crawl(clean, 2)
+    val cleanRequeued = requeue(clean)
+    assert(cleanRequeued > 0, "epoch 2 must have failures to requeue")
     val cleanState = state(clean)
-    // A crash inside epoch 2's publish of `table`, simulated by editing files
-    // after a complete epoch 2. The marker is always lost; with
-    // `flipped = false` the pointer is also put back to epoch 1's snapshot,
-    // leaving epoch 2's manifest on disk unreferenced.
-    for (table <- Seq("out", "frontier"); flipped <- Seq(false, true)) {
-      val label = s"$table stage, " +
+    // A crash inside the publish of `stage` to `table`, simulated by editing
+    // files after the complete step: epoch 2 for its stages, else epoch 2's
+    // requeue. The marker is always lost; with `flipped = false` the pointer
+    // is also put back to the snapshot before the step, leaving the step's
+    // manifest on disk unreferenced. The schedule is left out: no later
+    // stage can have run while its marker is missing.
+    val stages = Seq("out" -> "out", "seen" -> "seen", "frontier" -> "frontier",
+      "robots" -> "robots", "requeue" -> "frontier")
+    for ((stage, table) <- stages; flipped <- Seq(false, true)) {
+      val label = s"$stage stage, " +
         (if (flipped) "pointer flipped, marker missing" else "manifest written, pointer not flipped")
-      val root = Files.createTempDirectory(s"crawlPub-$table").toString
+      val root = Files.createTempDirectory(s"crawlPub-$stage").toString
       val pointer = java.nio.file.Paths.get(root, table, "snapshots", "current")
       CrawlEpoch.seed(root, spark, seeds)
       crawl(root, 1)
-      val epoch1Pointer = Files.readAllBytes(pointer)
-      crawl(root, 2)
+      if (stage == "requeue") crawl(root, 2)
+      val before = Files.readAllBytes(pointer)
+      if (stage == "requeue") requeue(root) else crawl(root, 2)
       val orphan = new SnapshotTable(s"$root/$table", spark).currentSnapshotId.get
-      if (!flipped) Files.write(pointer, epoch1Pointer)
-      Files.delete(java.nio.file.Paths.get(root, table, "stages", s"e2-$table"))
-      val resumed = crawl(root, 2)
-      assert(resumed === cleanMetrics, s"$label: resumed metrics differ from the clean run")
+      if (!flipped) Files.write(pointer, before)
+      Files.delete(java.nio.file.Paths.get(root, table, "stages", s"e2-$stage"))
+      val replayed =
+        if (stage == "requeue") requeue(root)
+        else {
+          assert(crawl(root, 2) === cleanMetrics, s"$label: resumed metrics differ from the clean run")
+          requeue(root)
+        }
       assert(state(root) === cleanState, s"$label: resumed state differs from the clean run")
       val t = new SnapshotTable(s"$root/$table", spark)
-      assert(t.stageDone(2, table), s"$label: marker not rewritten")
-      assert(t.currentSnapshotId.exists(_ > orphan),
-        s"$label: the redone stage must publish past the unreferenced manifest")
+      assert(t.stageDone(2, stage), s"$label: marker not rewritten")
+      if (stage == "requeue" && flipped) {
+        assert(replayed === 0L, s"$label: the replay re-queued URLs")
+        assert(t.currentSnapshotId === Some(orphan), s"$label: the replay committed")
+      } else {
+        assert(replayed === cleanRequeued, s"$label: re-queued count differs from the clean run")
+        assert(t.currentSnapshotId.exists(_ > orphan),
+          s"$label: the redone stage must publish past the unreferenced manifest")
+      }
     }
+  }
+
+  test("a crawl adds no listener to the SparkContext: 10 epochs, each with its requeue") {
+    // a caller without query-execution listeners: a step session copies its
+    // caller's, so any bus added here is one the crawl added
+    val caller = spark.newSession()
+    val (pages, images, _, robots) = corpus()
+    // seeds past the corpus: their 404s are re-queued every epoch, so no
+    // epoch drains
+    val seeds = SyntheticCorpus.seedUrls(spark, 300, pageCount = 600)
+    val root = Files.createTempDirectory("crawlListeners").toString
+    CrawlEpoch.seed(root, caller, seeds)
+    val before = executionListenerBuses()
+    (1L to 10L).foreach { e =>
+      val m = CrawlEpoch.run(root, caller, pages, images, Some(robots), budgetPerHost = 5, epoch = e)
+      assert(m.scheduled > 0, s"epoch $e scheduled nothing")
+      CrawlEpoch.requeueFailures(root, caller, epoch = e)
+    }
+    assert(executionListenerBuses() <= before)
   }
 }

@@ -6,8 +6,6 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
 /** Execution mode of the query surface: each SparkEntry.queries entry runs
   * in its own step session, interpreted when its input is small, with rows
   * identical to compiled runs and the caller's session left as it was. */
@@ -26,15 +24,6 @@ class QueryExecModeSpec extends SparkSpecBase {
 
   private def wholeStageCodegen(df: DataFrame): Boolean =
     df.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec])
-
-  /** `ExecutionListenerBus`es on the SparkContext's listener bus (both
-    * accessors are `private[spark]`, public in bytecode). */
-  private def executionListenerBuses(): Int = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("listeners").invoke(bus).asInstanceOf[java.util.List[AnyRef]]
-      .asScala.count(_.getClass.getSimpleName == "ExecutionListenerBus")
-  }
 
   test("every query returns the same rows interpreted and compiled; the caller keeps its settings") {
     val before = codegenKeys

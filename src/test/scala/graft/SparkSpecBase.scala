@@ -4,10 +4,23 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Shared local session for operator specs. */
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSpecBase.session
+
+  /** The `ExecutionListenerBus`es on the SparkContext's shared listener
+    * queue (both accessors are `private[spark]`, public in bytecode): a
+    * session with a query-execution listener (an `Observation`, or one it
+    * copied from its parent) adds one until it is collected. */
+  protected def executionListenerBuses(): Int = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("listeners").invoke(bus).asInstanceOf[java.util.List[AnyRef]]
+      .asScala.count(_.getClass.getSimpleName == "ExecutionListenerBus")
+  }
 
   override protected def afterAll(): Unit = super.afterAll()
 }
