@@ -294,10 +294,11 @@ object Bench {
     // over the SAME corpus frames load and JIT-compile the engine's and
     // Spark's own code on both epoch shapes (epoch ≥2 adds the non-empty
     // seen-set paths), so the timed epochs measure engine throughput instead
-    // of JVM start-up. They do NOT pre-compile the timed epochs' generated
-    // classes: those differ from the warm-up's in literals (stage ids, epoch,
-    // snapshot ids), and every crawl step runs interpreted anyway
-    // (CrawlEpoch's step settings), compiling next to nothing.
+    // of JVM start-up. They run interpreted (4,000 seeds), so they
+    // compile none of the classes of timed steps over 1M frontier rows
+    // (SPARK_GRAFT_CRAWL_N over 500k: seeds are 2× pages), which run
+    // compiled; the codegen cache (1000 entries, see withCodegenCache) then
+    // keeps those for the next timed epoch instead of evicting them.
     val warmupRan = !sys.env.get("SPARK_GRAFT_WARMUP").contains("0")
     val wWarmup0 = winSample()
     val warmupJson =

@@ -120,6 +120,23 @@ object CrawlEpoch {
     val out = new SnapshotTable(s"$stateRoot/out", spark, epochOrdered = true)
     val robotsTable = new SnapshotTable(s"$stateRoot/robots", spark)
     val seen = new SeenSet(s"$stateRoot/seen", spark)
+
+    /** This epoch's frontier-stage commit if the current frontier descends
+      * from it: the walk up `parent_id` passes requeue deltas and later
+      * epochs' commits and stops at any other, on a fresh epoch the previous
+      * epoch's frontier commit, one or two manifests up. */
+    def frontierCommit: Option[Long] =
+      Iterator.unfold(frontier.currentSnapshotId)(_.map(id => (id, frontier.parentOf(id))))
+        .map(id => id -> frontier.lineage(id)).find { case (_, l) =>
+          !l.get("stage").contains("requeue") && !l.get("epoch").exists(_.toLong > epoch) }
+        .collect { case (id, l) if stageLineage("frontier").toSet.subsetOf(l.toSet) => id }
+
+    /** The frontier snapshot an epoch reads, in every stage: the parent of
+      * its [[frontierCommit]], else the current one. So a resumed epoch
+      * reads what the clean run read, never its own output. */
+    lazy val input: Long = frontierCommit.fold(frontier.currentSnapshotId)(frontier.parentOf)
+      .getOrElse(sys.error(s"epoch $epoch: no input frontier under $stateRoot/frontier"))
+
     val rows: Long = decide(this)
     withStepSettings(spark, rows)
 
@@ -139,8 +156,10 @@ object CrawlEpoch {
 
   /** An epoch's step: its corpus, rebound to the step session, and once
     * the schedule stage has run, the committed schedule. It decides on the
-    * input frontier's rows; a resumed epoch with a committed schedule, on
-    * the count that schedule recorded (the frontier may be its output).
+    * manifest-exact rows of its [[Step.input]] frontier, which also bound
+    * the Bloom maybes (the keys-side prune skips its gating count job when
+    * the whole frontier fits the broadcast cap) and, at 0, short-circuit the
+    * schedule, robots and frontier stages.
     * @param pageStore path of a [[PageStore]]-bucketed corpus layout; when
     *        given, the fetch/link corpus scans read the store PRUNED to the
     *        schedule's hash buckets instead of scanning `pages` — the
@@ -150,40 +169,22 @@ object CrawlEpoch {
       pages: DataFrame, images: DataFrame, robots: Option[DataFrame],
       val budgetPerHost: Int, val linkPriorityDecay: Double, val pageStore: Option[String])
       extends Step(root, caller, epochNo)(s =>
-        s.sched.snapshotForLineage("epoch", epochNo.toString)
-          .flatMap(s.sched.lineage(_).get("exec_rows")).map(_.toLong)
-          .getOrElse(s.frontier.currentRowCount.getOrElse(Long.MaxValue))) {
+        s.frontier.rowCount(s.input).getOrElse(Long.MaxValue)) {
     val stepImages: DataFrame = GraftSessions.rebind(images, spark)
 
-    // Manifest-exact frontier row count (normalize only dedupes), read
-    // before the first action: it bounds the Bloom maybes so the keys-side
-    // prune's gating count job is skipped whenever the whole frontier fits
-    // the broadcast cap — the per-epoch-floor case. No counting job is ever
-    // run for this. Also drives the empty-epoch short-circuits of the stages:
-    // 0 frontier rows means the schedule/robots/frontier stages provably
-    // have nothing to compute.
-    val frontierRows: Long = frontier.currentRowCount.getOrElse(Long.MaxValue)
-
-    // Robots cache (north rule "robots.txt caching"). The robots source
-    // models the live web: fetching is per-host work, so the cache stores
-    // every host's verdict (including "no robots.txt", as a null
-    // disallow-list — negative caching) and each epoch fetches ONLY the
-    // hosts newly appearing in the frontier, committed as a DELTA snapshot
-    // (the table compacts its chain, so the cache's dirs stay bounded).
-    // Cost discipline: the SCHEDULE gates against `cache ∪ (source \ cached
-    // hosts)` — gating never needs the frontier's host set, because a host
-    // with no row on the broadcast side is simply not disallowed — so robots
-    // work on the schedule path is O(|cache| + |source|), no frontier scan.
-    // The cache COMMIT (which does scan the frontier once to record negative
-    // verdicts for new hosts) gates nothing and runs in the concurrent stage
-    // block, hidden under the fetch/decode stage's wall clock.
-    // Gating-table host-count bound for the broadcast decision: |cache ∪
-    // (src \ cache)| ≤ cacheRows (known exactly from the current manifest) +
-    // srcRows (known only when the source plan PROVES an exact count, see
-    // [[exactRowCount]]; no counting job is ever run for this). Unknown ⇒
-    // Long.MaxValue ⇒ Scheduler.applyRobots stays unhinted (safe at 10^8
-    // hosts; AQE still broadcast-converts a genuinely small gate at runtime).
-    val robotsPlan: Option[(DataFrame, DataFrame, Long)] =
+    // Robots cache (north rule "robots.txt caching"): every host's verdict,
+    // "no robots.txt" included as a null disallow-list (negative caching).
+    // Each epoch fetches ONLY the hosts new in its input frontier, committed
+    // as a DELTA (the table compacts its chain). The SCHEDULE gates against
+    // `cache ∪ (source \ cached hosts)`: a host with no row on the broadcast
+    // side is not disallowed, so gating is O(|cache| + |source|) and scans no
+    // frontier; the cache COMMIT scans it once, in the concurrent stage block.
+    // The gating table's host bound for the broadcast decision is the cache's
+    // manifest rows + the source's rows when its plan PROVES a count
+    // ([[exactRowCount]], no job), else Long.MaxValue: applyRobots stays
+    // unhinted, and AQE may still broadcast a small gate at runtime. Lazy: a
+    // finished epoch run again builds nothing, and its input may be expired.
+    lazy val robotsPlan: Option[(DataFrame, DataFrame, Long)] =
       robots.map(GraftSessions.rebind(_, spark)).map { src =>
         val known = if (robotsTable.exists) Some(robotsTable.read()) else None
         val forSchedule = known.fold(src)(k =>
@@ -194,7 +195,7 @@ object CrawlEpoch {
           case (Some(_), Some(c), Some(s)) => c + s
           case _                           => Long.MaxValue
         }
-        val hosts = frontier.read()
+        val hosts = frontier.readAt(input)
           .select(GraftFunctions.urlHost(col("url")).as("host")).distinct()
         val missing = known.fold(hosts)(k =>
           hosts.join(k.select(col("host")), Seq("host"), "left_anti"))
@@ -208,14 +209,10 @@ object CrawlEpoch {
         "after its schedule stage"))
     lazy val schedRows: Long = sched.rowCount(schedSnap).get
     lazy val scheduled: DataFrame = sched.readAt(schedSnap)
-    // EMPTY-EPOCH SHORT-CIRCUITS (manifest-exact counts, never a job): a
-    // drained epoch must still advance lineage — resume markers, metrics
-    // and the next epoch all look state up by epoch — but owes no Spark
-    // jobs for stages whose inputs are provably empty. With 0 scheduled
-    // rows the fetch/decode sink is empty (manifest-only typed commit) and
-    // the seen set gains nothing (marker only); the frontier/robots stages
-    // additionally need the FRONTIER empty (a non-empty frontier with an
-    // empty schedule still sheds seen URLs / may cache new hosts).
+    // Empty-epoch short-circuits (manifest-exact, never a job): a drained
+    // epoch still advances every table's lineage, which resume, metrics and
+    // the next epoch look up by epoch. 0 scheduled rows empty the out and
+    // seen stages; the frontier and robots stages also need 0 input rows.
     lazy val emptySchedule: Boolean = schedRows == 0L
 
     // Fetch joins key on the 64-bit url hash instead of the URL string: the
@@ -352,26 +349,17 @@ object CrawlEpoch {
     implicit val ec: scala.concurrent.ExecutionContext = stageEc
     val scheduled = e.schedRows
     val outF = Future(runStage(e, e.out, "out")({ outStage(e); outCounts(e) })(outCounts(e)))
-    // Robots marker-only shortcut guard: frontierRows reads the CURRENT
-    // frontier snapshot — after a crash between the frontier-stage commit
-    // and the robots marker, resume sees the POST-epoch frontier, and if
-    // that one is empty the shortcut would silently skip the epoch's robots
-    // verdict delta (ADVICE r5). The shortcut is only justified when the
-    // observed frontier is still this epoch's INPUT, i.e. the frontier stage
-    // has not yet committed for this epoch.
-    val robotsEmptyOk = e.frontierRows == 0L && !e.frontier.stageDone(epoch, "frontier")
     Await.result(Future.sequence(Seq(
       Future(runStage(e, e.seen.table, "seen")(seenStage(e))(())),
       Future(runStage(e, e.frontier, "frontier")(frontierStage(e))(()))) ++
-      e.robotsPlan.map(_ =>
-        Future(runStage(e, e.robotsTable, "robots")(robotsStage(e, robotsEmptyOk))(())))),
+      robots.map(_ => Future(runStage(e, e.robotsTable, "robots")(robotsStage(e))(())))),
       Duration.Inf)
 
     RunningEpoch(
       epoch = epoch,
       scheduled = scheduled,
-      newFrontier = e.frontier.snapshotForLineage("epoch", epoch.toString)
-        .flatMap(e.frontier.rowCount).getOrElse(0L),
+      // the frontier stage's commit, not a later requeue delta on top of it
+      newFrontier = e.frontierCommit.flatMap(e.frontier.rowCount).getOrElse(0L),
       outDone = outF)
   }
 
@@ -387,14 +375,14 @@ object CrawlEpoch {
     // empty frontier ⇒ empty schedule: typed manifest-only commit from the
     // parent schedule's recorded schema (first epoch has no parent — the
     // general path writes the schema then)
-    if (frontierRows != 0L || sched.commitEmpty(lineage).isEmpty) {
-      val normalized = Scheduler.normalize(frontier.read())
+    if (rows != 0L || sched.commitEmpty(lineage).isEmpty) {
+      val normalized = Scheduler.normalize(frontier.readAt(input))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val sch = Scheduler.scheduleFromNormalized(normalized, seen,
           robotsPlan.map(_._2), budgetPerHost,
           robotsHosts = robotsPlan.map(_._3).getOrElse(Long.MaxValue),
-          persisted = true, frontierRows = frontierRows)
+          persisted = true, frontierRows = rows)
         sched.commit(sch, lineage)
       } finally normalized.unpersist(blocking = false)
     }
@@ -581,7 +569,7 @@ object CrawlEpoch {
     // NON-empty frontier with an empty schedule must still run the full
     // stage — its rows are all seen/disallowed and shedding the seen
     // ones is the stage's job.
-    if (emptySchedule && frontierRows == 0L &&
+    if (emptySchedule && rows == 0L &&
         frontier.commitEmpty(stageLineage("frontier")).isDefined) return
     // html is not persisted in the output snapshot; re-derive links from
     // the fetch corpus via a semi join on the scheduled set. Past the
@@ -608,7 +596,7 @@ object CrawlEpoch {
           .select(explode(col("__links")).as("url"))
     val links = links0.withColumn("priority", lit(linkPriorityDecay))
       .withColumn("retries", lit(0)) // discovered URLs start a fresh budget
-    val backlog0 = frontier.read() // URLs not scheduled this epoch stay queued
+    val backlog0 = frontier.readAt(input) // URLs not scheduled this epoch stay queued
     val backlog = // legacy pre-retries frontiers read as retries = 0; a
       // MIXED delta chain (legacy parent dirs + new deltas) reads legacy
       // rows as NULL, which must also mean 0 — an unguarded null would
@@ -639,9 +627,9 @@ object CrawlEpoch {
     frontier.commit(next, stageLineage("frontier"))
   }
 
-  // --- robots cache: new hosts' verdicts; an empty frontier has none --------
-  private def robotsStage(e: EpochStep, emptyOk: Boolean): Unit =
-    if (!(emptyOk && e.robotsTable.exists))
+  // --- robots cache: new hosts' verdicts; an empty input frontier has none ---
+  private def robotsStage(e: EpochStep): Unit =
+    if (!(e.rows == 0L && e.robotsTable.exists))
       e.robotsPlan.foreach { case (fetched, _, _) =>
         e.robotsTable.commitDelta(fetched, Map("epoch" -> e.epoch.toString))
       }

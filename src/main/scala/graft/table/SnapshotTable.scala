@@ -79,6 +79,9 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   /** Rows snapshot `id` itself added (all of them for a full commit). */
   def deltaRows(id: Long): Option[Long] = manifest(id).map(_.get("delta_rows").asLong)
 
+  /** The snapshot `id` was committed on top of (None for a table's first). */
+  def parentOf(id: Long): Option[Long] = manifest(id).map(_.get("parent_id").asLong).filter(_ != 0L)
+
   /** The lineage recorded for snapshot `id` (empty when it has none or the
     * manifest is gone). */
   def lineage(id: Long): Map[String, String] =

@@ -516,7 +516,8 @@ class CrawlEpochSpec extends SparkSpecBase {
         .select(col("url"), col("priority"), col("retries"))
         .collect().map(_.toString).sorted.toSeq,
       new graft.frontier.SeenSet(s"$root/seen", spark)
-        .keys().collect().map(_.getLong(0)).sorted.toSeq)
+        .keys().collect().map(_.getLong(0)).sorted.toSeq,
+      new SnapshotTable(s"$root/robots", spark).read().collect().map(_.toString).sorted.toSeq)
     val clean = Files.createTempDirectory("crawlPubClean").toString
     CrawlEpoch.seed(clean, spark, seeds)
     crawl(clean, 1)
@@ -563,6 +564,24 @@ class CrawlEpochSpec extends SparkSpecBase {
           s"$label: the redone stage must publish past the unreferenced manifest")
       }
     }
+  }
+
+  test("finished epochs run again after their requeues report the same metrics") {
+    val (pages, images, _, robots) = corpus()
+    // seeds past the corpus: their 404s give the requeues rows to append
+    val seeds = SyntheticCorpus.seedUrls(spark, 300, pageCount = 600)
+    val root = Files.createTempDirectory("crawlRerun").toString
+    CrawlEpoch.seed(root, spark, seeds)
+    def crawl(e: Long) =
+      CrawlEpoch.run(root, spark, pages, images, Some(robots), budgetPerHost = 5, epoch = e)
+    val first = (1L to 2L).map { e =>
+      val m = crawl(e)
+      assert(CrawlEpoch.requeueFailures(root, spark, epoch = e) > 0, s"epoch $e requeued nothing")
+      m
+    }
+    // as a crawl restarted on its state root runs them: epoch 1 now reads a
+    // frontier two epochs and two requeues past its own
+    assert((1L to 2L).map(crawl) === first)
   }
 
   test("a crawl adds no listener to the SparkContext: 10 epochs, each with its requeue") {
