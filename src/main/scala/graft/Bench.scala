@@ -294,11 +294,10 @@ object Bench {
     // over the SAME corpus frames load and JIT-compile the engine's and
     // Spark's own code on both epoch shapes (epoch ≥2 adds the non-empty
     // seen-set paths), so the timed epochs measure engine throughput instead
-    // of JVM start-up. They run interpreted (4,000 seeds), so they
-    // compile none of the classes of timed steps over 1M frontier rows
-    // (SPARK_GRAFT_CRAWL_N over 500k: seeds are 2× pages), which run
-    // compiled; the codegen cache (1000 entries, see withCodegenCache) then
-    // keeps those for the next timed epoch instead of evicting them.
+    // of JVM start-up. They run interpreted (4,000 seeds) and so compile no
+    // class of a timed step over 1M frontier rows (SPARK_GRAFT_CRAWL_N over
+    // 500k: seeds are 2× pages), which runs compiled; the 1000-entry codegen
+    // cache (withCodegenCache) keeps those classes for the next timed epoch.
     val warmupRan = !sys.env.get("SPARK_GRAFT_WARMUP").contains("0")
     val wWarmup0 = winSample()
     val warmupJson =

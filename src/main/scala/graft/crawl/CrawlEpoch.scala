@@ -172,18 +172,26 @@ object CrawlEpoch {
         s.frontier.rowCount(s.input).getOrElse(Long.MaxValue)) {
     val stepImages: DataFrame = GraftSessions.rebind(images, spark)
 
-    // Robots cache (north rule "robots.txt caching"): every host's verdict,
-    // "no robots.txt" included as a null disallow-list (negative caching).
-    // Each epoch fetches ONLY the hosts new in its input frontier, committed
-    // as a DELTA (the table compacts its chain). The SCHEDULE gates against
-    // `cache ∪ (source \ cached hosts)`: a host with no row on the broadcast
-    // side is not disallowed, so gating is O(|cache| + |source|) and scans no
-    // frontier; the cache COMMIT scans it once, in the concurrent stage block.
-    // The gating table's host bound for the broadcast decision is the cache's
-    // manifest rows + the source's rows when its plan PROVES a count
-    // ([[exactRowCount]], no job), else Long.MaxValue: applyRobots stays
-    // unhinted, and AQE may still broadcast a small gate at runtime. Lazy: a
-    // finished epoch run again builds nothing, and its input may be expired.
+    // Robots cache (north rule "robots.txt caching"). The robots source
+    // models the live web: fetching is per-host work, so the cache stores
+    // every host's verdict (including "no robots.txt", as a null
+    // disallow-list — negative caching) and each epoch fetches ONLY the
+    // hosts newly appearing in its input frontier, committed as a DELTA
+    // snapshot (the table compacts its chain, so the cache's dirs stay
+    // bounded). Cost discipline: the SCHEDULE gates against `cache ∪ (source
+    // \ cached hosts)` — gating never needs the frontier's host set, because
+    // a host with no row on the broadcast side is simply not disallowed — so
+    // robots work on the schedule path is O(|cache| + |source|), no frontier
+    // scan. The cache COMMIT (which does scan the frontier once to record
+    // negative verdicts for new hosts) gates nothing and runs in the
+    // concurrent stage block, hidden under the fetch/decode stage's wall clock.
+    // Gating-table host-count bound for the broadcast decision: |cache ∪
+    // (src \ cache)| ≤ cacheRows (known exactly from the current manifest) +
+    // srcRows (known only when the source plan PROVES an exact count, see
+    // [[exactRowCount]]; no counting job is ever run for this). Unknown ⇒
+    // Long.MaxValue ⇒ Scheduler.applyRobots stays unhinted (safe at 10^8
+    // hosts; AQE still broadcast-converts a genuinely small gate at runtime).
+    // Lazy: a finished epoch run again builds none of it.
     lazy val robotsPlan: Option[(DataFrame, DataFrame, Long)] =
       robots.map(GraftSessions.rebind(_, spark)).map { src =>
         val known = if (robotsTable.exists) Some(robotsTable.read()) else None
@@ -209,10 +217,14 @@ object CrawlEpoch {
         "after its schedule stage"))
     lazy val schedRows: Long = sched.rowCount(schedSnap).get
     lazy val scheduled: DataFrame = sched.readAt(schedSnap)
-    // Empty-epoch short-circuits (manifest-exact, never a job): a drained
-    // epoch still advances every table's lineage, which resume, metrics and
-    // the next epoch look up by epoch. 0 scheduled rows empty the out and
-    // seen stages; the frontier and robots stages also need 0 input rows.
+    // EMPTY-EPOCH SHORT-CIRCUITS (manifest-exact counts, never a job): a
+    // drained epoch must still advance lineage — resume markers, metrics
+    // and the next epoch all look state up by epoch — but owes no Spark
+    // jobs for stages whose inputs are provably empty. With 0 scheduled
+    // rows the fetch/decode sink is empty (manifest-only typed commit) and
+    // the seen set gains nothing (marker only); the frontier/robots stages
+    // additionally need the INPUT frontier empty (a non-empty frontier with
+    // an empty schedule still sheds seen URLs / may cache new hosts).
     lazy val emptySchedule: Boolean = schedRows == 0L
 
     // Fetch joins key on the 64-bit url hash instead of the URL string: the
@@ -347,7 +359,6 @@ object CrawlEpoch {
     // robots) are awaited here — epoch N+1 needs them — while the out SINK
     // stage is handed back as a future.
     implicit val ec: scala.concurrent.ExecutionContext = stageEc
-    val scheduled = e.schedRows
     val outF = Future(runStage(e, e.out, "out")({ outStage(e); outCounts(e) })(outCounts(e)))
     Await.result(Future.sequence(Seq(
       Future(runStage(e, e.seen.table, "seen")(seenStage(e))(())),
@@ -357,7 +368,7 @@ object CrawlEpoch {
 
     RunningEpoch(
       epoch = epoch,
-      scheduled = scheduled,
+      scheduled = e.schedRows,
       // the frontier stage's commit, not a later requeue delta on top of it
       newFrontier = e.frontierCommit.flatMap(e.frontier.rowCount).getOrElse(0L),
       outDone = outF)
@@ -629,10 +640,8 @@ object CrawlEpoch {
 
   // --- robots cache: new hosts' verdicts; an empty input frontier has none ---
   private def robotsStage(e: EpochStep): Unit =
-    if (!(e.rows == 0L && e.robotsTable.exists))
-      e.robotsPlan.foreach { case (fetched, _, _) =>
-        e.robotsTable.commitDelta(fetched, Map("epoch" -> e.epoch.toString))
-      }
+    if (e.rows != 0L || !e.robotsTable.exists)
+      e.robotsPlan.foreach(p => e.robotsTable.commitDelta(p._1, Map("epoch" -> e.epoch.toString)))
 
   /** Expire old crawl-STATE snapshots (storage maintenance between epochs):
     * frontier, schedule, seen set (+ tombstones) and robots cache keep only

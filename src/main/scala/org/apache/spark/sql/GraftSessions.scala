@@ -39,26 +39,18 @@ object GraftSessions {
   /** A step session of `caller`, after registering the graft functions on
     * `caller` (so they resolve there after the step too): a clone whose
     * SQLConf is a copy of `caller`'s as of now, and whose tasks run in the
-    * executors' shared session state. An isolated clone would get an
-    * executor class loader of its own, and Spark keys its codegen cache by
-    * class loader: every step would recompile the executor-side classes
-    * (cached-batch readers, row joiners, whole-stage code) that the previous
-    * step generated. A clone's artifact manager reads isolation from the
-    * clone's conf when it is built, which `cloneSession` does right after
-    * copying the conf; so the clone is made the way `cloneSession` makes it,
-    * by the session's private constructor, with isolation set off in
-    * between. Cloning once copies the caller's query-execution listeners
-    * once: each copy adds an `ExecutionListenerBus` to the shared queue. */
+    * executors' shared session state. A clone decides its artifact
+    * isolation while it is cloned, from the conf it copies, so the clone is
+    * taken from an intermediate clone with isolation off. An isolated clone
+    * would get an executor class loader of its own, and Spark keys its
+    * codegen cache by class loader: every step would recompile the
+    * executor-side classes (cached-batch readers, row joiners, whole-stage
+    * code) that the previous step generated. */
   def cloneOf(caller: SparkSession): SparkSession = {
     GraftFunctions.register(caller)
-    val c = caller.asInstanceOf[classic.SparkSession]
-    val step = classOf[classic.SparkSession].getConstructor(classOf[org.apache.spark.SparkContext],
-      classOf[Option[_]], classOf[Option[_]], classOf[SparkSessionExtensions],
-      classOf[Map[_, _]], classOf[Map[_, _]]).newInstance(c.sparkContext, Some(c.sharedState),
-      Some(c.sessionState), c.extensions, Map.empty, c.managedJobTags.get.toMap)
-    step.sessionState.conf.setConf(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED, false)
-    step.sessionState.artifactManager
-    step
+    val unisolated = caller.asInstanceOf[classic.SparkSession].cloneSession()
+    unisolated.sessionState.conf.setConf(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED, false)
+    unisolated.cloneSession()
   }
 
   /** Applies `settings` to `step`, a [[cloneOf]] session, except each key

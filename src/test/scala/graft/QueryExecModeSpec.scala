@@ -82,25 +82,4 @@ class QueryExecModeSpec extends SparkSpecBase {
     }
     assert(executionListenerBuses() <= before)
   }
-
-  test("a caller with a listener: each query call adds at most one listener bus") {
-    // the step session copies the caller's listener, which brings one bus;
-    // an intermediate clone would bring a second
-    val caller = spark.newSession()
-    caller.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = ()
-      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    })
-    val before = executionListenerBuses()
-    val n = 6
-    for (_ <- 0 until n) SparkEntry.queries("q1_agg")(caller, Sf).collect()
-    assert(executionListenerBuses() - before <= n)
-  }
-
-  test("a step session is not artifact-isolated: it shares the executors' class loader") {
-    val step = GraftSessions.cloneOf(spark.newSession())
-    val am = step.sessionState.artifactManager
-    // `state` is the session's own JobArtifactState, null when not isolated
-    assert(am.getClass.getMethod("state").invoke(am) === null)
-  }
 }
