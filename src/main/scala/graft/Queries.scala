@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,14 +15,21 @@ import org.apache.spark.sql.functions._
   */
 object Queries {
 
-  def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** Table `name` of `dir`. A single-file table plans with no Spark job: its
+    * schema comes from one driver-side footer read ([[GraftParquet]]), where
+    * `s.read.parquet` would infer the same schema inside a job. A directory
+    * is left to Spark's own inference. */
+  def t(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    GraftParquet.fileSchema(s, path).fold(s.read.parquet(path))(s.read.schema(_).parquet(path))
+  }
 
   /** See [[graft.core.SmallScan.spread]]: parallelism floor for the sf
     * tables, which are single-file single-row-group parquet (ONE scan
     * partition) — without it every compute-heavy narrow chain runs on one
-    * core. No-op on any scan already at defaultParallelism partitions. */
-  def spread(df: DataFrame): DataFrame = graft.core.SmallScan.spread(df)
+    * core. No-op on any scan already at defaultParallelism partitions.
+    * Pass the query's final order key as `by` when it is a column of `df`. */
+  def spread(df: DataFrame, by: Column*): DataFrame = graft.core.SmallScan.spread(df, by: _*)
 
   /** Exact integer-cents of a double column. */
   def cents(c: Column): Column = round(c * 100).cast("bigint")
@@ -123,11 +131,14 @@ object Queries {
     graft.functions.GraftFunctions.register(s)
     import graft.functions.GraftFunctions._
     // spread BEFORE synthesizing html: the extract kernel parses every page
-    val docs = spread(t(s, dir, "documents").select(col("doc_id")))
+    val docs = spread(t(s, dir, "documents").select(col("doc_id")), col("doc_id"))
     val withHtml = docs.select(col("doc_id"), synthHtml(col("doc_id")).as("html"))
     // The extract expression itself applies the cheap creativecommons.org
-    // gate before parsing (SURVEY §4 R1/R2 defense in depth).
-    val extracted = withHtml.withColumn("x", extractCcLicenses(col("html")))
+    // gate before parsing (SURVEY §4 R1/R2 defense in depth). The barrier
+    // keeps a caller's filter on the license columns (q_license_filter_agg)
+    // above this project: pushed into the scan's data filters, it ran the
+    // extract kernel a second time, below the spread, on one core.
+    val extracted = withHtml.withColumn("x", constraintBarrier(extractCcLicenses(col("html"))))
     val metaCols = licenseMetadataColumns(col("x")).patch(8, Nil, 1) // sans potential_licenses
     extracted.select(col("doc_id") +: metaCols: _*)
       .orderBy(col("doc_id"))
@@ -182,7 +193,7 @@ object Queries {
       lit("\"></head><body><p>Shared body sentence.</p>" +
         "<div id=\"page-footer\"><a href=\""), u2,
       lit("\">License</a></div></body></html>"))
-    val annotated = spread(t(s, dir, "documents").select(col("doc_id")))
+    val annotated = spread(t(s, dir, "documents").select(col("doc_id")), col("doc_id"))
       .select(col("doc_id"), extractCcLicenses(html).as("x"))
     val metaCols = licenseMetadataColumns(col("x"))
     def pl(field: String, as: String): Column =

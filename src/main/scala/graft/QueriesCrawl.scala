@@ -212,7 +212,7 @@ object CrawlQueries {
     val fmt = element_at(array(lit("png"), lit("bmp"), lit("jpeg")),
       (col("doc_id") % 3 + 1).cast("int"))
     val d = Queries.spread(t(s, dir, "documents").filter(col("doc_id") < 200)
-      .select(col("doc_id"), w.as("w"), h.as("h"), fmt.as("fmt")))
+      .select(col("doc_id"), w.as("w"), h.as("h"), fmt.as("fmt")), col("doc_id"))
       .withColumn("bytes", GraftFunctions.genImage(col("doc_id"), col("w"), col("h"), col("fmt")))
     val dims = GraftFunctions.decodeImageDims(col("bytes"))
     d.select(col("doc_id"), col("fmt"),

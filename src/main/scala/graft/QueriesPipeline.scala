@@ -19,11 +19,14 @@ object PipelineQueries {
     val url = element_at(array(ccUrls.map(lit): _*), (col("doc_id") % 12 + 1).cast("int"))
     // spread the unsplittable scan BEFORE the 11-stage parse-heavy chain
     // (Queries.spread): the whole annotate pipeline is narrow and would
-    // otherwise run on the single scan partition
+    // otherwise run on the single scan partition. Spread by the final order
+    // key `id`, so the ORDER BY needs no exchange that re-runs the chain.
     val fetched = Queries.spread(
-      t(s, dir, "documents").select(col("doc_id"), col("text")))
+      t(s, dir, "documents").select(
+        concat(lit("doc-"), col("doc_id")).as("id"), col("doc_id"), col("text")),
+      col("id"))
       .select(
-        concat(lit("doc-"), col("doc_id")).as("id"),
+        col("id"),
         lit("CC-MAIN-2024-10").as("dump"),
         concat(lit("http://host"), col("doc_id") % 20, lit(".example/p/"), col("doc_id")).as("url"),
         lit("2024-03-01").as("date"),

@@ -245,8 +245,10 @@ object TextQueries {
     // arithmetic, the sqrt factors are just computed once per row.
     val e = base.unionAll(seeded)
     // spread the STREAM side only (the build side is broadcast as-is): the
-    // n²/2 pair scoring otherwise runs on the scan's single partition
-    val a = Queries.spread(e).select(col("vec_id").as("a_id"), col("v").as("av"),
+    // n²/2 pair scoring otherwise runs on the scan's single partition. By
+    // vec_id: the broadcast join keeps the stream side's range partitioning,
+    // which satisfies the final (a_id, b_id) order with no second exchange.
+    val a = Queries.spread(e, col("vec_id")).select(col("vec_id").as("a_id"), col("v").as("av"),
       Ann.norm(col("v")).as("a_norm"))
     val b = e.select(col("vec_id").as("b_id"), col("v").as("bv"),
       Ann.norm(col("v")).as("b_norm"))

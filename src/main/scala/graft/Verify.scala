@@ -3,7 +3,7 @@ import org.apache.spark.sql.{GraftSessions, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json for a DuckDB compare and exec_modes.json, each query's
-  * execution mode and scanned bytes. */
+  * execution mode, scanned bytes and Spark jobs. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -28,18 +28,32 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // per query: the execution mode its step session ran and the input
-    // bytes that picked it (GraftSessions.query)
-    val modes = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    // each query builds and writes under a job group of its name
+    val sc = spark.sparkContext
+    val ran = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      sc.setJobGroup(name, name)
       try {
         val df = fn(spark, sfDir)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        Some(s"${q(name)}: {\"mode\": ${q(GraftSessions.mode(df.sparkSession))}, " +
-          s"\"scanned_bytes\": ${GraftSessions.scannedBytes(df)}}")
+        Some(name -> df)
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         None
-      }
+      } finally sc.clearJobGroup()
+    }
+    // The status store is fed by the listener bus, in order: once a fence
+    // job shows there, so has every job of every query.
+    sc.setJobGroup("verify-fence", "verify-fence")
+    try spark.range(1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup("verify-fence").isEmpty &&
+      System.nanoTime() < deadline) Thread.sleep(10)
+    // per query: the execution mode its step session ran, the input bytes
+    // that picked it (GraftSessions.query) and the Spark jobs it started
+    val modes = ran.map { case (name, df) =>
+      s"${q(name)}: {\"mode\": ${q(GraftSessions.mode(df.sparkSession))}, " +
+        s"\"scanned_bytes\": ${GraftSessions.scannedBytes(df)}, " +
+        s"\"jobs\": ${sc.statusTracker.getJobIdsForGroup(name).length}}"
     }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

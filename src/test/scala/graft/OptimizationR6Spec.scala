@@ -104,6 +104,15 @@ class OptimizationR6Spec extends SparkSpecBase {
     // content unchanged (only placement differs)
     assert(spreadDf.orderBy("id").as[(Long, String)].collect().toSeq ===
       tiny.orderBy("id").as[(Long, String)].collect().toSeq)
+    // keyed by the final order key: range-partitioned, same rows, and the
+    // ORDER BY on that key plans no exchange of its own
+    val keyed = graft.core.SmallScan.spread(tiny, col("id"))
+    assert(keyed.rdd.getNumPartitions >= p)
+    assert(keyed.orderBy("id").as[(Long, String)].collect().toSeq ===
+      tiny.orderBy("id").as[(Long, String)].collect().toSeq)
+    val plan = keyed.orderBy("id").queryExecution.executedPlan.toString // not yet run
+    assert(plan.contains("rangepartitioning"), plan)
+    assert("Exchange ".r.findAllMatchIn(plan).size === 1, plan)
   }
 
   test("lang_decision kernel: threshold strictness, fixed-order ties, empty text") {

@@ -1,15 +1,20 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, GraftSessions}
-import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, RoundRobinPartitioning}
+import org.apache.spark.sql.execution.{FileSourceScanExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** Execution mode of the query surface: each SparkEntry.queries entry runs
   * in its own step session, interpreted when its input is small, with rows
-  * identical to compiled runs and the caller's session left as it was. */
-class QueryExecModeSpec extends SparkSpecBase {
+  * identical to compiled runs and the caller's session left as it was.
+  * Plan shape: a table read starts no Spark job, and a query spread by its
+  * final order key runs its heavy chain once, under one range exchange. */
+class QueryExecModeSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
 
   private val Sf = "/root/testdata/sf0.001" // the sf0.001 tables of TESTDATA.md
   private val WholeStage = "spark.sql.codegen.wholeStage"
@@ -81,5 +86,37 @@ class QueryExecModeSpec extends SparkSpecBase {
       assert(df.queryExecution.observedMetrics.nonEmpty, "the query observes its drops")
     }
     assert(executionListenerBuses() <= before)
+  }
+
+  test("a table read has Spark's inferred schema and starts no job") {
+    val tables = Files.list(Paths.get(Sf)).toArray.map(_.toString).toSeq
+      .map(p => Paths.get(p).getFileName.toString.stripSuffix(".parquet")).sorted
+    assert(tables.size === 10)
+    for (name <- tables) {
+      val inferred = spark.read.parquet(s"$Sf/$name.parquet").schema
+      val (df, jobs) = jobsDuring(Queries.t(spark, Sf, name))
+      assert(df.schema === inferred, name)
+      assert(df.schema.fields.map(_.nullable).toSeq === inferred.fields.map(_.nullable).toSeq, name)
+      assert(df.schema.fields.map(_.metadata).toSeq === inferred.fields.map(_.metadata).toSeq, name)
+      assert(jobs === 0, s"$name: reading the table started $jobs job(s)")
+    }
+  }
+
+  test("a query spread by its final order key plans one range exchange and no round-robin") {
+    for (name <- Seq("q_c5_pipeline", "q_license_extract", "q_license_struct",
+        "q_image_roundtrip", "q_dedup_embedding")) {
+      val plan = SparkEntry.queries(name)(spark, Sf).queryExecution.executedPlan
+      val parts = collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning }
+      assert(parts.count(_.isInstanceOf[RangePartitioning]) === 1, s"$name: $parts")
+      assert(!parts.exists(_.isInstanceOf[RoundRobinPartitioning]), s"$name: $parts")
+    }
+  }
+
+  test("q_license_filter_agg runs the extract kernel above the spread, not in the scan") {
+    val df = SparkEntry.queries("q_license_filter_agg")(spark, Sf)
+    val scans = collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    assert(scans.nonEmpty)
+    for (s <- scans)
+      assert(!s.dataFilters.exists(_.toString.contains("extract_cc_licenses")), s.dataFilters)
   }
 }

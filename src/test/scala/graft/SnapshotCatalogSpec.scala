@@ -19,30 +19,6 @@ import scala.jdk.CollectionConverters._
   * entries carried sizes still reads and resumes. */
 class SnapshotCatalogSpec extends SparkSpecBase {
 
-  /** Spark jobs started by `f` on this thread. A fence job after `f` is
-    * awaited on the listener, so every job of `f` has been delivered when
-    * the count is read (the listener bus is asynchronous). */
-  private def jobsDuring[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(js.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("catalog-under-test", "")
-      val a = try f finally sc.clearJobGroup()
-      sc.setJobGroup("catalog-fence", "")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains("catalog-fence") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains("catalog-fence"), "fence job never reached the listener")
-      (a, groups.asScala.count(_ == "catalog-under-test"))
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("commitDelta bounds every chain at 64 dirs: the commit onto a full chain compacts it") {
     val t = new SnapshotTable(Files.createTempDirectory("chain70").toString, spark)
     def urls(df: DataFrame): Seq[Long] = df.orderBy("url_hash").collect().map(_.getLong(0)).toSeq

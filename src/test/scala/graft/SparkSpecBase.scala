@@ -22,6 +22,30 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
       .asScala.count(_.getClass.getSimpleName == "ExecutionListenerBus")
   }
 
+  /** Spark jobs started by `f` on this thread. A fence job after `f` is
+    * awaited on the listener, so every job of `f` has been delivered when
+    * the count is read (the listener bus is asynchronous). */
+  protected def jobsDuring[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(js.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("jobs-under-test", "")
+      val a = try f finally sc.clearJobGroup()
+      sc.setJobGroup("jobs-fence", "")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("jobs-fence") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains("jobs-fence"), "fence job never reached the listener")
+      (a, groups.asScala.count(_ == "jobs-under-test"))
+    } finally sc.removeSparkListener(listener)
+  }
+
   override protected def afterAll(): Unit = super.afterAll()
 }
 
