@@ -1,5 +1,7 @@
 package graft
 
+import graft.core.SmallScan.sortSmall
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.expressions.Window
@@ -39,17 +41,18 @@ object Queries {
   // -------------------------------------------------------------------------
 
   /** A2/A4-style hash aggregate with map-side partial aggregation; analog of
-    * the reference's Counter-over-batches (`find_top_domains.py:76-82`). */
+    * the reference's Counter-over-batches (`find_top_domains.py:76-82`).
+    * One row per (return flag, line status) pair: at most 6 by TPC-H's
+    * domains, so the result sorts in one partition. */
   def q1Agg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    sortSmall(t(s, dir, "lineitem")
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
         sum(col("l_quantity")).cast("bigint").as("sum_qty"),
         sum(cents(col("l_extendedprice"))).as("sum_price_cents"),
         count(lit(1)).as("n_rows"),
         countDistinct(col("l_orderkey")).as("n_orders")
-      )
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
+      ), col("l_returnflag"), col("l_linestatus"))
 
   val q1AggSql: String =
     """SELECT l_returnflag, l_linestatus,
@@ -127,11 +130,16 @@ object Queries {
        |FROM documents""".stripMargin
   }
 
-  def qLicenseExtract(s: SparkSession, dir: String): DataFrame = {
+  def qLicenseExtract(s: SparkSession, dir: String): DataFrame =
+    licenseAnnotated(s, dir, col("doc_id")).orderBy(col("doc_id"))
+
+  /** The annotated documents of [[qLicenseExtract]], unsorted, spread by
+    * `spreadBy`: the caller's final order key, or none. */
+  private def licenseAnnotated(s: SparkSession, dir: String, spreadBy: Column*): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     import graft.functions.GraftFunctions._
     // spread BEFORE synthesizing html: the extract kernel parses every page
-    val docs = spread(t(s, dir, "documents").select(col("doc_id")), col("doc_id"))
+    val docs = spread(t(s, dir, "documents").select(col("doc_id")), spreadBy: _*)
     val withHtml = docs.select(col("doc_id"), synthHtml(col("doc_id")).as("html"))
     // The extract expression itself applies the cheap creativecommons.org
     // gate before parsing (SURVEY §4 R1/R2 defense in depth). The barrier
@@ -141,7 +149,6 @@ object Queries {
     val extracted = withHtml.withColumn("x", constraintBarrier(extractCcLicenses(col("html"))))
     val metaCols = licenseMetadataColumns(col("x")).patch(8, Nil, 1) // sans potential_licenses
     extracted.select(col("doc_id") +: metaCols: _*)
-      .orderBy(col("doc_id"))
   }
 
   val qLicenseExtractSql: String = {
@@ -260,14 +267,16 @@ object Queries {
   }
 
   /** F4 `LicenseFilter` + A2-style rollup: drop parse errors and rows without
-    * an explicit license, count kept rows per abbreviation. */
+    * an explicit license, count kept rows per abbreviation. One row per
+    * abbreviation [[synthHtml]] can produce (at most 10), so the result
+    * sorts in one partition, and the documents are spread round-robin: no
+    * range exchange, so no bound-sampling job. */
   def qLicenseFilterAgg(s: SparkSession, dir: String): DataFrame = {
-    val annotated = qLicenseExtract(s, dir)
-    annotated
+    val annotated = licenseAnnotated(s, dir)
+    sortSmall(annotated
       .filter(!col("license_parse_error") && col("license_abbr").isNotNull)
       .groupBy(col("license_abbr"))
-      .agg(count(lit(1)).as("n_docs"))
-      .orderBy(col("license_abbr"))
+      .agg(count(lit(1)).as("n_docs")), col("license_abbr"))
   }
 
   val qLicenseFilterAggSql: String =

@@ -1,5 +1,7 @@
 package graft
 
+import graft.core.SmallScan.sortSmall
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -80,15 +82,17 @@ object RelationalQueries {
       |GROUP BY l_partkey ORDER BY n DESC, l_partkey LIMIT 100""".stripMargin
 
   // --- A4: hand-rolled rollup of the reference → native ROLLUP -------------
+  // At most 3 × 5 + 3 + 1 = 19 rows by TPC-H's status and priority domains:
+  // sorted in one partition.
   def qRollup(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    sortSmall(t(s, dir, "orders")
       .rollup(col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n_orders"), sum(cents(col("o_totalprice"))).as("sum_price_cents"))
       .select(
         coalesce(col("o_orderstatus"), lit("(all)")).as("o_orderstatus"),
         coalesce(col("o_orderpriority"), lit("(all)")).as("o_orderpriority"),
-        col("n_orders"), col("sum_price_cents"))
-      .orderBy(col("o_orderstatus"), col("o_orderpriority"))
+        col("n_orders"), col("sum_price_cents")),
+      col("o_orderstatus"), col("o_orderpriority"))
   val qRollupSql: String =
     """SELECT COALESCE(o_orderstatus, '(all)') AS o_orderstatus,
       |  COALESCE(o_orderpriority, '(all)') AS o_orderpriority,
@@ -139,12 +143,14 @@ object RelationalQueries {
       |  FROM (SELECT CAST(ROUND(l_quantity*100) AS BIGINT) AS q FROM lineitem) t) u""".stripMargin
 
   // --- U1: unionByName + aggregate ------------------------------------------
+  // One row per event type (5 in the generator's domain): sorted in one
+  // partition.
   def qUnion(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "events")
     val a = e.filter(col("value") > 100.0).select(col("event_type"))
     val b = e.filter(col("user_id") % 2 === 0).select(col("event_type"))
-    a.unionByName(b).groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-      .orderBy(col("event_type"))
+    sortSmall(a.unionByName(b).groupBy(col("event_type")).agg(count(lit(1)).as("n")),
+      col("event_type"))
   }
   val qUnionSql: String =
     """SELECT event_type, COUNT(*) AS n FROM (
@@ -286,15 +292,17 @@ object RelationalQueries {
       |GROUP BY user_id ORDER BY user_id""".stripMargin
 
   // --- CUBE (grouping-sets family, beyond the reference's hand rollup) -----
+  // At most (5 + 1) × (10 + 1) = 66 rows (event types × user_id % 10, plus
+  // the subtotals): sorted in one partition.
   def qCube(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    sortSmall(t(s, dir, "events")
       .cube(col("event_type"), (col("user_id") % 10).as("user_mod"))
       .agg(count(lit(1)).as("n"))
       .select(
         coalesce(col("event_type"), lit("(all)")).as("event_type"),
         coalesce(col("user_mod"), lit(-1)).as("user_mod"),
-        col("n"))
-      .orderBy(col("event_type"), col("user_mod"))
+        col("n")),
+      col("event_type"), col("user_mod"))
   val qCubeSql: String =
     """SELECT COALESCE(event_type, '(all)') AS event_type,
       |  COALESCE(user_mod, -1) AS user_mod, COUNT(*) AS n

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.SmallScan.sortSmall
 import graft.ops.{Ann, Dedup}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -274,12 +275,14 @@ object TextQueries {
 
   // --- brute-force cosine top-k over embeddings ----------------------------
 
+  /** k = 10 neighbours for each of 3 query vectors: at most 30 rows, so
+    * the result sorts in one partition. */
   def qAnnTopk(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < 3)
-    Ann.bruteForceTopK(emb, queries, "vec_id", "embedding", "vec_id", k = 10)
-      .select(col("q_id"), col("rank"), col("nn_id"), round(col("cos"), 4).as("cos"))
-      .orderBy(col("q_id"), col("rank"))
+    sortSmall(Ann.bruteForceTopK(emb, queries, "vec_id", "embedding", "vec_id", k = 10)
+      .select(col("q_id"), col("rank"), col("nn_id"), round(col("cos"), 4).as("cos")),
+      col("q_id"), col("rank"))
   }
   val qAnnTopkSql: String =
     """WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),

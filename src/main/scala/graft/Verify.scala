@@ -1,9 +1,10 @@
 package graft
 import org.apache.spark.sql.{GraftSessions, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json for a DuckDB compare and exec_modes.json, each query's
-  * execution mode, scanned bytes and Spark jobs. */
+  * execution mode, scanned rows and bytes, and Spark jobs. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -48,11 +49,16 @@ object Verify {
     val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
     while (sc.statusTracker.getJobIdsForGroup("verify-fence").isEmpty &&
       System.nanoTime() < deadline) Thread.sleep(10)
-    // per query: the execution mode its step session ran, the input bytes
-    // that picked it (GraftSessions.query) and the Spark jobs it started
+    // per query: the execution mode its step session ran, the input rows
+    // that picked it (GraftSessions.query; null when not known), the input
+    // file bytes and the Spark jobs it started
     val modes = ran.map { case (name, df) =>
+      val bytes = df.queryExecution.analyzed.collectWithSubqueries {
+        case l: LogicalRelation => l.relation
+      }.collect { case r: HadoopFsRelation => r.sizeInBytes }.sum
       s"${q(name)}: {\"mode\": ${q(GraftSessions.mode(df.sparkSession))}, " +
-        s"\"scanned_bytes\": ${GraftSessions.scannedBytes(df)}, " +
+        s"\"scanned_rows\": ${GraftSessions.scannedRows(df).fold("null")(_.toString)}, " +
+        s"\"scanned_bytes\": $bytes, " +
         s"\"jobs\": ${sc.statusTracker.getJobIdsForGroup(name).length}}"
     }
     val json = SparkEntry.oracleSql

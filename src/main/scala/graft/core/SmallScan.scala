@@ -27,6 +27,14 @@ import org.apache.spark.sql.{Column, DataFrame}
   * which then needs no exchange of its own, and the sample job reads only
   * the narrow scan frame. A key that is not a column of the scan frame
   * (a score, a pair id built by a join) keeps the round-robin.
+  *
+  * [[sortSmall]] is the other end: a result that the query's own semantics
+  * bound (groups of a fixed flag or license domain, k neighbours of a fixed
+  * query set) is sorted in one partition. A single partition satisfies the
+  * global sort, so Spark plans neither a range exchange nor the
+  * `RangePartitioner` job that samples its bounds; the stages below the
+  * last exchange keep their parallelism. A result that can grow with the
+  * input (dedup pairs, per-document rows) keeps `orderBy`.
   */
 object SmallScan {
   def spread(df: DataFrame, by: Column*): DataFrame = {
@@ -43,4 +51,7 @@ object SmallScan {
     else if (by.isEmpty) df.repartition(p)
     else df.repartitionByRange(p, by: _*)
   }
+
+  /** `df` sorted by `keys` in one partition; only for a bounded result. */
+  def sortSmall(df: DataFrame, keys: Column*): DataFrame = df.coalesce(1).orderBy(keys: _*)
 }

@@ -23,9 +23,19 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  private def jaccard(a: Column, b: Column): Column =
-    when(size(array_union(a, b)) > 0,
-      size(array_intersect(a, b)).cast("double") / size(array_union(a, b)))
+  /** `df` with `jaccard`, the exact Jaccard similarity of its shingle sets
+    * `a_toks` and `b_toks`; null when both are empty. The sets hold distinct
+    * elements, so the intersection is built once and |A∪B| = |A| + |B| −
+    * |A∩B|. Both columns sit behind constraint_barrier, so a filter on
+    * `jaccard` stays above them and shares their one evaluation with the
+    * projection instead of inlining the set operations. */
+  private def withJaccard(df: DataFrame): DataFrame = {
+    val inter = df.withColumn("n_inter", GraftFunctions.constraintBarrier(
+      size(array_intersect(col("a_toks"), col("b_toks")))))
+    val union = size(col("a_toks")) + size(col("b_toks")) - col("n_inter")
+    inter.withColumn("jaccard", GraftFunctions.constraintBarrier(
+      when(union > 0, col("n_inter").cast("double") / union)))
+  }
 
   /** Distinct word n-gram shingles (whole text as one shingle when shorter
     * than n tokens) — a native codegen'd kernel
@@ -120,14 +130,14 @@ object Dedup {
       // constraint_barrier (the non-deterministic identity, see
       // BloomProbe): without it, predicate pushdown inlines the threshold
       // filter into the JOIN CONDITION, substituting the shingle kernel
-      // 6x per matched row (jaccard references each side 3x). Barriered,
+      // once per reference jaccard makes to each side. Barriered,
       // the filter stays above this project and each shingle set is built
       // exactly once per candidate row.
       .withColumn("a_toks", GraftFunctions.constraintBarrier(
         shingleSet(col("a_text"), shingleSize)))
       .withColumn("b_toks", GraftFunctions.constraintBarrier(
         shingleSet(col("b_text"), shingleSize)))
-      .withColumn("jaccard", jaccard(col("a_toks"), col("b_toks")))
+      .transform(withJaccard)
       .filter(col("jaccard") >= threshold)
       .select(col("a_id"), col("b_id"), round(col("jaccard"), 6).as("jaccard"))
   }
@@ -251,7 +261,8 @@ object Dedup {
           shingleSet(col("a_text"), shingleSize)))
         .withColumn("b_toks", GraftFunctions.constraintBarrier(
           shingleSet(col("b_text"), shingleSize)))
-        .filter(jaccard(col("a_toks"), col("b_toks")) >= jaccardThreshold)
+        .transform(withJaccard)
+        .filter(col("jaccard") >= jaccardThreshold)
         .select(col("a_id"), col("b_id"), col("hamming"))
     }
   }

@@ -3,6 +3,7 @@ package org.apache.spark.sql
 import graft.functions.GraftFunctions
 
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.{GraftParquet, ParquetFileFormat}
 import org.apache.spark.sql.internal.SQLConf
 
 /** Step sessions: a crawl epoch, a requeue and each `graft.SparkEntry`
@@ -24,17 +25,21 @@ object GraftSessions {
     "spark.sql.codegen.wholeStage" -> "false",
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
-  /** A query whose file relations hold at most this many bytes runs
-    * [[Interpreted]]: the smallest power of two over the C5 set's largest
-    * input at sf0.01 (`lineitem`, 1,042,463 B, read by `q1_agg`). Compiled,
-    * the five C5 queries generate ~110 classes, more than Spark's codegen
-    * cache holds by default (100), so every warm pass recompiled 31–40 of
-    * them; interpreted, `c5_queries` `op_p50_s` fell from 3.68 to 2.66 s.
-    * With the cache at 1000 entries and warm, interpretation did not pay in
-    * 10 alternating in-JVM pairs per query: the 22 sf0.1 queries under the
-    * bound took +0.28 s in all, a 4 MiB bound +2.43 s. So the bound is as
-    * low as the C5 set allows (BASELINE.md, "Interpreted small queries"). */
-  private val InterpretedBytesMax = 1L << 20
+  /** A query whose file relations hold at most this many rows runs
+    * [[Interpreted]]. Rows, not bytes: what compiling removes is Spark's own
+    * per-row expression and aggregation work, which grows with rows times
+    * operators, while the graft kernels (HTML parse, shingles, cosine) cost
+    * the same in both modes. Bytes confuse the two: `documents` is few wide
+    * text rows (500 rows, 65 KB at sf0.01), `lineitem` many narrow ones
+    * (60,000 rows, 1.04 MB), and a 1 MiB bound on bytes kept `q1_agg`'s
+    * hash aggregation of those 60,000 rows on the interpreted path. The
+    * bound is the lowest power of two that keeps the C5 queries over
+    * `documents` and `embeddings` interpreted at sf0.01 (`q_dedup_minhash`
+    * reads `documents` 9 times: 4,500 rows); `events`, `orders` and
+    * `lineitem` run compiled from sf0.01 on (BASELINE.md, "Query gate on
+    * rows, bounded results sorted in one partition"). Not the crawl bound,
+    * which was measured on crawl steps. */
+  private val InterpretedRowsMax = 1L << 13
 
   /** A step session of `caller`, after registering the graft functions on
     * `caller` (so they resolve there after the step too): a clone whose
@@ -68,21 +73,31 @@ object GraftSessions {
     if (Interpreted.forall { case (k, v) => session.conf.get(k) == v }) "interpreted"
     else "compiled"
 
-  /** The file bytes of the file relations in `df`'s analyzed plan, once per
-    * read: known without a job or a footer read. */
-  def scannedBytes(df: DataFrame): Long =
+  /** The rows of the file relations in `df`'s analyzed plan, once per read
+    * (a table read twice counts twice), from the footers of their files on
+    * the driver: no job. Reading stops once the sum passes `stopAbove`. None
+    * when a relation is not parquet: its rows are not known without a job. */
+  def scannedRows(df: DataFrame, stopAbove: Long = Long.MaxValue): Option[Long] =
     df.queryExecution.analyzed.collectWithSubqueries { case l: LogicalRelation => l.relation }
-      .collect { case r: HadoopFsRelation => r.sizeInBytes }.sum
+      .foldLeft(Option(0L)) {
+        case (Some(n), _) if n > stopAbove => Some(n)
+        case (Some(n), r: HadoopFsRelation) if r.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          val files = r.location.listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus))
+          Some(n + GraftParquet.rowCount(df.sparkSession, files, stopAbove - n))
+        case _ => None
+      }
 
   /** `build` as a query entry: the frame is built in a [[cloneOf]] the
     * caller's session, which runs [[Interpreted]] when the frame reads at
-    * most [[InterpretedBytesMax]] bytes. Actions `build` runs itself
-    * (fixture setup, a collected parameter) run before the decision. */
+    * most [[InterpretedRowsMax]] rows, and compiled when it reads more or
+    * an unknown count. Actions `build` runs itself (fixture setup, a
+    * collected parameter) run before the decision. */
   def query(build: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
     (caller, dir) => {
       val step = cloneOf(caller)
       val df = build(step, dir)
-      if (scannedBytes(df) <= InterpretedBytesMax) settle(step, Interpreted)
+      if (scannedRows(df, InterpretedRowsMax).exists(_ <= InterpretedRowsMax))
+        settle(step, Interpreted)
       df
     }
 

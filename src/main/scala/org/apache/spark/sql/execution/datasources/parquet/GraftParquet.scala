@@ -1,13 +1,16 @@
 package org.apache.spark.sql.execution.datasources.parquet
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
+import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-/** The schema of a single parquet file, read from its footer on the driver.
-  * `spark.read.parquet(file)` infers the same schema from the same footer,
+/** Parquet facts read from footers on the driver, with no Spark job.
+  * `spark.read.parquet(file)` infers a file's schema from the same footer,
   * but always inside a Spark job (`SchemaMergeUtils.mergeSchemasInParallel`):
   * ~70 ms a read on `local[4]` against 8–11 ms here. Footer read and
   * conversion are Spark's own (`readSchema` honours the session's
@@ -25,5 +28,20 @@ object GraftParquet {
         conf, Seq(st), session.sessionState.conf.ignoreCorruptFiles)
       ParquetFileFormat.readSchema(footers, session)
     }
+  }
+
+  /** The rows of `files`, from their row groups' footer counts, read one
+    * file at a time: reading stops once the sum passes `stopAbove`, and the
+    * sum so far is returned. */
+  def rowCount(session: SparkSession, files: Seq[FileStatus], stopAbove: Long): Long = {
+    val conf = session.sessionState.newHadoopConf()
+    var n = 0L
+    val it = files.iterator
+    while (n <= stopAbove && it.hasNext) {
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(it.next(), conf), ParquetMetadataConverter.NO_FILTER)
+      n += footer.getBlocks.asScala.map(_.getRowCount).sum
+    }
+    n
   }
 }

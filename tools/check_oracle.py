@@ -3,7 +3,8 @@
 Verify's oracle_sql.json in DuckDB over the sfDir parquet tables, and compare
 against the Spark parquet output (columns sorted by name, rows as produced).
 When Verify wrote exec_modes.json, each OK line also names the execution mode
-the query ran in, the input bytes that picked it and the Spark jobs the query
+the query ran in, its input bytes, the input rows that picked the mode
+(unknown for a relation that is not parquet) and the Spark jobs the query
 started (its build and its write).
 
 Usage: check_oracle.py <sfDir> <verifyOutDir>
@@ -70,6 +71,9 @@ def main(sf_dir, out_dir):
                   + ", ".join(f"{c}:{a[c].dtype}vs{b[c].dtype}" for c in dt))
         m = modes.get(name)
         mode = f", {m['mode']}, {m['scanned_bytes']} B scanned" if m else ""
+        if m and "scanned_rows" in m:
+            rows = m["scanned_rows"]
+            mode += f", {'unknown' if rows is None else rows} rows scanned"
         if m and "jobs" in m:
             mode += f", {m['jobs']} jobs"
         print(f"OK   {name} ({len(got_n)} rows{mode})"); n_ok += 1
